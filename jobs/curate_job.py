@@ -30,14 +30,11 @@ def main() -> None:
     ap.add_argument("--min-tokens", type=int, default=5)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_curate")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from ocr_spark.session import build_session
+
+    spark = build_session(app_name="ocr_spark_curate")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.curate import curate, funnel

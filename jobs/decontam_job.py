@@ -44,13 +44,11 @@ def main() -> None:
                     help="fuzzy-rule verify threshold")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_decontam")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    from ocr_spark.session import build_session
+
+    spark = build_session(app_name="ocr_spark_decontam")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.dedup import (

@@ -39,13 +39,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_dedup")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    from ocr_spark.session import build_session
+
+    spark = build_session(app_name="ocr_spark_dedup")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.dedup import near_dedup

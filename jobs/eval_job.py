@@ -44,14 +44,11 @@ def main() -> None:
     if not args.labels and not args.battles:
         ap.error("at least one of --labels / --battles is required")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_eval")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from ocr_spark.session import build_session
+
+    spark = build_session(app_name="ocr_spark_eval")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark import evaluation

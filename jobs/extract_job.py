@@ -20,8 +20,59 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
+
+
+def linearize_tree_store(msgs, output: str):
+    """Branching message store -> flat (conv_id, turn_idx) transcripts.
+
+    Validates the closed-forest precondition FIRST (a store we don't
+    control can carry duplicate ids, self/reciprocal parent cycles, or
+    dangling parents from hard deletes — without the gate the doubling
+    join would silently drop the chains hanging off them), quarantines
+    flagged rows to ``<output>/forest_issues``, then runs pointer-doubling
+    linearization (O(log depth) hash-join rounds) and joins the payload
+    columns back on the 8-byte msg_id; the flat pipeline takes over.
+    Cycles of length >= 3 still fail loudly inside the resolver rather
+    than mislabeling. Shared-prefix duplication across sibling threads is
+    inherent to linearization; downstream dedup/novelty ops price and
+    mask it.
+
+    Returns ``(transcripts, forest_issues, messages_unreached)``."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark import rollouts
+
+    issues_dir = os.path.join(output, "forest_issues")
+    # materialized once: the count, the side-output write and the
+    # quarantine anti-join reuse it instead of each re-running the
+    # four-way validation over the full store
+    issues = rollouts.validate_forest(msgs.select("msg_id", "parent_id")).localCheckpoint()
+    forest_issues = issues.count()
+    if forest_issues:
+        issues.write.mode("overwrite").parquet(issues_dir)
+        msgs = msgs.join(issues.select("msg_id").distinct(), "msg_id", "left_anti")
+    else:
+        # a clean store leaves no side output; one left by an earlier run
+        # would read as the current quarantine state
+        shutil.rmtree(issues_dir, ignore_errors=True)
+    threads = rollouts.linearize_threads(msgs.select("msg_id", "parent_id"))
+    msgs_unreached = None
+    if forest_issues:
+        # chains hanging under quarantined rows drop out of
+        # linearization — report the loss instead of hiding it
+        msgs_unreached = msgs.count() - threads.select("msg_id").distinct().count()
+    transcripts = threads.join(msgs.drop("parent_id"), "msg_id").select(
+        F.concat(F.lit("thread"), F.col("thread_id").cast("string")).alias("conv_id"),
+        F.col("seq").cast("int").alias("turn_idx"),
+        "role",
+        "text",
+        "tool",
+        "ts",
+    )
+    return transcripts, forest_issues, msgs_unreached
 
 
 def main() -> None:
@@ -56,17 +107,10 @@ def main() -> None:
                     help="table-name prefix for --bucketed-output")
     args = ap.parse_args()
 
-    # spark-submit provides master/conf; build on whatever it gives us.
-    from pyspark.sql import SparkSession
+    # spark-submit's master and --conf win; the factory fills the rest
+    from ocr_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .getOrCreate()
-    )
+    spark = build_session(app_name="ocr_spark_extract")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.operators.aggregate import conv_text_salted
@@ -75,49 +119,10 @@ def main() -> None:
 
     t0 = time.time()
     transcripts = spark.read.parquet(args.input)
-    forest_issues = None
-    msgs_unreached = None
+    forest_issues = msgs_unreached = None
     if args.tree_store:
-        # tree -> flat threads: validate the closed-forest precondition
-        # FIRST (a store we don't control can carry duplicate ids,
-        # self/reciprocal parent cycles, or dangling parents from hard
-        # deletes — without the gate the doubling join would silently
-        # drop the chains hanging off them), quarantine flagged rows to
-        # a side output, then pointer-doubling linearization (O(log
-        # depth) hash-join rounds) and the payload columns join back on
-        # the 8-byte msg_id; the flat (conv_id, turn_idx) pipeline
-        # takes over. Cycles of length >= 3 still fail loudly inside
-        # the resolver rather than mislabeling. Shared-prefix
-        # duplication across sibling threads is inherent to
-        # linearization; downstream dedup/novelty ops price and mask it.
-        from pyspark.sql import functions as F
-
-        from ocr_spark import rollouts
-
-        msgs = transcripts
-        issues = rollouts.validate_forest(msgs.select("msg_id", "parent_id"))
-        forest_issues = issues.count()
-        if forest_issues:
-            issues.write.mode("overwrite").parquet(
-                os.path.join(args.output, "forest_issues")
-            )
-            msgs = msgs.join(issues.select("msg_id").distinct(), "msg_id", "left_anti")
-        threads = rollouts.linearize_threads(msgs.select("msg_id", "parent_id"))
-        if forest_issues:
-            # chains hanging under quarantined rows drop out of
-            # linearization — report the loss instead of hiding it
-            msgs_unreached = (
-                msgs.count() - threads.select("msg_id").distinct().count()
-            )
-        transcripts = threads.join(msgs.drop("parent_id"), "msg_id").select(
-            F.concat(F.lit("thread"), F.col("thread_id").cast("string")).alias(
-                "conv_id"
-            ),
-            F.col("seq").cast("int").alias("turn_idx"),
-            "role",
-            "text",
-            "tool",
-            "ts",
+        transcripts, forest_issues, msgs_unreached = linearize_tree_store(
+            transcripts, args.output
         )
     salted = False
     skew_detected = False
@@ -183,6 +188,11 @@ def main() -> None:
         "output": args.output,
         "bucketed_tables": bucketed_tables,
         "bucketed_join_exchanges": bucketed_join_exchanges,
+        # the SQL conf the run started with: spark-submit's --conf values
+        # plus the session factory's defaults for the keys it left unset
+        "sql_conf": {
+            k: v for k, v in spark.sparkContext.getConf().getAll() if k.startswith("spark.sql.")
+        },
     }
     print(json.dumps(summary))
     spark.stop()

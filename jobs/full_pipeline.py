@@ -316,15 +316,9 @@ def main() -> None:
     ap.add_argument("--n-shards", type=int, default=16)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from ocr_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_full_pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = build_session(app_name="ocr_spark_full_pipeline")
     spark.sparkContext.setLogLevel("WARN")
     card = run(
         spark,

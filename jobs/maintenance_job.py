@@ -38,13 +38,11 @@ def main() -> None:
     ap.add_argument("--max-age-s", type=float, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_maintenance")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    from ocr_spark.session import build_session
+
+    spark = build_session(app_name="ocr_spark_maintenance")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.pipeline import (

@@ -28,13 +28,11 @@ def main() -> None:
     ap.add_argument("--output", default=None, help="optional card.json path")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_report")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    from ocr_spark.session import build_session
+
+    spark = build_session(app_name="ocr_spark_report")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.functions import quality_score, tokens

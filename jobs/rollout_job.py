@@ -54,14 +54,11 @@ def main() -> None:
     ap.add_argument("--prompt-group-mod", type=int, default=0)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("ocr_spark_rollout")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from ocr_spark.session import build_session
+
+    spark = build_session(app_name="ocr_spark_rollout")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark import rollouts

@@ -1,7 +1,7 @@
 """ocr_spark — a PySpark-native main-content extraction engine.
 
 A from-scratch rebuild of the *data semantics* of the Aizen-Agency/OCR
-reference service (see /root/repo/SURVEY.md) as a Spark-first pipeline:
+reference service (see SURVEY.md) as a Spark-first pipeline:
 
 - input:  transcripts(conv_id, turn_idx, role, text, tool, ts)
 - output: extracted(conv_id, turn_idx, kind, extracted_text, spans,
@@ -11,8 +11,8 @@ reference service (see /root/repo/SURVEY.md) as a Spark-first pipeline:
           bytes_in, bytes_out, parse_failures)
 
 All per-turn semantics are frozen in the pure-Python ``ocr_spark.oracle``
-package (single-process, no Spark); the Spark operators import the same
-functions inside vectorized ``mapInPandas`` UDFs, so the distributed
+package (single-process, no Spark); the extraction operators call the same
+functions from one ``mapInArrow`` worker loop, so the distributed
 pipeline matches the oracle byte-for-byte by construction, and tests
 verify it stays that way under partitioning / shuffling / Arrow transport.
 """

@@ -26,6 +26,20 @@ from ocr_spark.oracle.extract import TEXT_KINDS_COUNTED_AS_TEXT
 
 _TEXT_KINDS_SQL = ", ".join(f"'{k}'" for k in TEXT_KINDS_COUNTED_AS_TEXT)
 
+# Every char str.isspace() accepts, i.e. what str.strip() strips. A turn
+# made only of these is blank to aggregate_conversation; Spark's trim()
+# strips only spaces, and Java's \s misses \x1c-\x1f, \x85 and the
+# Unicode spaces, so the blank test is a regex over this exact set (each
+# char written as \\uXXXX: the SQL literal unescapes it to \uXXXX, which
+# the regex reads as that char).
+_PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+_NOT_BLANK = (
+    "extracted_text rlike '[^" + "".join(f"\\\\u{ord(c):04x}" for c in _PY_WHITESPACE) + "]'"
+)
+
 # ordered, blank-skipping join of per-turn texts (≙ ocr_service.py:249-262).
 # The blank-skip runs as an aggregate FILTER clause, i.e. BEFORE the
 # collect_list buffer: blank turns never enter the map-side partial lists,
@@ -35,7 +49,7 @@ _TEXT_KINDS_SQL = ", ".join(f"'{k}'" for k in TEXT_KINDS_COUNTED_AS_TEXT)
 _JOIN_TURNS = (
     "array_join(transform(array_sort("
     " collect_list(struct(turn_idx, extracted_text))"
-    " FILTER (WHERE extracted_text is not null and trim(extracted_text) != '')),"
+    f" FILTER (WHERE extracted_text is not null and {_NOT_BLANK})),"
     " x -> x.extracted_text), '\\n\\n')"
 )
 

@@ -8,28 +8,31 @@ driver involvement. The per-turn semantics are imported from the frozen
 oracle (``ocr_spark.oracle``), so distributed output is byte-identical to
 the single-process spec by construction.
 
-Scale notes (100 TB design):
+Both public shapes cross the Python boundary once, through the same
+``mapInArrow`` worker loop (``_extract_batches``); they differ only in the
+key columns the loop passes through untouched:
 
-- ``extract()`` is a *narrow* transformation — zero shuffle. Input
-  partitioning comes from the source scan (``maxPartitionBytes`` bounds
-  task size); Arrow batch size bounds Python-worker memory.
-- ``extract_deduped()`` is the memoization join (A6 ≙ the reference's
-  sha256 Redis cache, ``tasks/ocr_tasks.py:45-91``): identical payloads
-  are extracted once and results fanned back with an equi-join on the
-  content hash. At web scale duplicate turns are common (boilerplate,
-  retries, forwarded content), so this trades one shuffle for running
-  the Python stage on unique payloads only.
-- ``salt_repartition()`` spreads one giant conversation (the long-agent-
-  trace skew archetype, SURVEY §2.4 P5) across many tasks by salting the
-  partition key with a turn-index bucket; the salt never reaches a sort
-  key, so final ordering is unaffected.
+- ``extract()`` passes ``conv_id, turn_idx``. It is a *narrow*
+  transformation — zero shuffle. Input partitioning comes from the source
+  scan (``maxPartitionBytes`` bounds task size); Arrow batch size bounds
+  Python-worker memory.
+- ``extract_deduped()`` passes ``dup_keys``: the memoization join (A6 ≙
+  the reference's sha256 Redis cache, ``tasks/ocr_tasks.py:45-91``).
+  Identical payloads are extracted once and the result is fanned back out
+  to every key that carried the payload. At web scale duplicate turns are
+  common (boilerplate, retries, forwarded content), so this trades one
+  shuffle for running the Python stage on unique payloads only.
+
+``salt_repartition()`` spreads one giant conversation (the long-agent-
+trace skew archetype, SURVEY §2.4 P5) across many tasks by salting the
+partition key with a turn-index bucket; the salt never reaches a sort
+key, so final ordering is unaffected.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ocr_spark.oracle.extract import extract_turn
@@ -84,51 +87,10 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-_OUT_COLUMNS = [f.name for f in EXTRACTED_SCHEMA.fields]
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # Iterator form: anything expensive to set up would init here once per
-    # python worker (≙ the reference's model-preload singleton,
-    # services/ocr_service/ocr_service.py:42-56); the oracle needs none.
-    for pdf in batches:
-        conv_ids = pdf["conv_id"].to_numpy()
-        turn_idxs = pdf["turn_idx"].to_numpy()
-        texts = pdf["text"].to_numpy()
-        tools = pdf["tool"].to_numpy()
-        out = {name: [] for name in _OUT_COLUMNS}
-        for i in range(len(pdf)):
-            text = texts[i] or ""
-            tool = tools[i] or ""
-            row = extract_turn(text, tool)
-            out["conv_id"].append(conv_ids[i])
-            out["turn_idx"].append(turn_idxs[i])
-            out["kind"].append(row["kind"])
-            out["extracted_text"].append(row["extracted_text"])
-            out["spans"].append(
-                [{"start": s, "end": e} for s, e in row["spans"]]
-            )
-            out["lines"].append(row["lines"])
-            out["blocks"].append(row["blocks"])
-            out["parse_ok"].append(row["parse_ok"])
-            out["error"].append(row["error"])
-            out["bytes_in"].append(len(text.encode()) + len(tool.encode()))
-        yield pd.DataFrame(out, columns=_OUT_COLUMNS)
-
-
-def extract_pandas(transcripts: DataFrame) -> DataFrame:
-    """mapInPandas variant (kept for reference/AB tests; ``extract`` is
-    the mapInArrow fast path, ~20-25% quicker on this workload)."""
-    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
-        _extract_batches, EXTRACTED_SCHEMA
-    )
-
-
-def extract(transcripts: DataFrame) -> DataFrame:
-    """transcripts -> extracted. Narrow (no shuffle); column-pruned input;
-    Arrow-native batches (see _extract_arrow_batches)."""
-    return extract_arrow(transcripts)
-
+# the columns the worker computes; every other output column is a key the
+# worker passes through from its input batch
+_PARSED = [f for f in EXTRACTED_SCHEMA.fields if f.name not in ("conv_id", "turn_idx")]
+_PARSED_NAMES = [f.name for f in _PARSED]
 
 _DEDUP_SCHEMA = T.StructType(
     [
@@ -144,158 +106,55 @@ _DEDUP_SCHEMA = T.StructType(
             ),
             False,
         ),
-        *[f for f in EXTRACTED_SCHEMA.fields if f.name not in ("conv_id", "turn_idx")],
+        *_PARSED,
     ]
 )
 
 
-def _extract_dedup_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in _DEDUP_SCHEMA.fields]
-    for pdf in batches:
-        texts = pdf["text"].to_numpy()
-        tools = pdf["tool"].to_numpy()
-        keys = pdf["dup_keys"].to_numpy()
-        out = {name: [] for name in cols}
-        for i in range(len(pdf)):
-            text = texts[i] or ""
-            tool = tools[i] or ""
-            row = extract_turn(text, tool)
-            out["dup_keys"].append(keys[i])
-            out["kind"].append(row["kind"])
-            out["extracted_text"].append(row["extracted_text"])
-            out["spans"].append([{"start": s, "end": e} for s, e in row["spans"]])
-            out["lines"].append(row["lines"])
-            out["blocks"].append(row["blocks"])
-            out["parse_ok"].append(row["parse_ok"])
-            out["error"].append(row["error"])
-            out["bytes_in"].append(len(text.encode()) + len(tool.encode()))
-        yield pd.DataFrame(out, columns=cols)
+def _extract_batches(batches, out_schema: T.StructType):
+    """The one per-row worker loop: ``text``/``tool`` through the frozen
+    parser, key columns (every output column before ``kind``) passed
+    through zero-copy.
 
-
-def extract_deduped(transcripts: DataFrame) -> DataFrame:
-    """A6 memoization: run the Python stage once per unique payload.
-
-    ≙ reference cache keyed by sha256(content) (`utils/encoding.py:42-54`,
-    `tasks/ocr_tasks.py:45-91`). Shape: ONE shuffle — ``groupBy(sha)``
-    collects every (conv_id, turn_idx) bearing that payload, the UDF runs
-    once per unique payload with the key list passed through the Arrow
-    batch, and an ``explode`` fans the result back out. No second
-    shuffle, no wide sort-merge join of nested results (the naive
-    dedupe-then-join plan costs ~2x the narrow extraction; this one
-    costs one aggregation of the input).
-
-    Pays off when the UDF is expensive (real OCR inference) or the
-    duplicate rate is high; for a cheap parser on mostly-unique data
-    prefer plain ``extract`` (see bench.py).
-    """
-    keyed = transcripts.select(
-        F.sha2(F.concat_ws("\x1f", F.col("text"), F.col("tool")), 256).alias("payload_sha"),
-        "conv_id",
-        "turn_idx",
-        "text",
-        "tool",
-    )
-    grouped = keyed.groupBy("payload_sha").agg(
-        F.first("text").alias("text"),
-        F.first("tool").alias("tool"),
-        F.collect_list(F.struct("conv_id", "turn_idx")).alias("dup_keys"),
-    )
-    uniq_out = grouped.select("text", "tool", "dup_keys").mapInPandas(
-        _extract_dedup_batches, _DEDUP_SCHEMA
-    )
-    rest = [f.name for f in EXTRACTED_SCHEMA.fields if f.name not in ("conv_id", "turn_idx")]
-    return uniq_out.select(F.explode("dup_keys").alias("k"), *rest).select(
-        F.col("k.conv_id").alias("conv_id"),
-        F.col("k.turn_idx").alias("turn_idx"),
-        *rest,
-    )
-
-
-def salt_repartition(transcripts: DataFrame, num_partitions: int, bucket_turns: int = 256) -> DataFrame:
-    """P5 skew salting: distribute giant conversations across tasks.
-
-    Partitions by ``(conv_id, turn_idx div bucket_turns)`` so a 10^4-turn
-    agent trace spans ~40 tasks instead of hot-spotting one, while small
-    conversations stay whole. Only the *shuffle* key is salted; ordering
-    keys downstream are untouched.
-    """
-    return transcripts.repartition(
-        num_partitions,
-        F.col("conv_id"),
-        (F.col("turn_idx") / F.lit(bucket_turns)).cast("int"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# mapInArrow fast path
-# ---------------------------------------------------------------------------
-
-def _arrow_out_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("conv_id", pa.string()),
-            pa.field("turn_idx", pa.int32()),
-            pa.field("kind", pa.string()),
-            pa.field("extracted_text", pa.string()),
-            pa.field(
-                "spans",
-                pa.list_(pa.struct([("start", pa.int32()), ("end", pa.int32())])),
-            ),
-            pa.field(
-                "lines",
-                pa.list_(
-                    pa.struct(
-                        [
-                            ("text", pa.string()),
-                            ("confidence", pa.float64()),
-                            ("bbox", pa.list_(pa.float64())),
-                        ]
-                    )
-                ),
-            ),
-            pa.field(
-                "blocks",
-                pa.list_(
-                    pa.struct(
-                        [
-                            ("type", pa.string()),
-                            ("text", pa.string()),
-                            ("bbox", pa.list_(pa.float64())),
-                        ]
-                    )
-                ),
-            ),
-            pa.field("parse_ok", pa.bool_()),
-            pa.field("error", pa.string()),
-            pa.field("bytes_in", pa.int64()),
-        ]
-    )
-
-
-def _extract_arrow_batches(batches):
-    """Arrow-native extraction: key columns pass through zero-copy, and
-    the nested output columns (spans/lines/blocks) are assembled from
-    flat primitive arrays + offset vectors (``ListArray.from_arrays`` /
+    The nested output columns (spans/lines/blocks) are assembled from flat
+    primitive arrays + offset vectors (``ListArray.from_arrays`` /
     ``StructArray.from_arrays``) instead of pyarrow's generic
-    list-of-dicts converter (~10% worker-side win, byte-identical
-    batches — equality pinned in tests)."""
+    list-of-dicts converter (~10% worker-side win), typed from the Arrow
+    form of ``out_schema``."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = _arrow_out_schema()
-    i32, f64, s, b8, i64 = pa.int32(), pa.float64(), pa.string(), pa.bool_(), pa.int64()
+    schema = to_arrow_schema(out_schema)
+    keys = schema.names[: len(schema) - len(_PARSED)]
+    types = {name: schema.field(name).type for name in _PARSED_NAMES}
+    spans_t, lines_t, blocks_t = types["spans"], types["lines"], types["blocks"]
+    line_t, block_t = lines_t.value_type, blocks_t.value_type
+    i32 = pa.int32()
+
+    # values/children given as Python lists are typed from the schema
+    def typed(values, dtype):
+        return values if isinstance(values, pa.Array) else pa.array(values, dtype)
+
+    def lists(list_type, offsets, values):
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, i32), typed(values, list_type.value_type), type=list_type
+        )
+
+    def structs(struct_type, *children):
+        return pa.StructArray.from_arrays(
+            [typed(c, f.type) for c, f in zip(children, struct_type)], fields=list(struct_type)
+        )
+
     for batch in batches:
         texts = batch.column("text").to_pylist()
         tools = batch.column("tool").to_pylist()
-        n = len(texts)
         kind, etext, ok, err, nbytes = [], [], [], [], []
         s_off, s_start, s_end = [0], [], []
         l_off, l_text, l_conf, l_boff, l_bval = [0], [], [], [0], []
         b_off, b_type, b_text, b_boff, b_bval = [0], [], [], [0], []
-        for i in range(n):
-            text = texts[i] or ""
-            tool = tools[i] or ""
+        for text, tool in zip(texts, tools):
+            text = text or ""
+            tool = tool or ""
             row = extract_turn(text, tool)
             kind.append(row["kind"])
             etext.append(row["extracted_text"])
@@ -318,276 +177,97 @@ def _extract_arrow_batches(batches):
                 b_bval.extend(bl["bbox"])
                 b_boff.append(len(b_bval))
             b_off.append(len(b_text))
-        spans_arr = pa.ListArray.from_arrays(
-            pa.array(s_off, i32),
-            pa.StructArray.from_arrays(
-                [pa.array(s_start, i32), pa.array(s_end, i32)], ["start", "end"]
+        parsed = [
+            pa.array(kind, types["kind"]),
+            pa.array(etext, types["extracted_text"]),
+            lists(spans_t, s_off, structs(spans_t.value_type, s_start, s_end)),
+            lists(
+                lines_t,
+                l_off,
+                structs(line_t, l_text, l_conf, lists(line_t.field("bbox").type, l_boff, l_bval)),
             ),
-        )
-        lines_arr = pa.ListArray.from_arrays(
-            pa.array(l_off, i32),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(l_text, s),
-                    pa.array(l_conf, f64),
-                    pa.ListArray.from_arrays(
-                        pa.array(l_boff, i32), pa.array(l_bval, f64)
-                    ),
-                ],
-                ["text", "confidence", "bbox"],
+            lists(
+                blocks_t,
+                b_off,
+                structs(block_t, b_type, b_text, lists(block_t.field("bbox").type, b_boff, b_bval)),
             ),
-        )
-        blocks_arr = pa.ListArray.from_arrays(
-            pa.array(b_off, i32),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(b_type, s),
-                    pa.array(b_text, s),
-                    pa.ListArray.from_arrays(
-                        pa.array(b_boff, i32), pa.array(b_bval, f64)
-                    ),
-                ],
-                ["type", "text", "bbox"],
-            ),
-        )
+            pa.array(ok, types["parse_ok"]),
+            pa.array(err, types["error"]),
+            pa.array(nbytes, types["bytes_in"]),
+        ]
         yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("conv_id"),  # zero-copy passthrough
-                batch.column("turn_idx"),
-                pa.array(kind, s),
-                pa.array(etext, s),
-                spans_arr,
-                lines_arr,
-                blocks_arr,
-                pa.array(ok, b8),
-                pa.array(err, s),
-                pa.array(nbytes, i64),
-            ],
-            schema=schema,
+            [batch.column(k) for k in keys] + parsed, names=schema.names
         )
 
 
-def extract_arrow(transcripts: DataFrame) -> DataFrame:
-    """transcripts -> extracted via ``mapInArrow`` (same rows as
-    ``extract``, lower serialization overhead). Narrow; zero shuffle."""
-    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInArrow(
-        _extract_arrow_batches, EXTRACTED_SCHEMA
+def _turn_idx():
+    # keys pass through the worker untouched, so they must already have
+    # the output type (a source may carry turn_idx as bigint)
+    return F.col("turn_idx").cast("int").alias("turn_idx")
+
+
+def _map_extract(df: DataFrame, out_schema: T.StructType) -> DataFrame:
+    """``df`` holds the key columns of ``out_schema`` plus ``text, tool``."""
+    return df.mapInArrow(partial(_extract_batches, out_schema=out_schema), out_schema)
+
+
+def extract(transcripts: DataFrame) -> DataFrame:
+    """transcripts -> extracted. Narrow (no shuffle); column-pruned input;
+    Arrow-native batches (see ``_extract_batches``)."""
+    return _map_extract(
+        transcripts.select("conv_id", _turn_idx(), "text", "tool"), EXTRACTED_SCHEMA
     )
 
 
-# ---------------------------------------------------------------------------
-# Routed extraction: JVM builtin fast path for plain-text turns
-# ---------------------------------------------------------------------------
+def extract_deduped(transcripts: DataFrame) -> DataFrame:
+    """A6 memoization: run the Python stage once per unique payload.
 
-# Characters for which Python's str.strip()/re-\s and Java's regex \s
-# agree exactly: printable ASCII plus tab/newline/CR. Outside this set the
-# two whitespace vocabularies diverge (e.g. Python treats U+001C and
-# NBSP as strippable; Java \s is ASCII-only without UNICODE_CHARACTER_CLASS),
-# so such turns take the UDF branch where the frozen oracle decides.
-_TEXT_FAST_CHARSET = r"\A[\x20-\x7E\t\n\r]*\z"
+    ≙ reference cache keyed by sha256(content) (`utils/encoding.py:42-54`,
+    `tasks/ocr_tasks.py:45-91`). Shape: ONE shuffle — ``groupBy(sha)``
+    collects every (conv_id, turn_idx) bearing that payload, the Arrow
+    worker runs once per unique payload with the key list passed through
+    the batch, and an ``explode`` fans the result back out. No second
+    shuffle, no wide sort-merge join of nested results (the naive
+    dedupe-then-join plan costs ~2x the narrow extraction; this one
+    costs one aggregation of the input).
 
-
-def _text_fast_eligible() -> "F.Column":
-    """SQL predicate: this turn provably takes the oracle's plain-text
-    path AND the builtin twin reproduces it byte-for-byte.
-
-    Three conjuncts, all codegen'd:
-
-    - no tool payload (classify_turn routes payload turns first);
-    - no ``<`` at all — a superset of ``looks_like_html``'s prefilter,
-      so nothing the oracle would call ``html`` can slip through (texts
-      containing ``<`` without an HTML hint are still kind ``text`` but
-      go to the UDF branch: correct either way, just not fast-pathed);
-    - ASCII-safe charset (see _TEXT_FAST_CHARSET).
+    Pays off when the parser is expensive (real OCR inference) or the
+    duplicate rate is high; for a cheap parser on mostly-unique data
+    plain ``extract`` skips the shuffle.
     """
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    tool = F.coalesce(F.col("tool"), F.lit(""))
-    return (tool == F.lit("")) & ~txt.contains("<") & txt.rlike(_TEXT_FAST_CHARSET)
-
-
-def _text_fast_extracted() -> list:
-    """Builtin (whole-stage-codegen) twin of the oracle's text path.
-
-    ``clean_text`` is the reference regex chain
-    (``services/ocr_service/helpers/text_extractor.py:258-277``) —
-    expressible directly as two ``regexp_replace`` plus an anchored
-    whitespace trim. The span column exploits a provenance invariant of
-    ``clean_text_with_spans`` (fuzz-pinned in test_properties.py): the
-    cleanup substitutions tile the raw string contiguously (every
-    replacement inherits the union interval of its matched run, identity
-    chars map to themselves), so after merging, a text-kind turn always
-    carries EXACTLY ONE span — ``(len(raw)-len(raw.lstrip()),
-    len(raw.rstrip()))`` — or none when the turn is all whitespace.
-    Within _TEXT_FAST_CHARSET, Java ``\\s`` == Python's whitespace set,
-    so the Java regexes below are exact twins, and chars == bytes so
-    ``length()`` is both the char offset and the byte count.
-    """
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    tool = F.coalesce(F.col("tool"), F.lit(""))
-    # Within the charset, whitespace is exactly [ \t\n\r]: strip via the
-    # set-based TRIM (one C-speed scan) instead of anchored regexes, and
-    # pay the two collapse regexp_replace passes only on rows where a
-    # collapse can actually fire (CASE short-circuits in codegen; the
-    # guards are memchr-speed `contains` plus one regex confined to
-    # rows containing a newline) — mirrors the oracle's own no-match
-    # fast path (oracle/cleanup.py:184).
-    ws = F.lit(" \t\n\r")
-    stripped_raw = F.trim(txt, ws)
-    has_blanklines = txt.contains("\n") & txt.rlike(r"\n[ \t\n\r]*\n[ \t\n\r]*\n")
-    has_spaceruns = txt.contains("  ") | txt.contains("\t")
-    cleaned = (
-        F.when(
-            has_blanklines | has_spaceruns,
-            F.regexp_replace(
-                F.regexp_replace(
-                    F.regexp_replace(txt, r"\n\s*\n\s*\n+", "\n\n"),
-                    r"[ \t]+",
-                    " ",
-                ),
-                r"\A\s+|\s+\z",
-                "",
-            ),
-        )
-        .otherwise(stripped_raw)
-    )
-    lead = F.length(txt) - F.length(F.ltrim(txt, ws))
-    tail = F.length(F.rtrim(txt, ws))
-    spans = F.when(
-        F.length(cleaned) == 0,
-        F.array().cast(EXTRACTED_SCHEMA["spans"].dataType),
-    ).otherwise(
-        F.array(
-            F.struct(
-                lead.cast("int").alias("start"), tail.cast("int").alias("end")
-            )
-        )
-    )
-    return [
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.lit("text").alias("kind"),
-        cleaned.alias("extracted_text"),
-        spans.alias("spans"),
-        F.array().cast(EXTRACTED_SCHEMA["lines"].dataType).alias("lines"),
-        F.array().cast(EXTRACTED_SCHEMA["blocks"].dataType).alias("blocks"),
-        F.lit(True).alias("parse_ok"),
-        F.lit(None).cast("string").alias("error"),
-        (F.octet_length(txt) + F.octet_length(tool)).cast("long").alias("bytes_in"),
-    ]
-
-
-def _extract_fused_batches(batches):
-    """Batch-level router inside the Arrow worker: rows pre-marked
-    ``_fast`` by the JVM are re-assembled vectorized (Arrow C++ filter +
-    zero-copy passthrough of the JVM-computed text/span/bytes columns —
-    no per-row Python), the rest run the frozen per-row parser. Emits up
-    to two record batches per input batch (fast, slow) to avoid a
-    concatenation."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    schema = _arrow_out_schema()
-    i32 = pa.int32()
-    empty_lines = pa.array([], type=schema.field("lines").type.value_type)
-    empty_blocks = pa.array([], type=schema.field("blocks").type.value_type)
-    slow_cols = ["conv_id", "turn_idx", "text", "tool"]
-    for batch in batches:
-        mask = batch.column("_fast")
-        fast = batch.filter(mask)
-        n = fast.num_rows
-        if n:
-            starts = fast.column("_span_start")
-            valid = pc.is_valid(starts).to_numpy(zero_copy_only=False)
-            offs = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(valid, out=offs[1:])
-            spans_vals = pa.StructArray.from_arrays(
-                [starts.drop_null(), fast.column("_span_end").drop_null()],
-                ["start", "end"],
-            )
-            zero_offs = pa.array(np.zeros(n + 1, dtype=np.int32), i32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    fast.column("conv_id"),
-                    fast.column("turn_idx"),
-                    pa.array(["text"] * n, pa.string()),
-                    fast.column("_fast_text"),
-                    pa.ListArray.from_arrays(pa.array(offs, i32), spans_vals),
-                    pa.ListArray.from_arrays(zero_offs, empty_lines),
-                    pa.ListArray.from_arrays(zero_offs, empty_blocks),
-                    pa.array(np.ones(n, dtype=bool), pa.bool_()),
-                    pa.nulls(n, pa.string()),
-                    fast.column("_bytes_in"),
-                ],
-                schema=schema,
-            )
-        slow = batch.filter(pc.invert(mask))
-        if slow.num_rows:
-            yield from _extract_arrow_batches(iter([slow.select(slow_cols)]))
-
-
-def extract_fused(transcripts: DataFrame) -> DataFrame:
-    """Single-scan routed extraction: same output as ``extract()`` /
-    ``extract_routed()``, but routing happens INSIDE one narrow stage.
-
-    The JVM projection marks provably-plain-text rows (``_fast``, see
-    ``_text_fast_eligible``) and pre-computes their builtin outputs
-    (cleanup + single-interval span + bytes) in whole-stage codegen; raw
-    ``text``/``tool`` are nulled out for those rows so they are not
-    shipped twice. The Arrow worker then splits each batch with a C++
-    filter: fast rows never touch per-row Python, slow rows run the
-    frozen parser. Compared to ``extract_routed``'s two-branch union
-    this reads the source ONCE (no second scan) at the price of moving
-    the builtin outputs across the Arrow boundary; see
-    BENCH/BASELINE.md for the measured decision rule between the three
-    extraction shapes. Still narrow — zero shuffle."""
-    elig = _text_fast_eligible()
-    # reuse the builtin twin's expressions (positions fixed by
-    # _OUT_COLUMNS: extracted_text, spans, bytes_in)
-    exprs = _text_fast_extracted()
-    cleaned = exprs[_OUT_COLUMNS.index("extracted_text")]
-    spans = exprs[_OUT_COLUMNS.index("spans")]
-    bytes_in = exprs[_OUT_COLUMNS.index("bytes_in")]
-    src = transcripts.select(
+    keyed = transcripts.select(
+        F.sha2(F.concat_ws("\x1f", F.col("text"), F.col("tool")), 256).alias("payload_sha"),
         "conv_id",
-        "turn_idx",
-        F.when(elig, F.lit(None).cast("string")).otherwise(F.col("text")).alias("text"),
-        F.when(elig, F.lit(None).cast("string")).otherwise(F.col("tool")).alias("tool"),
-        elig.alias("_fast"),
-        F.when(elig, cleaned).alias("_fast_text"),
-        F.when(elig, F.try_element_at(spans, F.lit(1))["start"]).alias("_span_start"),
-        F.when(elig, F.try_element_at(spans, F.lit(1))["end"]).alias("_span_end"),
-        F.when(elig, bytes_in).alias("_bytes_in"),
+        _turn_idx(),
+        "text",
+        "tool",
     )
-    return src.mapInArrow(_extract_fused_batches, EXTRACTED_SCHEMA)
+    grouped = keyed.groupBy("payload_sha").agg(
+        F.first("text").alias("text"),
+        F.first("tool").alias("tool"),
+        F.collect_list(F.struct("conv_id", "turn_idx")).alias("dup_keys"),
+    )
+    uniq_out = _map_extract(grouped.select("dup_keys", "text", "tool"), _DEDUP_SCHEMA)
+    return uniq_out.select(F.explode("dup_keys").alias("k"), *_PARSED_NAMES).select(
+        F.col("k.conv_id").alias("conv_id"),
+        F.col("k.turn_idx").alias("turn_idx"),
+        *_PARSED_NAMES,
+    )
 
 
-def extract_routed(transcripts: DataFrame) -> DataFrame:
-    """T6 filtered-branches extraction: classify on payload shape in SQL,
-    run provably-plain-text turns through a pure-builtin twin (zero
-    Python), union with the Arrow-UDF branch for everything else.
+def salt_repartition(transcripts: DataFrame, num_partitions: int, bucket_turns: int = 256) -> DataFrame:
+    """P5 skew salting: distribute giant conversations across tasks.
 
-    Output is byte-identical to ``extract()`` — including spans — pinned
-    row-for-row in tests/test_spark_parity.py. Both branches are narrow
-    (filter + project / filter + mapInArrow), so the whole operator is
-    still zero-shuffle; the cost is that the source is scanned twice
-    (Spark has no multi-output operator). At 100 TB that trade is right:
-    the second column-pruned scan is sequential IO, while the Python
-    branch it displaces is the pipeline's CPU bottleneck — on text-heavy
-    mixes roughly half the turns never cross the Arrow boundary at all
-    (A/B numbers in BENCH/BASELINE.md). Callers that already persist the
-    source pay the scan once.
-
-    ≙ reference hybrid router ``services/pdf_hybrid_service/helpers/
-    pdf_extractor.py:16-112`` (route by shape; cheap path for digital
-    text, expensive path for OCR), recast so the cheap path stays inside
-    whole-stage codegen.
+    Partitions by ``(conv_id, turn_idx div bucket_turns)`` so a 10^4-turn
+    agent trace spans ~40 tasks instead of hot-spotting one, while small
+    conversations stay whole. Only the *shuffle* key is salted; ordering
+    keys downstream are untouched.
     """
-    src = transcripts.select("conv_id", "turn_idx", "text", "tool")
-    eligible = _text_fast_eligible()
-    fast = src.filter(eligible).select(*_text_fast_extracted())
-    slow = extract_arrow(src.filter(~eligible))
-    return fast.unionByName(slow)
+    return transcripts.repartition(
+        num_partitions,
+        F.col("conv_id"),
+        (F.col("turn_idx") / F.lit(bucket_turns)).cast("int"),
+    )
 
 
 def maybe_salt(

@@ -1041,13 +1041,12 @@ WHERE NOT regexp_matches(text,
   '<\s*(?:/|!doctype|html|body|p|div|h[1-6]|a|ul|ol|li|nav|header|footer|table|td|th|tr|span|script|style|br|article|section|main|blockquote|pre)\b', 'i')
 """
 
-# routed-extraction twin: same classifier + cleanup re-derivation as
-# extract_udf_text_parity, PLUS the span provenance flattened to scalars
-# via the single-interval invariant (a text turn's merged spans are
-# exactly (len-len(lstrip), len(rstrip)) or empty — fuzz-pinned in
-# tests/test_properties.py); compared against extract_routed()'s union
-# of the builtin JVM branch and the Arrow-UDF branch
-ORACLES["extract_routed_text_parity"] = r"""
+# same classifier + cleanup re-derivation as extract_udf_text_parity,
+# PLUS the span provenance flattened to scalars via the single-interval
+# invariant (a text turn's merged spans are exactly (len-len(lstrip),
+# len(rstrip)) or empty — fuzz-pinned in tests/test_properties.py);
+# compared against extract_deduped(), the shape the pipeline runs
+ORACLES["extract_text_span_parity"] = r"""
 WITH t AS (
   SELECT source AS conv_id,
          CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) - 1 AS INTEGER) AS turn_idx,

@@ -31,26 +31,16 @@ def run_extraction(
     transcripts: DataFrame,
     dedupe: bool = True,
     salt_partitions: int | None = None,
-    routed: bool = False,
 ) -> DataFrame:
     """transcripts -> extracted (lazy; no action triggered).
 
-    ``routed=True`` opts into the T6 filtered-branches shape
-    (``extract_routed``): plain-text turns stay in whole-stage codegen
-    and only payload/html turns cross the Arrow boundary. Byte-identical
-    output; worth it when the UDF is expensive per turn (real OCR/layout
-    inference) — see BENCH/EXTRACT_AB.md for the measured decision rule.
-    Mutually exclusive with ``dedupe`` (the memoization join already
-    routes every unique payload through the UDF exactly once)."""
+    ``dedupe`` picks ``extract_deduped`` (one shuffle; the parser runs
+    once per unique payload) over the narrow ``extract``; both run the
+    same Arrow worker and give the same rows. ``salt_partitions`` adds a
+    turn-bucket-salted repartition before extraction."""
     df = transcripts
     if salt_partitions:
         df = salt_repartition(df, salt_partitions)
-    if dedupe and routed:
-        raise ValueError("routed=True composes with dedupe=False only")
-    if routed:
-        from ocr_spark.operators.extract import extract_routed
-
-        return extract_routed(df)
     return extract_deduped(df) if dedupe else extract(df)
 
 

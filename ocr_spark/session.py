@@ -16,12 +16,20 @@ local testing so the plans we inspect locally are the plans we'd ship:
   handful of scan tasks and the extraction stage starves the cluster.
   Extraction jobs set this ~10-50x smaller (scaled so one split is a
   few seconds of UDF work); pure-relational scans keep the default.
+
+This is the one place the package builds a session; jobs, bench and
+tests all call ``build_session``. Launched by ``spark-submit``, it keeps
+everything spark-submit set (``--master``, ``--conf``, ``--name``,
+``--driver-memory``, spark-defaults) and only fills the keys left unset;
+it never sets the master or the driver memory there. Launched as plain
+Python, it builds the local session with exactly the confs below.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -40,31 +48,31 @@ def build_session(
         max_partition_bytes = int(
             os.environ.get("OCR_SPARK_MAX_PARTITION_BYTES", str(128 * 1024 * 1024))
         )
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # 16k-row batches: ~12% fewer python<->JVM roundtrips on the
         # extraction workload vs 4096, still only ~10-20 MB per in-flight
         # batch per worker (bounds python memory at any partition size)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
-        .config("spark.sql.files.maxPartitionBytes", str(max_partition_bytes))
-        .config("spark.sql.files.openCostInBytes", str(max(max_partition_bytes // 8, 262144)))
-        .config("spark.python.worker.reuse", "true")
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "16384",
+        "spark.sql.files.maxPartitionBytes": str(max_partition_bytes),
+        "spark.sql.files.openCostInBytes": str(max(max_partition_bytes // 8, 262144)),
+        "spark.python.worker.reuse": "true",
         # zstd: measured same write wall-time as snappy/lz4 on this
         # workload but ~30% smaller files (nested extraction snapshot:
         # 20 vs 29 MB at sf0.1) — at 100 TB that is a third less storage
         # and scan IO for every downstream read of the snapshot table
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        "spark.sql.parquet.compression.codec": "zstd",
         # the K=128 MinHash (129-col agg) and 64-bit SimHash (66-col agg)
         # exceed the default 100-field whole-stage-codegen cutoff, which
         # silently drops their hot HashAggregate to interpreted mode
-        .config("spark.sql.codegen.maxFields", "256")
-        .config("spark.ui.enabled", "false")
+        "spark.sql.codegen.maxFields": "256",
+        "spark.ui.enabled": "false",
         # 16g, deliberately NOT bigger: with a huge single-JVM heap G1
         # defers collection through the extraction+write stage, and the
         # NEXT stage's aggregation then runs against tens of GB of
@@ -72,8 +80,24 @@ def build_session(
         # local[32] is 12s with 48g vs 2-4s with 12-16g; whole job 81k ->
         # 188k turns/s). Real clusters run one modest heap per executor
         # process, so the small heap is also the representative shape.
-        .config("spark.driver.memory", os.environ.get("OCR_SPARK_DRIVER_MEM", "16g"))
-    )
-    for key, value in (extra_conf or {}).items():
+        "spark.driver.memory": os.environ.get("OCR_SPARK_DRIVER_MEM", "16g"),
+        **(extra_conf or {}),
+    }
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started this driver's JVM and handed us its port:
+        # its master and heap are fixed, and what it was given outranks
+        # every default here
+        conf.pop("spark.master")
+        conf.pop("spark.driver.memory")
+        # connect to that JVM first: only then does SparkConf() load the
+        # --conf/--master values spark-submit passed it
+        SparkContext._ensure_initialized()
+        submitted = SparkConf()
+        for key, value in conf.items():
+            submitted.setIfMissing(key, value)
+        return SparkSession.builder.config(conf=submitted).getOrCreate()
+    builder = SparkSession.builder
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+

@@ -86,40 +86,21 @@ def test_rollup_prunes_nested_snapshot_columns(spark, transcripts_parquet, tmp_p
 def test_extract_is_narrow(spark, transcripts_parquet):
     t = spark.read.parquet(transcripts_parquet)
     p = plan(extract(t))
-    # scan -> mapInPandas, zero shuffles
+    # scan -> mapInArrow, zero shuffles
     assert n_ops(p, "Exchange") == 0
 
 
-def test_extract_routed_fast_branch_stays_jvm(spark, transcripts_parquet):
-    """Routed extraction: still zero-shuffle, exactly ONE Python/Arrow
-    node (the slow branch), and the fast branch's cleanup chain is plain
-    codegen'd Project over the scan — the plain-text majority never
-    crosses the Arrow boundary."""
-    from ocr_spark.operators.extract import extract_routed
+def test_extract_deduped_one_exchange_one_arrow_node(spark, transcripts_parquet):
+    """The shape the pipeline runs crosses the Python boundary exactly
+    once, through the same Arrow worker as ``extract``: one payload-hash
+    Exchange, one MapInArrow, and no pandas round trip."""
+    from ocr_spark.operators.extract import extract_deduped
 
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(extract_routed(t))
-    assert n_ops(p, "Exchange") == 0
-    assert n_ops(p, "MapInArrow") + n_ops(p, "MapInPandas") == 1
-    assert n_ops(p, "Union") == 1
-    # the builtin twin is inline expressions, not a second UDF
-    assert "regexp_replace" in p
-    assert n_ops(p, "BatchEvalPython") == 0 and n_ops(p, "ArrowEvalPython") == 0
-
-
-def test_extract_fused_single_scan_single_arrow_node(spark, transcripts_parquet):
-    """Fused routing: ONE scan, ONE Arrow node, no union, no shuffle —
-    the builtin twin runs as codegen'd expressions inside the same
-    stage's Project."""
-    from ocr_spark.operators.extract import extract_fused
-
-    t = spark.read.parquet(transcripts_parquet)
-    p = plan(extract_fused(t))
-    assert n_ops(p, "Exchange") == 0
+    p = plan(extract_deduped(t))
+    assert n_ops(p, "Exchange") == 1
     assert n_ops(p, "MapInArrow") == 1
-    assert n_ops(p, "Union") == 0
-    assert n_ops(p, "Scan parquet") == 1
-    assert "regexp_replace" in p
+    assert n_ops(p, "MapInPandas") == 0
 
 
 def test_salted_rollup_is_two_phase(spark, transcripts_parquet):
@@ -127,7 +108,7 @@ def test_salted_rollup_is_two_phase(spark, transcripts_parquet):
     p = plan(conv_text_salted(extract(salt_repartition(t, 8))))
     # exchanges: salt repartition + bucket-agg shuffle + conv-agg shuffle
     assert n_ops(p, "Exchange") == 3
-    assert "MapInArrow" in p or "MapInPandas" in p
+    assert "MapInArrow" in p
 
 
 def test_default_pipeline_is_two_exchanges(spark, transcripts_parquet):

@@ -189,8 +189,9 @@ wsp_exotic = st.text(alphabet=" \t\n\r\v\f\x1c\x1d\x1e\x1f\xa0　ab.", max_size=
 @settings(max_examples=500, deadline=None)
 @given(st.one_of(wsp_heavy, wsp_exotic))
 def test_cleanup_spans_single_interval_invariant(s):
-    """The provenance invariant the SQL fast path of extract_routed
-    relies on (operators/extract.py): a text-kind turn's merged spans are
+    """The provenance invariant the DuckDB oracle of
+    extract_text_span_parity relies on (ocr_spark/oracles.py), and that a
+    faster text path may exploit: a text-kind turn's merged spans are
     always EXACTLY ONE interval (len(raw)-len(raw.lstrip()),
     len(raw.rstrip())) — or none when the cleaned output is empty —
     because both cleanup substitutions tile the raw string contiguously

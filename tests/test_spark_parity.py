@@ -83,6 +83,37 @@ def test_conv_text_matches_oracle(spark, transcripts, golden):
             assert row["n_ocr"] == want["n_ocr"], cid
 
 
+def test_rollups_skip_exactly_the_turns_str_strip_calls_blank(spark):
+    """Both rollups drop a turn iff ``str.strip()`` leaves it empty — the
+    oracle's blank test — for every whitespace char Python knows: an
+    ocr_lines turn whose text is "\\n" must not reach full_text, while a
+    turn with one visible char between such runs must."""
+    import sys
+
+    from ocr_spark.operators.aggregate import _PY_WHITESPACE
+
+    every_space = "".join(c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace())
+    assert _PY_WHITESPACE == every_space
+    blanks = ["\n", " \t\r\n", "\x0b\x0c", "\x1c\x1d\x1e\x1f", "\x85", "\xa0",
+              "\u3000", "\u2028\u2029", every_space, "", None]
+    texts = ["first", *blanks[:4], "mid\x1cdle", *blanks[4:], f"{every_space}x{every_space}"]
+    rows = []
+    for c in range(3):
+        conv_texts = texts[c:] + texts[:c]  # blanks land in every bucket slot
+        rows += [
+            (f"c{c}", i, "ocr_lines" if i % 2 else "text", t)
+            for i, t in enumerate(conv_texts)
+        ]
+    extracted = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, kind string, extracted_text string"
+    )
+    for agg_fn in (conv_text, lambda df: conv_text_salted(df, bucket_turns=3)):
+        got = {r["conv_id"]: r.asDict() for r in agg_fn(extracted).collect()}
+        for c in range(3):
+            want = aggregate_conversation([r[1:] for r in rows if r[0] == f"c{c}"])
+            assert {k: got[f"c{c}"][k] for k in want} == want, c
+
+
 def test_partition_metrics_totals(spark, transcripts, golden):
     extracted = extract(transcripts)
     rows = partition_metrics(extracted, run_id="test").collect()
@@ -206,48 +237,41 @@ def test_conv_truncate_tail_budget_and_maximality(spark):
 
 
 # ---------------------------------------------------------------------------
-# Routed extraction (T6 filtered branches): builtin fast path parity
+# Memoized extraction: full-row parity with extract and the oracle
 # ---------------------------------------------------------------------------
 
-def test_extract_routed_matches_oracle(spark, transcripts, golden):
-    from ocr_spark.operators.extract import extract_routed
-
-    rows = extract_routed(transcripts).collect()
-    _assert_matches_golden(rows, golden)
-
-
-def test_extract_routed_full_row_parity_with_extract(spark, transcripts):
+def test_extract_deduped_full_row_parity_with_extract(spark, transcripts):
     """Byte-identical to extract() on EVERY column (including spans,
-    error, bytes_in), not just the golden subset — for BOTH routed
-    shapes (two-branch union and single-scan fused)."""
-    from ocr_spark.operators.extract import extract_fused, extract_routed
-
+    error, bytes_in), not just the golden subset."""
     a = extract(transcripts).orderBy("conv_id", "turn_idx").collect()
-    b = extract_routed(transcripts).orderBy("conv_id", "turn_idx").collect()
-    c = extract_fused(transcripts).orderBy("conv_id", "turn_idx").collect()
+    b = extract_deduped(transcripts).orderBy("conv_id", "turn_idx").collect()
     assert a == b
-    assert a == c
 
 
-def test_extract_routed_edge_battery(spark):
-    """Adversarial edges around the routing predicate: nulls, whitespace
-    shapes, '<' without an HTML hint, non-ASCII and exotic-whitespace
-    chars where Python and Java disagree on \\s (must route to the UDF),
-    and payload/malformed-tool turns."""
+def test_extract_deduped_edge_battery(spark):
+    """Adversarial payloads through both shapes and the oracle, on every
+    column: nulls, whitespace shapes, '<' without an HTML hint, non-ASCII
+    and exotic-whitespace chars where Python and Java disagree on \\s,
+    and payload/malformed-tool turns. The battery repeats in three
+    conversations, so every payload is a duplicate and extract_deduped's
+    fan-back must hand one result to each of its keys."""
     import pyspark.sql.types as T
 
-    from ocr_spark.operators.extract import extract_routed
-
+    payloads = [
+        (None, None), ("", ""), ("   ", ""),
+        ("\n\n\n\n", ""), ("a  b", ""), ("a\t\tb", ""),
+        ("x < y and y > z", ""), ("<p>hi</p>", ""),
+        ("café  au lait", ""), ("\xa0 hi \xa0", ""),
+        ("a\x0bb", ""), ("ok\r\n\r\n\r\nnext", ""),
+        ("  lead and trail  ", ""), ("no collapse here.", ""),
+        ("txt", '{"blocks": []}'), ("txt", "not json"),
+        ("a\x1cb", ""), ("\x1c  x", ""),
+        (" \t mixed\truns  and\n\n\n\nblanks \n", ""),
+    ]
     rows = [
-        ("c", 0, None, None), ("c", 1, "", ""), ("c", 2, "   ", ""),
-        ("c", 3, "\n\n\n\n", ""), ("c", 4, "a  b", ""), ("c", 5, "a\t\tb", ""),
-        ("c", 6, "x < y and y > z", ""), ("c", 7, "<p>hi</p>", ""),
-        ("c", 8, "café  au lait", ""), ("c", 9, "\xa0 hi \xa0", ""),
-        ("c", 10, "a\x0bb", ""), ("c", 11, "ok\r\n\r\n\r\nnext", ""),
-        ("c", 12, "  lead and trail  ", ""), ("c", 13, "no collapse here.", ""),
-        ("c", 14, "txt", '{"blocks": []}'), ("c", 15, "txt", "not json"),
-        ("c", 16, "a\x1cb", ""), ("c", 17, "\x1c  x", ""),
-        ("c", 18, " \t mixed\truns  and\n\n\n\nblanks \n", ""),
+        (conv, i, text, tool)
+        for conv in ("c0", "c1", "c2")
+        for i, (text, tool) in enumerate(payloads)
     ]
     schema = T.StructType([
         T.StructField("conv_id", T.StringType()),
@@ -256,21 +280,18 @@ def test_extract_routed_edge_battery(spark):
         T.StructField("tool", T.StringType()),
     ])
     df = spark.createDataFrame(rows, schema)
-    from ocr_spark.operators.extract import extract_fused
-
-    a = extract(df).orderBy("turn_idx").collect()
-    b = extract_routed(df).orderBy("turn_idx").collect()
-    c = extract_fused(df).orderBy("turn_idx").collect()
+    a = extract(df).orderBy("conv_id", "turn_idx").collect()
+    b = extract_deduped(df).orderBy("conv_id", "turn_idx").collect()
     assert a == b
-    assert a == c
-
-
-def test_extract_routed_fast_fraction_is_material(spark, transcripts):
-    """The builtin branch must actually carry the plain-text majority —
-    if the predicate silently tightens, the fast path becomes dead code
-    while every parity test stays green."""
-    from ocr_spark.operators.extract import _text_fast_eligible
-
-    total = transcripts.count()
-    fast = transcripts.filter(_text_fast_eligible()).count()
-    assert fast / total >= 0.30, (fast, total)
+    assert len(a) == len(rows)
+    for r in a:
+        text, tool = payloads[r["turn_idx"]]
+        want = extract_turn(text or "", tool or "")
+        got = r.asDict(recursive=True)
+        key = (r["conv_id"], r["turn_idx"])
+        for col in ("kind", "extracted_text", "parse_ok", "error"):
+            assert got[col] == want[col], (key, col)
+        assert [(s["start"], s["end"]) for s in got["spans"]] == want["spans"], key
+        assert got["lines"] == want["lines"], key
+        assert got["blocks"] == want["blocks"], key
+        assert got["bytes_in"] == len((text or "").encode()) + len((tool or "").encode()), key

@@ -44,10 +44,24 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     zip_path = build(str(tmp_path / "ocr_spark.zip"))
     out_dir = str(tmp_path / "out")
 
-    summary = _submit(zip_path, input_dir, out_dir, ("--salt-partitions", "8"))
+    summary = _submit(
+        zip_path,
+        input_dir,
+        out_dir,
+        ("--salt-partitions", "8"),
+        conf=("spark.sql.codegen.maxFields=200",),
+    )
     assert summary["turns_committed"] == n_turns
     assert summary["conversations"] == 10
     assert summary["parse_failures"] is not None
+    # one session factory under spark-submit: every --conf wins (the
+    # factory's own default maxFields is 256), and the factory fills
+    # the keys spark-submit left unset
+    conf = summary["sql_conf"]
+    assert conf["spark.sql.shuffle.partitions"] == "8"
+    assert conf["spark.sql.codegen.maxFields"] == "200"
+    assert conf["spark.sql.execution.arrow.maxRecordsPerBatch"] == "16384"
+    assert conf["spark.sql.parquet.compression.codec"] == "zstd"
 
     # committed snapshot + metrics tables exist and reconcile
     extracted = spark.read.parquet(os.path.join(out_dir, "extracted", "snapshot=0"))
@@ -464,7 +478,7 @@ def test_eval_job_spark_submit_end_to_end(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_tree_store_extract_job_linearizes_then_extracts(spark, tmp_path):
+def test_tree_store_extract_job_linearizes_then_extracts(spark, tmp_path, monkeypatch):
     """--tree-store: a branching message store (heap-shaped trees built
     from the fixture transcripts) goes in; the job resolves the forest,
     linearizes every root-to-leaf path into a thread, and runs the
@@ -551,7 +565,40 @@ def test_tree_store_extract_job_linearizes_then_extracts(spark, tmp_path):
     s2 = _submit(zip_path, dirty_dir, out2, ("--tree-store",))
     assert s2["forest_issues"] == 1
     assert s2["messages_unreached"] == exp_unreached
-    issues = spark.read.parquet(os.path.join(out2, "forest_issues")).collect()
+    issues_dir = os.path.join(out2, "forest_issues")
+    issues = spark.read.parquet(issues_dir).collect()
     assert [(r["msg_id"], r["issue"]) for r in issues] == [
         (victim, "orphan_parent")
     ]
+
+    # the store is repaired and the job re-run into the same output: the
+    # earlier quarantine must not survive as if it were current
+    s3 = _submit(zip_path, input_dir, out2, ("--tree-store",))
+    assert s3["forest_issues"] == 0
+    assert not os.path.exists(issues_dir)
+
+    # the validation runs once per job, however many actions consume it
+    # (count, side-output write, quarantine anti-join): tally the rows it
+    # emits with an accumulator across the whole linearization
+    from jobs.extract_job import linearize_tree_store
+    from ocr_spark import rollouts
+
+    emitted = spark.sparkContext.accumulator(0)
+    validate = rollouts.validate_forest
+
+    def tallied(messages):
+        def tally(batches):
+            for b in batches:
+                emitted.add(b.num_rows)
+                yield b
+
+        out = validate(messages)
+        return out.mapInArrow(tally, out.schema)
+
+    monkeypatch.setattr(rollouts, "validate_forest", tallied)
+    flat, n_issues, unreached = linearize_tree_store(
+        spark.read.parquet(dirty_dir), str(tmp_path / "out3")
+    )
+    assert (n_issues, unreached) == (1, exp_unreached)
+    assert flat.count() > 0
+    assert emitted.value == n_issues
