@@ -84,29 +84,37 @@ HISTORY_JSON = os.path.join(REPO, "BENCH", "history.json")
 HISTORY_MD = os.path.join(REPO, "BENCH", "HISTORY.md")
 
 
+def _history_key(cpus: int, sf: float) -> str:
+    """Best-known times compare only within one host shape and scale."""
+    return f"cpus={cpus},sf={sf}"
+
+
 def _apply_history(result: dict) -> None:
     """Best-known-time tracking: single-invocation totals on this shared
     host swing ±15-27% on unchanged, plan-pinned code (BENCH_r03 vs r04),
     so per-round deltas are un-adjudicable. The durable signal is the
-    best time EVER recorded per query: the code can only have gotten
-    faster if a fresh min beats it, and a real regression shows up as a
-    fresh min exceeding best-known by >1.5x across TWO consecutive
-    invocations (one exceedance is a noise window by observation —
-    bench.py:166-175). Adds ``vs_best_known`` per query (fresh/best
-    ratio) and a ``regressions`` list to the emitted JSON, updates
-    ``BENCH/history.json``, and re-renders ``BENCH/HISTORY.md``."""
+    best time EVER recorded per query on the same ``(cpus, sf)`` key: the
+    code can only have gotten faster if a fresh min beats it, and a real
+    regression shows up as a fresh min exceeding best-known by >1.5x
+    across TWO consecutive invocations (one exceedance is a noise window
+    by observation). A run on a new host shape starts its own records
+    rather than being judged against another shape's. Adds
+    ``vs_best_known`` per query (fresh/best ratio) and a ``regressions``
+    list to the emitted JSON, updates ``BENCH/history.json``, and
+    re-renders ``BENCH/HISTORY.md``."""
     try:
         with open(HISTORY_JSON) as fh:
             hist = json.load(fh)
     except (OSError, ValueError):
         hist = {}
+    shape = hist.setdefault(_history_key(result["cpus"], result["sf"]), {})
     stamp = time.strftime("%Y-%m-%d")
     vs_best: dict[str, float] = {}
     regressions: list[str] = []
     for name, sec in result["queries"].items():
-        rec = hist.get(name)
+        rec = shape.get(name)
         if rec is None:
-            hist[name] = {"best_sec": sec, "set_in": stamp, "consec_over": 0}
+            shape[name] = {"best_sec": sec, "set_in": stamp, "consec_over": 0}
             vs_best[name] = 1.0
             continue
         ratio = sec / rec["best_sec"] if rec["best_sec"] > 0 else 1.0
@@ -118,46 +126,57 @@ def _apply_history(result: dict) -> None:
             regressions.append(name)
     tps = result.get("extract_turns_per_sec")
     if tps:
-        cur = hist.get("_extract_turns_per_sec")
+        cur = shape.get("_extract_turns_per_sec")
         if cur is None or tps > cur["best"]:
-            hist["_extract_turns_per_sec"] = {"best": tps, "set_in": stamp}
+            shape["_extract_turns_per_sec"] = {"best": tps, "set_in": stamp}
     result["vs_best_known"] = vs_best
     result["regressions"] = sorted(regressions)
     try:
         os.makedirs(os.path.dirname(HISTORY_JSON), exist_ok=True)
         with open(HISTORY_JSON, "w") as fh:
             json.dump(hist, fh, indent=1, sort_keys=True)
-        with open(HISTORY_MD, "w") as fh:
+        _render_history(hist)
+    except OSError:
+        pass  # history is advisory; never fail the bench over it
+
+
+def _render_history(hist: dict) -> None:
+    """Write ``BENCH/HISTORY.md``: one best-known table per host shape."""
+    with open(HISTORY_MD, "w") as fh:
+        fh.write(
+            "# Best-known bench times, per host shape\n\n"
+            "Regenerated by every `python bench.py` run. Records are kept\n"
+            "per `(cpus, sf)` key and a run is compared only with its own\n"
+            "key's. `vs_best_known` in each BENCH_rN.json is fresh-min /\n"
+            "best-known; a regression is flagged only when a fresh min\n"
+            "exceeds best-known by >1.5x in two consecutive invocations\n"
+            "(single exceedances are host-noise windows; identical code\n"
+            "has measured 2 s in one window and 15 s in another).\n"
+        )
+        for key in sorted(hist):
+            shape = hist[key]
             fh.write(
-                "# Best-known bench times (all invocations, all rounds)\n\n"
-                "Regenerated by every `python bench.py` run. `vs_best_known` in\n"
-                "each BENCH_rN.json is fresh-min / best-known; a regression is\n"
-                "flagged only when a fresh min exceeds best-known by >1.5x in\n"
-                "two consecutive invocations (single exceedances are host-noise\n"
-                "windows — see bench.py:166-175 for the measured 2s-vs-15s\n"
-                "swings on identical code).\n\n"
+                f"\n## {key}\n\n"
                 "| query | best sec | set in | consecutive >1.5x misses |\n"
                 "| --- | --- | --- | --- |\n"
             )
-            for name in sorted(k for k in hist if not k.startswith("_")):
-                rec = hist[name]
+            for name in sorted(k for k in shape if not k.startswith("_")):
+                rec = shape[name]
                 fh.write(
                     f"| {name} | {rec['best_sec']} | {rec['set_in']} | "
                     f"{rec.get('consec_over', 0)} |\n"
                 )
-            e = hist.get("_extract_turns_per_sec")
+            e = shape.get("_extract_turns_per_sec")
             if e:
                 fh.write(
                     f"\nBest extraction throughput: **{e['best']} turns/sec** "
                     f"(set in {e['set_in']}).\n"
                 )
-            # durable adjudication notes survive every regeneration
-            notes = os.path.join(REPO, "BENCH", "NOTES.md")
-            if os.path.exists(notes):
-                with open(notes) as nf:
-                    fh.write("\n" + nf.read())
-    except OSError:
-        pass  # history is advisory; never fail the bench over it
+        # durable adjudication notes survive every regeneration
+        notes = os.path.join(REPO, "BENCH", "NOTES.md")
+        if os.path.exists(notes):
+            with open(notes) as nf:
+                fh.write("\n" + nf.read())
 
 
 def _sf_from_dir(sf_dir: str) -> float:

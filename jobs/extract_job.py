@@ -4,13 +4,14 @@
 
     spark-submit --master <cluster> --py-files ocr_spark.zip \
         jobs/extract_job.py --input /path/transcripts_parquet \
-        --output /path/out --salt-partitions 512
+        --output /path/out
 
 Runs the resumable snapshot pipeline (anti-join against committed
-snapshots -> salted vectorized extraction -> atomic snapshot commit with
-per-partition lineage/metrics) and then the ordered conversation rollup
-to ``<output>/conv_text``. Re-running after a kill resumes from the last
-committed snapshot. Prints a one-line JSON summary on completion.
+snapshots -> deduplicated vectorized extraction -> atomic snapshot
+commit with per-partition lineage/metrics) and then the two-phase
+ordered conversation rollup to ``<output>/conv_text``. Re-running after
+a kill resumes from the last committed snapshot. Prints a one-line JSON
+summary on completion.
 
 Package the py-files zip with:  python tools/make_pyfiles.py
 """
@@ -79,13 +80,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="transcripts parquet dir")
     ap.add_argument("--output", required=True, help="output root (snapshots+rollup)")
-    ap.add_argument("--salt-partitions", type=int, default=0,
-                    help="salted repartition width (0 = scan partitioning)")
-    ap.add_argument("--auto-salt", type=int, default=0, metavar="N",
-                    help="probe for conversation skew (logged in summary) and "
-                         "repartition to N only if the source is "
-                         "under-parallelized; skew itself is handled at the "
-                         "salted rollup, never by shuffling raw payloads")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--tree-store", action="store_true",
                     help="input is a branching message store "
@@ -114,7 +108,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.operators.aggregate import conv_text_salted
-    from ocr_spark.operators.extract import maybe_salt, salt_repartition
     from ocr_spark.pipeline import read_metrics, run_resumable
 
     t0 = time.time()
@@ -124,18 +117,6 @@ def main() -> None:
         transcripts, forest_issues, msgs_unreached = linearize_tree_store(
             transcripts, args.output
         )
-    salted = False
-    skew_detected = False
-    if args.auto_salt:
-        raw = transcripts
-        transcripts, skew_detected = maybe_salt(raw, args.auto_salt)
-        # 'salted' reports whether a repartition was actually applied
-        # (under-parallelized source); 'skew_detected' is the probe flag —
-        # skew itself is neutralized at the salted rollup, not here
-        salted = transcripts is not raw
-    elif args.salt_partitions:
-        transcripts = salt_repartition(transcripts, args.salt_partitions)
-        salted = True
     snap_root = os.path.join(args.output, "extracted")
     committed = run_resumable(spark, transcripts, snap_root, run_id=args.run_id)
     rollup_dir = os.path.join(args.output, "conv_text")
@@ -178,8 +159,6 @@ def main() -> None:
             metrics.groupBy().sum("parse_failures").collect()[0][0] if metrics else None
         ),
         "wall_s": round(time.time() - t0, 1),
-        "salted": salted,
-        "skew_detected": skew_detected,
         # every linearized thread becomes exactly one rollup conversation,
         # so no separate distinct-count job is spent on this number
         "linearized_threads": conversations if args.tree_store else None,

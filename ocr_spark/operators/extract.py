@@ -23,10 +23,12 @@ key columns the loop passes through untouched:
   common (boilerplate, retries, forwarded content), so this trades one
   shuffle for running the Python stage on unique payloads only.
 
-``salt_repartition()`` spreads one giant conversation (the long-agent-
-trace skew archetype, SURVEY §2.4 P5) across many tasks by salting the
-partition key with a turn-index bucket; the salt never reaches a sort
-key, so final ordering is unaffected.
+Neither shape repartitions its input by conversation. The only shuffle
+before the worker is ``extract_deduped``'s, keyed on the payload hash,
+so a pre-extraction salt would be an extra exchange that no operator
+uses. Conversation skew (the long-agent-trace archetype, SURVEY §2.4
+P5) is handled where the rows of one conversation meet: the turn-bucket
+two-phase rollup ``aggregate.conv_text_salted``.
 """
 
 from __future__ import annotations
@@ -253,66 +255,3 @@ def extract_deduped(transcripts: DataFrame) -> DataFrame:
         F.col("k.turn_idx").alias("turn_idx"),
         *_PARSED_NAMES,
     )
-
-
-def salt_repartition(transcripts: DataFrame, num_partitions: int, bucket_turns: int = 256) -> DataFrame:
-    """P5 skew salting: distribute giant conversations across tasks.
-
-    Partitions by ``(conv_id, turn_idx div bucket_turns)`` so a 10^4-turn
-    agent trace spans ~40 tasks instead of hot-spotting one, while small
-    conversations stay whole. Only the *shuffle* key is salted; ordering
-    keys downstream are untouched.
-    """
-    return transcripts.repartition(
-        num_partitions,
-        F.col("conv_id"),
-        (F.col("turn_idx") / F.lit(bucket_turns)).cast("int"),
-    )
-
-
-def maybe_salt(
-    transcripts: DataFrame,
-    num_partitions: int,
-    skew_ratio: float = 8.0,
-    sample_fraction: float = 0.05,
-    bucket_turns: int = 256,
-) -> tuple[DataFrame, bool]:
-    """Adaptive P5: probe for conversation skew; repartition only an
-    under-parallelized source.
-
-    One cheap sampled aggregation estimates per-conversation turn counts;
-    if the largest conversation exceeds ``skew_ratio`` x the mean, the
-    returned flag is True so callers can log it into lineage. The data
-    itself is NOT repartitioned on skew: extraction is a narrow map whose
-    tasks are bounded by ``maxPartitionBytes`` scan splits, so
-    per-conversation skew cannot create a straggler there — a
-    pre-extraction salt shuffle of the raw payloads would be the dominant
-    cost at scale for zero benefit. Skew only matters where rows of one
-    conversation must meet, i.e. the keyed rollup, and
-    ``conv_text_salted``'s turn-bucket two-phase aggregation already
-    neutralizes it. ``salt_repartition`` remains available for the one
-    genuine use: extraction fed by an upstream keyed shuffle.
-
-    The only rewrite applied here: when the source arrives in fewer
-    splits than the target parallelism (a few huge files), one
-    turn-bucketed (salted-key) repartition restores parallelism —
-    bucketed rather than conv_id-keyed, because an under-parallelized
-    source is exactly where a dominant conversation exists and a plain
-    conv_id hash would concentrate it back into one task. The probe
-    reads only conv_id (column-pruned) from a fraction of the data — at
-    100 TB that is one narrow sampled scan, not a full pass.
-    """
-    probe = (
-        transcripts.select("conv_id")
-        .sample(fraction=sample_fraction, seed=42)
-        .groupBy("conv_id")
-        .count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("avg"))
-        .first()
-    )
-    skewed = bool(
-        probe and probe["mx"] and probe["avg"] and probe["mx"] / probe["avg"] >= skew_ratio
-    )
-    if transcripts.rdd.getNumPartitions() < max(num_partitions // 2, 2):
-        return salt_repartition(transcripts, num_partitions, bucket_turns), skewed
-    return transcripts, skewed

@@ -6,13 +6,15 @@ Reference semantics (``services/ocr_service/helpers/text_extractor.py:258-277``)
     text = re.sub(r'[ \\t]+', ' ', text)                # space/tab runs -> single space
     text = text.strip()
 
-``clean_text`` is the literal spec. ``clean_text_with_spans`` computes the
-same output string *plus* character-span provenance: for every output
-character we track the half-open interval of the raw input it derives
-from; the returned spans are the merged maximal intervals of raw input
-that contributed to the output. This is what the engine's ``spans``
-column carries (the reference has no span concept; the north rule
-requires one, so the contract is frozen here).
+``clean_text`` is the literal spec. ``clean_text_with_spans`` returns the
+same output string *plus* character-span provenance: the merged maximal
+intervals of raw input that contributed to the output. Cleanup only
+rewrites whitespace runs, so that is always one interval, from the first
+to past the last non-whitespace raw character (none for an empty
+output). This is what the engine's ``spans`` column carries (the
+reference has no span concept; the north rule requires one, so the
+contract is frozen here). ``_clean_text_with_spans_ref`` tracks
+provenance per character and is kept as the test-only check of that rule.
 """
 
 from __future__ import annotations
@@ -23,9 +25,9 @@ _RE_BLANKLINES = re.compile(r"\n\s*\n\s*\n+")
 _RE_SPACERUNS = re.compile(r"[ \t]+")
 # Output-equivalent refinement of [ \t]+: only runs whose replacement by
 # " " actually changes the string (contains a tab, or >=2 spaces). A
-# single " " matched by [ \t]+ is replaced by itself — same char, same
-# per-char provenance — so skipping it changes neither output nor spans,
-# and cuts the match count by ~the word count of typical prose.
+# single " " matched by [ \t]+ is replaced by itself, so skipping it
+# leaves the output unchanged and cuts the match count by ~the word count
+# of typical prose.
 _RE_SPACERUNS_EFFECTIVE = re.compile(r"[ \t]*\t[ \t]*| {2,}")
 
 
@@ -79,19 +81,14 @@ def _merge_intervals(intervals):
     return [(lo, hi) for lo, hi in merged]
 
 
-def _clean_text_with_spans_ref(text: str, base_srcs=None):
-    """Reference (per-char) implementation — kept as the parity check for
-    the segment-run fast path below and for the unused ``base_srcs``
-    extension point."""
+def _clean_text_with_spans_ref(text: str):
+    """Reference (per-char) provenance tracking — the test-only check that
+    ``clean_text_with_spans``'s one-interval rule is what per-character
+    tracking through both substitutions and the strip yields."""
     if not text:
         return "", []
     chars = list(text)
-    if base_srcs is None:
-        srcs = [(i, i + 1) for i in range(len(chars))]
-    else:
-        srcs = list(base_srcs)
-        if len(srcs) != len(chars):
-            raise ValueError("base_srcs length mismatch")
+    srcs = [(i, i + 1) for i in range(len(chars))]
     chars, srcs = _sub_mapped(_RE_BLANKLINES, "\n\n", chars, srcs)
     chars, srcs = _sub_mapped(_RE_SPACERUNS, " ", chars, srcs)
     # strip(): drop leading/trailing whitespace chars (and their provenance)
@@ -106,106 +103,19 @@ def _clean_text_with_spans_ref(text: str, base_srcs=None):
     return "".join(chars), _merge_intervals(srcs)
 
 
-# ---------------------------------------------------------------------------
-# Segment-run fast path: identical output/spans, O(#matches) python work
-# instead of O(#chars). A segment is (olen, slo, shi, stride): stride=1
-# means char j of the segment sources from raw (slo+j, slo+j+1) (an
-# identity run); stride=0 means every char sources from (slo, shi) (a
-# replacement inheriting the union interval of its matched run).
-# ---------------------------------------------------------------------------
-
-def _consume(segs, idx, off, n, emit):
-    """Advance the (idx, off) cursor n output chars; optionally emit the
-    consumed pieces; returns (idx, off, union_lo, union_hi)."""
-    lo = hi = None
-    while n > 0:
-        olen, slo, shi, stride = segs[idx]
-        take = min(olen - off, n)
-        if stride:
-            a = slo + off
-            piece = (take, a, a + take, 1)
-            plo, phi = a, a + take
-        else:
-            piece = (take, slo, shi, 0)
-            plo, phi = slo, shi
-        if emit is not None:
-            emit.append(piece)
-        if lo is None or plo < lo:
-            lo = plo
-        if hi is None or phi > hi:
-            hi = phi
-        off += take
-        n -= take
-        if off == olen:
-            idx += 1
-            off = 0
-    return idx, off, lo, hi
-
-
-def _sub_segmented(pattern: re.Pattern, repl: str, s: str, segs):
-    out_parts = []
-    new_segs = []
-    pos = idx = off = 0
-    for m in pattern.finditer(s):
-        a, b = m.span()
-        if a > pos:
-            idx, off, _, _ = _consume(segs, idx, off, a - pos, new_segs)
-            out_parts.append(s[pos:a])
-        idx, off, lo, hi = _consume(segs, idx, off, b - a, None)
-        if repl:
-            new_segs.append((len(repl), lo, hi, 0))
-            out_parts.append(repl)
-        pos = b
-    if pos < len(s):
-        idx, off, _, _ = _consume(segs, idx, off, len(s) - pos, new_segs)
-        out_parts.append(s[pos:])
-    return "".join(out_parts), new_segs
-
-
-def clean_text_with_spans(text: str, base_srcs=None):
+def clean_text_with_spans(text: str):
     """Cleanup with provenance.
 
     Returns ``(cleaned, spans)`` where ``cleaned == clean_text(text)`` and
-    ``spans`` is a list of merged ``(start, end)`` half-open offsets into
-    the *raw* input whose characters contributed to the output.
-
-    ``base_srcs`` optionally supplies a pre-existing source interval per
-    input character (falls back to the per-char reference path).
+    ``spans`` is the merged ``(start, end)`` half-open offsets into the
+    *raw* input whose characters contributed to the output. Both
+    substitutions replace a whitespace run by whitespace that inherits the
+    run's interval, so the raw string stays tiled contiguously and only
+    the strip cuts it: the spans are always the one interval from the
+    first to past the last non-whitespace raw character, or none when the
+    output is empty.
     """
-    if not text:
+    cleaned = clean_text(text)
+    if not cleaned:
         return "", []
-    if base_srcs is not None:
-        return _clean_text_with_spans_ref(text, base_srcs)
-    # no-match fast path: when neither regex fires, both substitutions are
-    # the identity, so provenance is the identity map and only strip()
-    # trims the ends. Typical clean prose (single spaces, no blank-line
-    # runs) takes this path; output and spans are byte-identical to the
-    # segment-run path below (pinned by the parity/property tests).
-    if _RE_BLANKLINES.search(text) is None and _RE_SPACERUNS_EFFECTIVE.search(text) is None:
-        stripped = text.strip()
-        if not stripped:
-            return "", []
-        start = len(text) - len(text.lstrip())
-        return stripped, [(start, start + len(stripped))]
-    segs = [(len(text), 0, len(text), 1)]
-    s, segs = _sub_segmented(_RE_BLANKLINES, "\n\n", text, segs)
-    s, segs = _sub_segmented(_RE_SPACERUNS_EFFECTIVE, " ", s, segs)
-    # strip(): drop leading/trailing whitespace (and its provenance)
-    stripped = s.strip()
-    if not stripped:
-        return "", []
-    start = len(s) - len(s.lstrip())
-    idx = off = 0
-    if start:
-        idx, off, _, _ = _consume(segs, idx, off, start, None)
-    kept: list = []
-    _consume(segs, idx, off, len(stripped), kept)
-    # merge in order (sources are monotonic along the string)
-    spans: list = []
-    for _olen, lo, hi, _stride in kept:
-        if spans and lo <= spans[-1][1]:
-            if hi > spans[-1][1]:
-                spans[-1] = (spans[-1][0], hi)
-        else:
-            spans.append((lo, hi))
-    return stripped, spans
+    return cleaned, [(len(text) - len(text.lstrip()), len(text.rstrip()))]

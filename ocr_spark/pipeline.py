@@ -24,24 +24,16 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: F401
 
 from ocr_spark.operators.aggregate import conv_text_salted, partition_metrics
-from ocr_spark.operators.extract import extract, extract_deduped, salt_repartition
+from ocr_spark.operators.extract import extract, extract_deduped
 
 
-def run_extraction(
-    transcripts: DataFrame,
-    dedupe: bool = True,
-    salt_partitions: int | None = None,
-) -> DataFrame:
+def run_extraction(transcripts: DataFrame, dedupe: bool = True) -> DataFrame:
     """transcripts -> extracted (lazy; no action triggered).
 
     ``dedupe`` picks ``extract_deduped`` (one shuffle; the parser runs
     once per unique payload) over the narrow ``extract``; both run the
-    same Arrow worker and give the same rows. ``salt_partitions`` adds a
-    turn-bucket-salted repartition before extraction."""
-    df = transcripts
-    if salt_partitions:
-        df = salt_repartition(df, salt_partitions)
-    return extract_deduped(df) if dedupe else extract(df)
+    same Arrow worker and give the same rows."""
+    return extract_deduped(transcripts) if dedupe else extract(transcripts)
 
 
 def run_pipeline(transcripts: DataFrame, dedupe: bool = True):

@@ -30,8 +30,7 @@ def _t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     which strands a hash-bound stage on 2 tasks no matter how wide the
     cluster is. One cheap round-robin repartition of the raw rows
     restores full parallelism. Gated: sources that already arrive in
-    >= cores splits (any real 100 TB table) pass through untouched —
-    the same under-parallelized-source rule as ``maybe_salt``."""
+    >= cores splits (any real 100 TB table) pass through untouched."""
     df = _t(spark, sf_dir, name)
     cores = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < cores:

@@ -627,16 +627,17 @@ def resolve_messages_incremental(
     # row-conservation guard: a batch parent in NEITHER the resolved
     # table nor the batch (stale/partial resolved table — the exact
     # failure mode of continuous ingestion) would silently vanish from
-    # the doubling join; duplicate ids would silently fan out. Both are
-    # one cheap count on the checkpointed output away from being loud.
+    # the doubling join; one cheap count on the checkpointed output makes
+    # that loud. It is not a duplicate-id check: duplicates resolved at
+    # init never enter the join and leave the count unchanged, so
+    # validate_forest is what catches them.
     n_in, n_out = b.count(), out.count()
     if n_out != n_in:
         raise RuntimeError(
             f"resolve_messages_incremental emitted {n_out} rows for "
             f"{n_in} batch messages: parents missing from both the "
-            "resolved table and the batch (stale resolution table?) or "
-            "duplicate msg_ids — run validate_forest over the batch "
-            "plus resolved keys first"
+            "resolved table and the batch (stale resolution table?) — "
+            "run validate_forest over the batch plus resolved keys first"
         )
     return out
 

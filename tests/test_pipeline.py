@@ -69,54 +69,6 @@ def test_uncommitted_snapshot_invisible(spark, tmp_path):
     assert visible.count() == full.count()  # crashed snapshot ignored
 
 
-def test_skew_spread_across_partitions(spark):
-    """A giant conversation salted across tasks: no partition holds more
-    than ~2 buckets' worth of its turns (straggler guard, SURVEY §5.5)."""
-    from ocr_spark.operators.extract import salt_repartition
-    from pyspark.sql import functions as F
-
-    rows = [
-        (f"giant", i, "user", f"turn {i} text", "", fixtures.EPOCH) for i in range(2000)
-    ]
-    df = spark.createDataFrame(rows, fixtures.TRANSCRIPT_COLUMNS)
-    salted = salt_repartition(df, 16, bucket_turns=128)
-    per_part = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    counts = [r["count"] for r in per_part]
-    assert len(counts) > 4  # spread, not hot-spotted
-    assert max(counts) <= 128 * 3  # no partition holds the whole conversation
-
-
-def test_maybe_salt_detects_skew_without_repartitioning(spark):
-    """The probe reports skew (for lineage) but must NOT shuffle the raw
-    payloads before the narrow extraction — scan splits bound task size,
-    and the salted rollup is where skew is actually neutralized."""
-    from ocr_spark.operators.extract import maybe_salt
-
-    uniform = [
-        (f"c{c}", i, "user", "text", "", fixtures.EPOCH)
-        for c in range(50)
-        for i in range(20)
-    ]
-    udf_ = spark.createDataFrame(uniform, fixtures.TRANSCRIPT_COLUMNS)
-    _, skew_flag = maybe_salt(udf_, 2, sample_fraction=1.0)
-    assert skew_flag is False
-
-    skewed = uniform + [
-        ("giant", i, "user", "text", "", fixtures.EPOCH) for i in range(5000)
-    ]
-    sdf = spark.createDataFrame(skewed, fixtures.TRANSCRIPT_COLUMNS)
-    out, skew_flag = maybe_salt(sdf, 2, sample_fraction=1.0)
-    assert skew_flag is True
-    assert out.count() == len(skewed)
-    # adequately-parallel source: the returned plan is the input, unshuffled
-    assert out is sdf
-
-
 def test_incremental_runs_after_compaction_never_collide(spark, tmp_path):
     """Indices are allocate-only: repeated incremental runs after a
     compaction (which makes indices sparse) must neither overwrite a

@@ -2,14 +2,15 @@
 
 These pin the *shape* of the plans Catalyst produces, not just results:
 filters and projections must reach the parquet scan, small dimensions
-must broadcast, the extraction stage must stay narrow, and the salted
-rollup must be exactly two exchanges. A regression here is a silent
-10-100x at scale even though every correctness test stays green.
+must broadcast, the extraction stage must stay narrow, and the
+two-phase rollup must be exactly two exchanges. A regression here is a
+silent 10-100x at scale even though every correctness test stays green.
 """
 
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -18,7 +19,7 @@ from pyspark.sql import functions as F
 import ocr_spark.queries as Q
 from ocr_spark import fixtures
 from ocr_spark.operators.aggregate import conv_text_salted
-from ocr_spark.operators.extract import extract, salt_repartition
+from ocr_spark.operators.extract import extract
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -33,8 +34,6 @@ def plan(df, mode: str = "formatted") -> str:
 def n_ops(p: str, op: str) -> int:
     """Count physical operators via their '(N) Op' detail headers
     (formatted mode prints each node in the tree AND a detail section)."""
-    import re
-
     return len(re.findall(rf"^\(\d+\) {op}", p, flags=re.MULTILINE))
 
 
@@ -103,20 +102,25 @@ def test_extract_deduped_one_exchange_one_arrow_node(spark, transcripts_parquet)
     assert n_ops(p, "MapInPandas") == 0
 
 
-def test_salted_rollup_is_two_phase(spark, transcripts_parquet):
+def test_run_extraction_is_one_payload_exchange(spark, transcripts_parquet):
+    """What production runs (``run_resumable`` -> ``run_extraction``):
+    the only shuffle is the payload-hash dedup, and nothing repartitions
+    the raw rows by conversation before it."""
+    from ocr_spark.pipeline import run_extraction
+
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(conv_text_salted(extract(salt_repartition(t, 8))))
-    # exchanges: salt repartition + bucket-agg shuffle + conv-agg shuffle
-    assert n_ops(p, "Exchange") == 3
-    assert "MapInArrow" in p
+    p = plan(run_extraction(t))
+    assert n_ops(p, "Exchange") == 1
+    assert re.search(r"hashpartitioning\(payload_sha#\d+", p), p
+    assert "REPARTITION_BY_NUM" not in p
 
 
-def test_default_pipeline_is_two_exchanges(spark, transcripts_parquet):
-    # production default: NO shuffle before the narrow extraction (scan
-    # splits bound task size); the only exchanges are the rollup's
-    # bucket-partial and conversation-final aggregations
-    t = spark.read.parquet(transcripts_parquet)
-    p = plan(conv_text_salted(extract(t)))
+def test_snapshot_rollup_is_two_phase(spark, transcripts_parquet, tmp_path):
+    """Production rolls up the committed snapshot: exactly the bucket
+    partial-agg shuffle and the conversation final-agg shuffle."""
+    snap = str(tmp_path / "snap")
+    extract(spark.read.parquet(transcripts_parquet)).write.parquet(snap)
+    p = plan(conv_text_salted(spark.read.parquet(snap)))
     assert n_ops(p, "Exchange") == 2
 
 
@@ -466,8 +470,6 @@ def test_tpch_q5_supplier_dims_broadcast_dates_push(spark):
     p = plan(Q.q_tpch_q5_local_supplier(spark, SF_DIR))
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    import re
-
     pushed = [ln for ln in p.splitlines() if "PushedFilters" in ln]
     assert any(re.search(r"GreaterThanOrEqual\(o_orderdate", ln) for ln in pushed), p
 

@@ -21,12 +21,19 @@ from ocr_spark.oracle import (
     parse_ocr_lines,
     strip_html,
 )
+from ocr_spark.oracle.cleanup import _clean_text_with_spans_ref
 from ocr_spark.oracle.payloads import filter_by_confidence
 
 text_like = st.text(
     alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)), max_size=400
 )
 wsp_heavy = st.text(alphabet=" \t\nabc<>/.", max_size=300)
+
+# whitespace vocabulary wider than \s: includes \v \f, ASCII separators
+# \x1c-\x1f (str.isspace() but NOT re-\s), NBSP, and ideographic space —
+# the chars where Python's three whitespace notions (str.strip, re \s,
+# str.isspace) disagree with each other and with Java/RE2
+wsp_exotic = st.text(alphabet=" \t\n\r\v\f\x1c\x1d\x1e\x1f\xa0　ab.", max_size=200)
 
 
 @settings(max_examples=200, deadline=None)
@@ -54,10 +61,8 @@ def test_cleanup_spans_reconstruct_output(s):
 
 
 @settings(max_examples=300, deadline=None)
-@given(wsp_heavy)
+@given(st.one_of(wsp_heavy, wsp_exotic))
 def test_cleanup_span_fastpath_matches_reference(s):
-    from ocr_spark.oracle.cleanup import _clean_text_with_spans_ref
-
     assert clean_text_with_spans(s) == _clean_text_with_spans_ref(s)
 
 
@@ -179,24 +184,19 @@ def test_ocr_lines_confidence_threshold_exact(scores, texts):
     assert len(lines) == expect
 
 
-# whitespace vocabulary wider than \s: includes \v \f, ASCII separators
-# \x1c-\x1f (str.isspace() but NOT re-\s), NBSP, and ideographic space —
-# the chars where Python's three whitespace notions (str.strip, re \s,
-# str.isspace) disagree with each other and with Java/RE2
-wsp_exotic = st.text(alphabet=" \t\n\r\v\f\x1c\x1d\x1e\x1f\xa0　ab.", max_size=200)
-
-
 @settings(max_examples=500, deadline=None)
 @given(st.one_of(wsp_heavy, wsp_exotic))
 def test_cleanup_spans_single_interval_invariant(s):
-    """The provenance invariant the DuckDB oracle of
-    extract_text_span_parity relies on (ocr_spark/oracles.py), and that a
-    faster text path may exploit: a text-kind turn's merged spans are
+    """The provenance invariant that ``clean_text_with_spans`` computes
+    its spans by, and that the DuckDB oracle of extract_text_span_parity
+    relies on (ocr_spark/oracles.py): a text-kind turn's merged spans are
     always EXACTLY ONE interval (len(raw)-len(raw.lstrip()),
     len(raw.rstrip())) — or none when the cleaned output is empty —
     because both cleanup substitutions tile the raw string contiguously
-    (replacements inherit the union interval of their matched run)."""
-    cleaned, spans = clean_text_with_spans(s)
+    (replacements inherit the union interval of their matched run).
+    Checked on the per-character reference; checking it on
+    ``clean_text_with_spans`` would test the rule against itself."""
+    cleaned, spans = _clean_text_with_spans_ref(s)
     if cleaned == "":
         assert spans == []
     else:

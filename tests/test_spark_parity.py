@@ -1,6 +1,6 @@
 """Golden equality: the distributed pipeline matches the frozen oracle
 byte-for-byte under a stable sort by (conv_id, turn_idx), regardless of
-partitioning, dedupe-join plan, or salting (the north rule's per-turn
+partitioning or dedupe-join plan (the north rule's per-turn
 text-equality invariant)."""
 
 import pytest
@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark import fixtures
 from ocr_spark.operators.aggregate import conv_text, conv_text_salted, partition_metrics
-from ocr_spark.operators.extract import extract, extract_deduped, salt_repartition
+from ocr_spark.operators.extract import extract, extract_deduped
 from ocr_spark.oracle import aggregate_conversation, extract_turn
 
 N_CONVS = 40  # every archetype appears many times (~700 turns)
@@ -58,8 +58,8 @@ def test_extract_deduped_same_result(spark, transcripts, golden):
     _assert_matches_golden(rows, golden)
 
 
-def test_salted_repartition_same_result(spark, transcripts, golden):
-    rows = extract(salt_repartition(transcripts, 16, bucket_turns=4)).collect()
+def test_extract_partitioning_invariant(spark, transcripts, golden):
+    rows = extract(transcripts.repartition(16, "conv_id")).collect()
     _assert_matches_golden(rows, golden)
 
 

@@ -45,11 +45,7 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     out_dir = str(tmp_path / "out")
 
     summary = _submit(
-        zip_path,
-        input_dir,
-        out_dir,
-        ("--salt-partitions", "8"),
-        conf=("spark.sql.codegen.maxFields=200",),
+        zip_path, input_dir, out_dir, conf=("spark.sql.codegen.maxFields=200",)
     )
     assert summary["turns_committed"] == n_turns
     assert summary["conversations"] == 10

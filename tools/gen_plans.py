@@ -31,16 +31,19 @@ def main() -> None:
     import ocr_spark.queries as Q
     from ocr_spark import fixtures
     from ocr_spark.operators.aggregate import conv_text_salted
-    from ocr_spark.operators.extract import extract, salt_repartition
+    from ocr_spark.operators.extract import extract
+    from ocr_spark.pipeline import run_extraction
 
     tpath = "/tmp/ocr_spark_plans_input"
     fixtures.transcripts_df(spark, 20).write.mode("overwrite").parquet(tpath)
     t = spark.read.parquet(tpath)
+    snap = "/tmp/ocr_spark_plans_snapshot"
+    extract(t).write.mode("overwrite").parquet(snap)
 
     sections = [
         (
             "Extraction stage (narrow)",
-            "Scan -> column-pruned Project -> MapInPandas. ZERO exchanges: "
+            "Scan -> column-pruned Project -> MapInArrow. ZERO exchanges: "
             "extraction cost scales linearly with input splits and never "
             "shuffles the raw text. Input split size is the knob that "
             "matters (see session.py note on maxPartitionBytes: size splits "
@@ -48,23 +51,24 @@ def main() -> None:
             plan(extract(t)),
         ),
         (
-            "Default pipeline: narrow extract + two-phase ordered rollup",
-            "The production default is exactly 2 exchanges, both in the "
-            "rollup: (1) partial ordered-concat keyed (conv_id, turn "
-            "bucket) so no single reducer sees a whole 10^4-turn agent "
-            "trace; (2) final merge of a few bucket rows per conversation. "
-            "Extraction itself never shuffles — byte-bounded scan splits "
-            "already balance per-task work, so conversation-length skew "
-            "cannot skew a narrow map stage.",
-            plan(conv_text_salted(extract(t))),
+            "Production extraction: run_extraction (deduplicated)",
+            "What run_resumable runs. Exactly 1 exchange: "
+            "hashpartitioning on payload_sha, so the Arrow worker parses "
+            "each unique payload once and an explode fans the result back "
+            "out to every (conv_id, turn_idx) that carried it. Nothing "
+            "repartitions the raw rows by conversation first: the payload "
+            "shuffle would discard that partitioning anyway.",
+            plan(run_extraction(t)),
         ),
         (
-            "Salted extraction variant (shuffle-fed stages only)",
-            "When extraction is fed by a keyed shuffle rather than a scan "
-            "(e.g. after a join), salt_repartition spreads giant "
-            "conversations across tasks (salt = conv_id + turn_idx div "
-            "256, never a sort key), adding one exchange for 3 total.",
-            plan(conv_text_salted(extract(salt_repartition(t, 8)))),
+            "Production rollup: two-phase ordered concat over the snapshot",
+            "The rollup reads the committed snapshot (nested columns pruned "
+            "at the scan) and has exactly 2 exchanges: (1) partial "
+            "ordered-concat keyed (conv_id, turn bucket) so no single "
+            "reducer sees a whole 10^4-turn agent trace; (2) final merge of "
+            "a few bucket rows per conversation. This is where "
+            "conversation-length skew is handled.",
+            plan(conv_text_salted(spark.read.parquet(snap))),
         ),
         (
             "TPC-H Q6: pushdown + pruning",
