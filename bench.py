@@ -25,9 +25,11 @@ archetype: byte-identical payloads with and without an 80%-monster
 conversation; writes BENCH/SKEW.md). BENCH/EXTRACT_AB.md keeps the last
 A/B of the extraction shapes that were removed in favour of ``extract``.
 
-The timed extraction job (SURVEY §3, Spark recast of E3): parquet scan
+The timed job is the narrow-extract regression guard, not the flagship
+job (``perfbench/run.py`` times that: deduplicated extraction, resume and
+snapshot commit through ``pipeline.run_resumable``). Here: parquet scan
 -> narrow ``extract`` (the ``mapInArrow`` worker loop; no repartition)
--> parquet snapshot write (the checkpoint) -> scan snapshot -> two-phase
+-> plain parquet write (no resume or commit) -> scan it -> two-phase
 ordered conversation rollup and partition metrics. Dedupe-before-UDF
 (A6 memoization) is off here: it pays when the UDF is expensive (real
 OCR inference) and the duplicate rate is high; with a cheap parser and
@@ -224,7 +226,8 @@ def _ensure_input(spark, n_convs: int) -> str:
 
 
 def _extraction_runner(spark, input_path: str, cpus: int):
-    """Build the flagship extraction run closure; returns (one_run, snap).
+    """Build the narrow-extract regression guard's run closure; returns
+    (one_run, snap).
 
     Timing policy is best-of-N full runs — the steady-state shape of the
     target workload (a long-running cluster job runs this DAG thousands

@@ -1,11 +1,12 @@
 """End-to-end pipeline: transcripts -> extracted + conv_text + metrics.
 
 Spark recast of the reference's flagship hybrid-extract lifecycle
-(SURVEY §3 E3): scan -> classify/route/extract (narrow, vectorized) ->
-snapshot write (the checkpoint) -> ordered rollup. The shuffle is the
-barrier; the committed snapshot is the cache; resume is an anti-join
-against already-committed keys (≙ the sha256 Redis result cache,
-``services/redis_service.py:135-202``, minus the TTL).
+(SURVEY §3 E3): scan -> classify/route/extract (vectorized, with one
+payload-hash shuffle so each unique payload is parsed once) -> snapshot
+write (the checkpoint) -> ordered rollup. The committed snapshot is the
+cache; resume is an anti-join against already-committed keys (≙ the
+sha256 Redis result cache, ``services/redis_service.py:135-202``, minus
+the TTL).
 
 Snapshot layout: each run appends ``snapshot=N`` subdirectories of
 parquet under the output root, with a ``_COMMITTED`` marker written only
@@ -19,6 +20,8 @@ from __future__ import annotations
 
 import contextlib as _contextlib
 import os
+import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: F401
@@ -91,19 +94,23 @@ def _snapshot_dirs(root: str) -> list[str]:
     ]
 
 
+def _snapshot_idx(path: str) -> int:
+    """N of a ``snapshot=N`` dir path or name."""
+    return int(os.path.basename(path).split("=", 1)[1])
+
+
 def _next_snapshot_idx(root: str) -> int:
     """1 + max index over ALL snapshot dirs (committed, uncommitted, or
     retired) — indices are allocate-only, never reused, so an incremental
     run can never target a directory another reader is consuming (the
     count-based scheme collided after compaction made indices sparse)."""
-    indices = [
-        int(os.path.basename(p).split("=", 1)[1]) for p in _snapshot_dirs(root)
-    ]
-    return 1 + max(indices, default=-1)
+    return 1 + max(map(_snapshot_idx, _snapshot_dirs(root)), default=-1)
 
 
-def _snapshot_idx(path: str) -> int:
-    return int(os.path.basename(path).split("=", 1)[1])
+def _metrics_dir(root: str, snap: str = "") -> str:
+    """The ``metrics/`` twin of snapshot ``snap`` (a dir path or name);
+    the metrics root itself when ``snap`` is empty."""
+    return os.path.join(root, "metrics", os.path.basename(snap))
 
 
 def _superseded_names(root: str, as_of: int | None = None) -> set[str]:
@@ -123,6 +130,12 @@ def _superseded_names(root: str, as_of: int | None = None) -> set[str]:
             with open(sup) as fh:
                 out.update(ln.strip() for ln in fh if ln.strip())
     return out
+
+
+def _committed_state(root: str) -> set[str]:
+    """Names of the committed snapshots: what a writer plans against and
+    ``_publish`` re-checks under the commit lock."""
+    return {os.path.basename(p) for p in _committed_snapshots(root)}
 
 
 def _committed_snapshots(root: str, as_of: int | None = None) -> list[str]:
@@ -346,20 +359,15 @@ def delete_turns(spark: SparkSession, root: str, keys: DataFrame) -> int:
     a delete file from the data it masks (``jobs/maintenance_job.py``
     orders it that way). Returns the delete snapshot's index."""
     snap_dir = _allocate_snapshot_dir(root)
-    snap_idx = _snapshot_idx(snap_dir)
-    (
-        keys.select("conv_id", "turn_idx")
-        .distinct()
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(snap_dir)
+    _stage_parquet_into(
+        keys.select("conv_id", "turn_idx").distinct().coalesce(1), snap_dir
     )
     with open(os.path.join(snap_dir, _DELETES_FLAG), "w") as fh:
         fh.write("ok\n")
-    with _commit_lock(root):
-        with open(os.path.join(snap_dir, _MARKER), "w") as fh:
-            fh.write("ok\n")
-    return snap_idx
+    # no base state: a delete does not depend on what else committed, so
+    # it never needs to re-plan
+    _publish(root, snap_dir)
+    return _snapshot_idx(snap_dir)
 
 
 def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
@@ -388,11 +396,11 @@ def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
         rows.append(
             (
                 name,
-                int(name.split("=", 1)[1]),
+                _snapshot_idx(name),
                 committed_at,
                 n_files,
                 n_bytes,
-                os.path.isdir(os.path.join(root, "metrics", name)),
+                os.path.isdir(_metrics_dir(root, name)),
                 os.path.exists(os.path.join(p, _DELETES_FLAG)),
             )
         )
@@ -439,8 +447,6 @@ def _stage_parquet_into(df: DataFrame, allocated_dir: str) -> None:
         df.write.parquet(staging)
         os.rename(staging, allocated_dir)
     except BaseException:
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
         raise
 
@@ -452,8 +458,6 @@ def _commit_lock(root: str, timeout_s: float = 60.0, stale_s: float = 300.0):
     never across a Spark job — so contention is microseconds. A lock
     older than ``stale_s`` is presumed abandoned by a crashed writer and
     broken (the Iceberg-catalog analog is the metastore lock timeout)."""
-    import time
-
     lock = os.path.join(root, "_COMMIT_LOCK")
     os.makedirs(root, exist_ok=True)
     deadline = time.time() + timeout_s
@@ -476,6 +480,38 @@ def _commit_lock(root: str, timeout_s: float = 60.0, stale_s: float = 300.0):
     finally:
         with _contextlib.suppress(OSError):
             os.rmdir(lock)
+
+
+def _publish(
+    root: str,
+    snap_dir: str,
+    base_state: set[str] | None = None,
+    race_hook=None,
+) -> bool:
+    """The store's one commit point: write ``snap_dir``'s ``_COMMITTED``
+    marker under the commit lock. With ``base_state`` (the committed set
+    a writer planned against) the commit is optimistic: it publishes only
+    if that set is unchanged — any concurrent commit, delete or expiry
+    forces the writer to re-plan (Iceberg's serializable isolation). A
+    lost commit drops the staged snapshot and its metrics; returns
+    whether the commit won. ``race_hook`` runs just before validation
+    (the writers' test seam for interleaving a competing commit)."""
+    if race_hook is not None:
+        race_hook()
+    with _commit_lock(root):
+        won = base_state is None or _committed_state(root) == base_state
+        if won:
+            with open(os.path.join(snap_dir, _MARKER), "w") as fh:
+                fh.write("ok\n")
+    if not won:
+        _drop_snapshot(root, snap_dir)
+    return won
+
+
+def _drop_snapshot(root: str, snap: str) -> None:
+    """Remove snapshot ``snap`` (a dir path or name) and its metrics."""
+    shutil.rmtree(os.path.join(root, os.path.basename(snap)), ignore_errors=True)
+    shutil.rmtree(_metrics_dir(root, snap), ignore_errors=True)
 
 
 def run_resumable(
@@ -512,18 +548,15 @@ def run_resumable(
     ``_race_hook`` is a test seam: called after staging, before commit
     validation, so tests can interleave a competing commit.
     """
-    import shutil
-
     run_id = run_id or uuid.uuid4().hex[:12]
     for _attempt in range(max_commit_retries + 1):
-        base_state = {os.path.basename(p) for p in _committed_snapshots(out_root)}
+        base_state = _committed_state(out_root)
         existing = read_snapshots(spark, out_root)
         todo = transcripts
         if existing is not None:
             done_keys = existing.select("conv_id", "turn_idx")
             todo = transcripts.join(done_keys, ["conv_id", "turn_idx"], "left_anti")
         snap_dir = _allocate_snapshot_dir(out_root)
-        snap_idx = int(os.path.basename(snap_dir).split("=", 1)[1])
         extracted = run_extraction(todo)
         _stage_parquet_into(extracted, snap_dir)
         committed = spark.read.parquet(snap_dir)
@@ -533,37 +566,15 @@ def run_resumable(
             # (If a racing writer committed since we planned, the next
             # resumable run simply picks its rows up — an empty staged
             # set can't conflict with anything.)
-            shutil.rmtree(snap_dir, ignore_errors=True)
+            _drop_snapshot(out_root, snap_dir)
             return existing
         metrics = partition_metrics(committed, run_id=run_id).withColumn(
-            "snapshot", F.lit(snap_idx)
+            "snapshot", F.lit(_snapshot_idx(snap_dir))
         )
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(out_root, "metrics", f"snapshot={snap_idx}")
-        )
-        if _race_hook is not None:
-            _race_hook()
-        # optimistic commit: publish only if the table state we planned
-        # against is still current (conservative validation — any
-        # concurrent commit forces a re-plan, like Iceberg's
-        # serializable isolation level)
-        won = False
-        with _commit_lock(out_root):
-            now_state = {
-                os.path.basename(p) for p in _committed_snapshots(out_root)
-            }
-            if now_state == base_state:
-                with open(os.path.join(snap_dir, _MARKER), "w") as fh:
-                    fh.write("ok\n")
-                won = True
-        if won:
+        metrics.write.mode("overwrite").parquet(_metrics_dir(out_root, snap_dir))
+        if _publish(out_root, snap_dir, base_state, _race_hook):
             return read_snapshots(spark, out_root)
-        # lost the race: discard staged data + metrics, re-plan
-        shutil.rmtree(snap_dir, ignore_errors=True)
-        shutil.rmtree(
-            os.path.join(out_root, "metrics", f"snapshot={snap_idx}"),
-            ignore_errors=True,
-        )
+        # lost the race: _publish dropped the staged snapshot; re-plan
     raise RuntimeError(
         f"run_resumable lost the commit race {max_commit_retries + 1} times "
         f"at {out_root}; raise max_commit_retries or serialize the writers"
@@ -583,7 +594,6 @@ def _tag_protected_max(root: str) -> int:
 def compact_snapshots(
     spark: SparkSession,
     out_root: str,
-    target_partitions: int | None = None,
     max_commit_retries: int = 3,
     respect_tags: bool = True,
     _race_hook=None,
@@ -604,14 +614,13 @@ def compact_snapshots(
     replacement is durable; a crash at any point leaves a complete,
     readable, non-duplicated table, and leftovers are vacuumable.
 
-    Optimistic commit validation (same protocol as ``run_resumable``):
-    the marker is written only if — under the commit mutex — the
-    committed set is still exactly the one the rewrite planned against.
-    Without this, a ``delete_turns`` snapshot committing between the
-    path listing and the marker write would silently lose the deletion:
-    the compacted rows land at an index HIGHER than the delete's, so the
-    merge-on-read ``_del_idx < _row_snap`` filter would resurrect the
-    deleted keys forever. A lost race discards the staged rewrite and
+    The commit is optimistic, as in ``run_resumable``: ``_publish``
+    writes the marker only if the committed set is still exactly the one
+    the rewrite planned against. Without this, a ``delete_turns``
+    snapshot committing between the path listing and the marker write
+    would silently lose the deletion: the compacted rows land at an index
+    HIGHER than the delete's, so the merge-on-read ``_del_idx <
+    _row_snap`` filter would resurrect the deleted keys forever. A lost race discards the staged rewrite and
     re-plans (up to ``max_commit_retries`` times, then returns 0 — a
     compaction that keeps losing is safe to skip; the next maintenance
     run retries).
@@ -626,8 +635,6 @@ def compact_snapshots(
     Old lineage/metrics rows are carried into the compacted snapshot's
     metrics table. Returns the number of snapshots compacted.
     """
-    import shutil
-
     for _attempt in range(max_commit_retries + 1):
         all_committed = _committed_snapshots(out_root)
         base_state = {os.path.basename(p) for p in all_committed}
@@ -665,55 +672,25 @@ def compact_snapshots(
         df = _read_snapshot_paths(spark, paths)
         if df is None:
             return 0
-        if target_partitions:
-            df = df.repartition(target_partitions, "conv_id")
-        # stage into an atomically-allocated dir (the mkdir reservation
-        # holds the index; _stage_parquet_into fills it without the
-        # delete-recreate window a mode("overwrite") write would open)
         final_dir = _allocate_snapshot_dir(out_root)
-        next_idx = _snapshot_idx(final_dir)
         _stage_parquet_into(df, final_dir)
         # carry lineage/metrics history into the compacted snapshot
         old_metric_dirs = [
-            os.path.join(out_root, "metrics", os.path.basename(p))
+            _metrics_dir(out_root, p)
             for p in paths
-            if os.path.isdir(
-                os.path.join(out_root, "metrics", os.path.basename(p))
-            )
+            if os.path.isdir(_metrics_dir(out_root, p))
         ]
         if old_metric_dirs:
             spark.read.parquet(*old_metric_dirs).write.mode(
                 "overwrite"
-            ).parquet(os.path.join(out_root, "metrics", f"snapshot={next_idx}"))
+            ).parquet(_metrics_dir(out_root, final_dir))
         with open(os.path.join(final_dir, _SUPERSEDES), "w") as fh:
             fh.write("\n".join(os.path.basename(p) for p in paths) + "\n")
-        if _race_hook is not None:
-            _race_hook()
-        # the commit point: publish only if no snapshot committed (or
-        # expired) since we planned — any change forces a re-plan
-        won = False
-        with _commit_lock(out_root):
-            now_state = {
-                os.path.basename(p) for p in _committed_snapshots(out_root)
-            }
-            if now_state == base_state:
-                with open(os.path.join(final_dir, _MARKER), "w") as fh:
-                    fh.write("ok\n")
-                won = True
-        if not won:
-            shutil.rmtree(final_dir, ignore_errors=True)
-            shutil.rmtree(
-                os.path.join(out_root, "metrics", f"snapshot={next_idx}"),
-                ignore_errors=True,
-            )
-            continue
+        if not _publish(out_root, final_dir, base_state, _race_hook):
+            continue  # lost the race: staged rewrite dropped; re-plan
         # lazy cleanup (also vacuum's job if we crash mid-loop)
         for p in paths:
-            shutil.rmtree(p, ignore_errors=True)
-            shutil.rmtree(
-                os.path.join(out_root, "metrics", os.path.basename(p)),
-                ignore_errors=True,
-            )
+            _drop_snapshot(out_root, p)
         return len(paths)
     return 0
 
@@ -747,17 +724,11 @@ def expire_snapshots(
     data is deleted, so a crash mid-expiry leaves unpublished dirs that
     `vacuum_uncommitted` removes — never a half-visible snapshot.
     Returns the removed snapshot paths."""
-    import shutil
-    import time
-
     keep_last = max(keep_last, 0)
     # physically drop tombstoned dirs first: expiring a compacted
     # snapshot must not resurrect old dirs whose markers it tombstones
     vacuum_uncommitted(out_root)
-    paths = sorted(
-        _committed_snapshots(out_root),
-        key=lambda p: int(os.path.basename(p).split("=", 1)[1]),
-    )
+    paths = sorted(_committed_snapshots(out_root), key=_snapshot_idx)
     # keep_last=0 alone means "expire everything"; combined with a TTL it
     # means "no count-based retention — age alone decides"
     if keep_last:
@@ -786,11 +757,7 @@ def expire_snapshots(
     removed = []
     for p in victims:
         os.remove(os.path.join(p, _MARKER))  # unpublish first
-        shutil.rmtree(p, ignore_errors=True)
-        shutil.rmtree(
-            os.path.join(out_root, "metrics", os.path.basename(p)),
-            ignore_errors=True,
-        )
+        _drop_snapshot(out_root, p)
         removed.append(p)
     return removed
 
@@ -798,12 +765,10 @@ def expire_snapshots(
 def vacuum_uncommitted(out_root: str) -> list[str]:
     """Maintenance: drop snapshot directories that are invisible to
     readers — crashed runs (no ``_COMMITTED`` marker) and compacted-away
-    dirs whose names appear in a committed ``_SUPERSEDES`` list — plus a
-    leftover ``_compact_tmp`` and any ``metrics/snapshot=N`` directory
+    dirs whose names appear in a committed ``_SUPERSEDES`` list — plus
+    leftover ``_staging-*`` dirs and any ``metrics/snapshot=N`` directory
     orphaned by a crashed compaction/expiry (no committed snapshot of
     that name). Returns the removed paths."""
-    import shutil
-
     removed = []
     if not os.path.isdir(out_root):
         return removed
@@ -813,9 +778,6 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
         if not os.path.exists(os.path.join(path, _MARKER)) or name in dead:
             shutil.rmtree(path, ignore_errors=True)
             removed.append(path)
-    if os.path.isdir(os.path.join(out_root, "_compact_tmp")):
-        shutil.rmtree(os.path.join(out_root, "_compact_tmp"), ignore_errors=True)
-        removed.append(os.path.join(out_root, "_compact_tmp"))
     # _staging-* dirs are _stage_parquet_into's pre-rename scratch; one
     # left behind means the writer died mid-write (a kill skips its own
     # cleanup). Reaping them here rides the same contract as the
@@ -826,11 +788,11 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
             path = os.path.join(out_root, name)
             shutil.rmtree(path, ignore_errors=True)
             removed.append(path)
-    live = {os.path.basename(p) for p in _committed_snapshots(out_root)}
-    metrics_root = os.path.join(out_root, "metrics")
+    live = _committed_state(out_root)
+    metrics_root = _metrics_dir(out_root)
     if os.path.isdir(metrics_root):
         for name in sorted(os.listdir(metrics_root)):
-            path = os.path.join(metrics_root, name)
+            path = _metrics_dir(out_root, name)
             if name.startswith("snapshot=") and name not in live:
                 shutil.rmtree(path, ignore_errors=True)
                 removed.append(path)
@@ -840,9 +802,9 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
 def read_metrics(spark: SparkSession, out_root: str) -> DataFrame | None:
     """All lineage/metrics rows for committed snapshots under out_root."""
     paths = [
-        os.path.join(out_root, "metrics", os.path.basename(p))
+        _metrics_dir(out_root, p)
         for p in _committed_snapshots(out_root)
-        if os.path.isdir(os.path.join(out_root, "metrics", os.path.basename(p)))
+        if os.path.isdir(_metrics_dir(out_root, p))
     ]
     if not paths:
         return None

@@ -240,7 +240,7 @@ def test_compaction_preserves_table_and_resume(spark, tmp_path):
     run_resumable(spark, half, root)
     run_resumable(spark, full, root)
     before = read_snapshots(spark, root).orderBy("conv_id", "turn_idx").collect()
-    assert compact_snapshots(spark, root, target_partitions=2) == 2
+    assert compact_snapshots(spark, root) == 2
     import os
 
     snaps = [n for n in os.listdir(root) if n.startswith("snapshot=")]
@@ -868,3 +868,71 @@ def test_vacuum_reaps_stale_staging_dirs(spark, tmp_path):
         name.startswith("_staging-") for name in os.listdir(root)
     )
     assert read_snapshots(spark, root).count() == n
+
+
+def test_delete_turns_stages_before_filling_its_reserved_dir(
+    spark, tmp_path, monkeypatch
+):
+    """delete_turns fills its reserved snapshot dir by renaming a staged
+    ``_staging-*`` dir onto it. A ``mode("overwrite")`` write into the
+    reservation would delete the dir first, and in that window a
+    concurrent writer's allocation could claim the same index."""
+    import os
+
+    from ocr_spark.pipeline import delete_turns
+
+    root = str(tmp_path / "store")
+    full = fixtures.transcripts_df(spark, 4)
+    run_resumable(spark, full, root)  # snapshot=0
+    victims = read_snapshots(spark, root).filter("turn_idx = 0")
+
+    renames = []
+    real_rename = os.rename
+
+    def recording_rename(src, dst, *args, **kwargs):
+        renames.append((os.path.basename(src), os.path.basename(dst)))
+        return real_rename(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", recording_rename)
+    del_idx = delete_turns(spark, root, victims.select("conv_id", "turn_idx"))
+    monkeypatch.undo()
+
+    assert [dst for src, dst in renames if src.startswith("_staging-")] == [
+        f"snapshot={del_idx}"
+    ]
+    assert read_snapshots(spark, root).filter("turn_idx = 0").count() == 0
+
+
+def test_publish_is_the_only_marker_write():
+    """The store has one commit point: the only function in pipeline.py
+    that opens a ``_MARKER`` path for writing is ``_publish``."""
+    import ast
+    import inspect
+
+    from ocr_spark import pipeline
+
+    def writes_marker(node):
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "open"
+            and any(
+                isinstance(n, ast.Name) and n.id == "_MARKER"
+                for n in ast.walk(node)
+            )
+            and any(
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and set(n.value) & set("wax+")
+                for n in ast.walk(node)
+            )
+        )
+
+    tree = ast.parse(inspect.getsource(pipeline))
+    writers = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if writes_marker(node)
+    ]
+    assert writers == ["_publish"]
