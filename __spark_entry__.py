@@ -19,7 +19,6 @@ from ocr_spark import fixtures, queries as Q
 from ocr_spark.oracles import ORACLES
 from ocr_spark.operators.aggregate import conv_text_salted, partition_metrics
 from ocr_spark.operators.extract import extract, extract_deduped
-from ocr_spark.pipeline import run_extraction
 
 
 def _documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -43,8 +42,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline over sf0.001 documents recast as
     transcripts — classify -> vectorized extract -> ordered rollup."""
     transcripts = _documents_as_transcripts(spark, "/root/testdata/sf0.001")
-    extracted = run_extraction(transcripts, dedupe=True)
-    return conv_text_salted(extracted)
+    return conv_text_salted(extract(transcripts))
 
 
 def _q_extract_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,9 +67,10 @@ def _q_extract_udf_text_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_extract_text_span_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The memoized extraction the production pipeline runs
-    (``extract_deduped``: payload-hash shuffle -> Arrow worker -> fan-back)
-    over documents-as-transcripts, text rows only — including the span
+    """The opt-in memoized extraction (``extract_deduped``: payload-hash
+    shuffle -> Arrow worker -> fan-back; production runs the narrow
+    ``extract``, checked by ``extract_udf_text_parity``) over
+    documents-as-transcripts, text rows only — including the span
     provenance column, flattened to scalars so DuckDB can independently
     re-derive it (single-interval invariant, tests/test_properties.py)."""
     t = _documents_as_transcripts(spark, sf_dir)

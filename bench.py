@@ -26,14 +26,15 @@ conversation; writes BENCH/SKEW.md). BENCH/EXTRACT_AB.md keeps the last
 A/B of the extraction shapes that were removed in favour of ``extract``.
 
 The timed job is the narrow-extract regression guard, not the flagship
-job (``perfbench/run.py`` times that: deduplicated extraction, resume and
-snapshot commit through ``pipeline.run_resumable``). Here: parquet scan
--> narrow ``extract`` (the ``mapInArrow`` worker loop; no repartition)
--> plain parquet write (no resume or commit) -> scan it -> two-phase
-ordered conversation rollup and partition metrics. Dedupe-before-UDF
-(A6 memoization) is off here: it pays when the UDF is expensive (real
-OCR inference) and the duplicate rate is high; with a cheap parser and
-~2% dups the extra shuffle dominates. Results are forced with the
+job (``perfbench/run.py`` times that: the same narrow extraction behind
+the resume anti-join, plus the snapshot commit, through
+``pipeline.run_resumable``). Here: parquet scan -> narrow ``extract``
+(the ``mapInArrow`` worker loop; no repartition) -> plain parquet write
+(no resume or commit) -> scan it -> two-phase ordered conversation
+rollup and partition metrics. Dedupe-before-UDF (A6 memoization,
+``extract_deduped``) is off here as in production: it pays when the UDF
+is expensive (real OCR inference) and the duplicate rate is high; with
+a cheap parser and ~2-3% dups the extra shuffle dominates. Results are forced with the
 ``noop`` sink (not ``count()``) so Catalyst cannot prune work away.
 """
 

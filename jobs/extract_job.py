@@ -7,7 +7,7 @@
         --output /path/out
 
 Runs the resumable snapshot pipeline (anti-join against committed
-snapshots -> deduplicated vectorized extraction -> atomic snapshot
+snapshots -> narrow vectorized extraction -> atomic snapshot
 commit with per-partition lineage/metrics) and then the two-phase
 ordered conversation rollup to ``<output>/conv_text``. Re-running after
 a kill resumes from the last committed snapshot. Prints a one-line JSON

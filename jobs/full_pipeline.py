@@ -34,11 +34,11 @@ re-inspected or re-run; the funnel records every row count):
                   DATASET_CARD.md
 
 100 TB shape notes: every stage is the audited production operator —
-extraction is an Arrow map over byte-bounded scan splits behind one
-payload-hash dedup shuffle (it carries the raw payloads; the parser then
-runs once per unique payload); the other wide moves are the gate's sha
-dedup groupBy, the dedup chain's band-bucket join (candidate-first
-verify, broadcast caps on degenerate keys), the decontam joins (eval side reduced to fingerprints and
+extraction is a narrow Arrow map over byte-bounded scan splits (no
+shuffle; the raw payloads never leave the task that scanned them); the
+wide moves are the gate's sha dedup groupBy, the dedup chain's
+band-bucket join (candidate-first verify, broadcast caps on degenerate
+keys), the decontam joins (eval side reduced to fingerprints and
 broadcast when small), the split window, and the pack's one
 hash(doc_id) exchange. No stage collects data to the driver; funnel
 counts are Observations or count() actions over committed parquet.

@@ -13,27 +13,31 @@ Both public shapes cross the Python boundary once, through the same
 key columns the loop passes through untouched:
 
 - ``extract()`` passes ``conv_id, turn_idx``. It is a *narrow*
-  transformation — zero shuffle. Input partitioning comes from the source
-  scan (``maxPartitionBytes`` bounds task size); Arrow batch size bounds
+  transformation — zero shuffle — and the shape production runs
+  (``pipeline.run_resumable``): the Python stage runs one task per scan
+  split. Input partitioning comes from the source scan
+  (``maxPartitionBytes`` bounds task size); Arrow batch size bounds
   Python-worker memory.
-- ``extract_deduped()`` passes ``dup_keys``: the memoization join (A6 ≙
-  the reference's sha256 Redis cache, ``tasks/ocr_tasks.py:45-91``).
+- ``extract_deduped()`` passes ``dup_keys``: the opt-in memoization join
+  (A6 ≙ the reference's sha256 Redis cache, ``tasks/ocr_tasks.py:45-91``).
   Identical payloads are extracted once and the result is fanned back out
-  to every key that carried the payload. At web scale duplicate turns are
-  common (boilerplate, retries, forwarded content), so this trades one
-  shuffle for running the Python stage on unique payloads only.
+  to every key that carried the payload. It trades one shuffle of the
+  raw payloads for running the Python stage on unique payloads only,
+  which pays when the parser is expensive (real OCR inference) or
+  duplicates are common (boilerplate, retries, forwarded content).
 
-Neither shape repartitions its input by conversation. The only shuffle
-before the worker is ``extract_deduped``'s, keyed on the payload hash,
-so a pre-extraction salt would be an extra exchange that no operator
-uses. Conversation skew (the long-agent-trace archetype, SURVEY §2.4
-P5) is handled where the rows of one conversation meet: the turn-bucket
+Neither shape repartitions its input by conversation, so a
+pre-extraction salt would be an extra exchange that no operator uses.
+Conversation skew (the long-agent-trace archetype, SURVEY §2.4 P5) is
+handled where the rows of one conversation meet: the turn-bucket
 two-phase rollup ``aggregate.conv_text_salted``.
 """
 
 from __future__ import annotations
 
+from array import array
 from functools import partial
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -113,16 +117,28 @@ _DEDUP_SCHEMA = T.StructType(
 )
 
 
+_BITS = bytes.maketrans(b"\x00\x01", b"01")
+
+
+def _pack_bits(flags) -> bytes:
+    """Arrow's LSB-first bit layout (validity bitmaps, boolean values) of a
+    list of bools."""
+    return int(bytes(flags)[::-1].translate(_BITS) or b"0", 2).to_bytes(
+        (len(flags) + 7) // 8, "little"
+    )
+
+
 def _extract_batches(batches, out_schema: T.StructType):
     """The one per-row worker loop: ``text``/``tool`` through the frozen
     parser, key columns (every output column before ``kind``) passed
     through zero-copy.
 
-    The nested output columns (spans/lines/blocks) are assembled from flat
-    primitive arrays + offset vectors (``ListArray.from_arrays`` /
-    ``StructArray.from_arrays``) instead of pyarrow's generic
-    list-of-dicts converter (~10% worker-side win), typed from the Arrow
-    form of ``out_schema``."""
+    Every output array is assembled straight from buffers
+    (``pa.Array.from_buffers`` over stdlib ``array`` offsets and values,
+    packed validity bitmaps and joined UTF-8 bytes), typed from the Arrow
+    form of ``out_schema``. pyarrow's Python-list converter (``pa.array``)
+    imports pandas on first use, which grows every Python worker by ~38 MB;
+    this loop never calls it."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -130,22 +146,44 @@ def _extract_batches(batches, out_schema: T.StructType):
     keys = schema.names[: len(schema) - len(_PARSED)]
     types = {name: schema.field(name).type for name in _PARSED_NAMES}
     spans_t, lines_t, blocks_t = types["spans"], types["lines"], types["blocks"]
-    line_t, block_t = lines_t.value_type, blocks_t.value_type
-    i32 = pa.int32()
+    span_t, line_t, block_t = spans_t.value_type, lines_t.value_type, blocks_t.value_type
+    start_t, end_t = span_t.field("start").type, span_t.field("end").type
+    f64 = line_t.field("confidence").type
 
-    # values/children given as Python lists are typed from the schema
-    def typed(values, dtype):
-        return values if isinstance(values, pa.Array) else pa.array(values, dtype)
+    def buf(typecode, values):
+        return pa.py_buffer(array(typecode, values))
+
+    def fixed(dtype, typecode, values):
+        return pa.Array.from_buffers(dtype, len(values), [None, buf(typecode, values)])
+
+    def strings(dtype, values):
+        try:
+            joined, valid = "".join(values), None
+        except TypeError:  # nulls: a validity bitmap, and "" in their slots
+            valid = pa.py_buffer(_pack_bits([v is not None for v in values]))
+            values = ["" if v is None else v for v in values]
+            joined = "".join(values)
+        # UTF-8 byte lengths; an ASCII str's is its len (isascii is O(1))
+        if joined.isascii():
+            sizes = map(len, values)
+        else:
+            sizes = [len(v) if v.isascii() else len(v.encode()) for v in values]
+        return pa.Array.from_buffers(
+            dtype,
+            len(values),
+            [valid, buf("i", accumulate(sizes, initial=0)), pa.py_buffer(joined.encode())],
+        )
 
     def lists(list_type, offsets, values):
-        return pa.ListArray.from_arrays(
-            pa.array(offsets, i32), typed(values, list_type.value_type), type=list_type
+        return pa.Array.from_buffers(
+            list_type, len(offsets) - 1, [None, buf("i", offsets)], children=[values]
         )
 
     def structs(struct_type, *children):
-        return pa.StructArray.from_arrays(
-            [typed(c, f.type) for c, f in zip(children, struct_type)], fields=list(struct_type)
-        )
+        return pa.Array.from_buffers(struct_type, len(children[0]), [None], children=list(children))
+
+    def bboxes(struct_type, offsets, values):
+        return lists(struct_type.field("bbox").type, offsets, fixed(f64, "d", values))
 
     for batch in batches:
         texts = batch.column("text").to_pylist()
@@ -180,22 +218,36 @@ def _extract_batches(batches, out_schema: T.StructType):
                 b_boff.append(len(b_bval))
             b_off.append(len(b_text))
         parsed = [
-            pa.array(kind, types["kind"]),
-            pa.array(etext, types["extracted_text"]),
-            lists(spans_t, s_off, structs(spans_t.value_type, s_start, s_end)),
+            strings(types["kind"], kind),
+            strings(types["extracted_text"], etext),
+            lists(
+                spans_t,
+                s_off,
+                structs(span_t, fixed(start_t, "i", s_start), fixed(end_t, "i", s_end)),
+            ),
             lists(
                 lines_t,
                 l_off,
-                structs(line_t, l_text, l_conf, lists(line_t.field("bbox").type, l_boff, l_bval)),
+                structs(
+                    line_t,
+                    strings(line_t.field("text").type, l_text),
+                    fixed(f64, "d", l_conf),
+                    bboxes(line_t, l_boff, l_bval),
+                ),
             ),
             lists(
                 blocks_t,
                 b_off,
-                structs(block_t, b_type, b_text, lists(block_t.field("bbox").type, b_boff, b_bval)),
+                structs(
+                    block_t,
+                    strings(block_t.field("type").type, b_type),
+                    strings(block_t.field("text").type, b_text),
+                    bboxes(block_t, b_boff, b_bval),
+                ),
             ),
-            pa.array(ok, types["parse_ok"]),
-            pa.array(err, types["error"]),
-            pa.array(nbytes, types["bytes_in"]),
+            pa.Array.from_buffers(types["parse_ok"], len(ok), [None, pa.py_buffer(_pack_bits(ok))]),
+            strings(types["error"], err),
+            fixed(types["bytes_in"], "q", nbytes),
         ]
         yield pa.RecordBatch.from_arrays(
             [batch.column(k) for k in keys] + parsed, names=schema.names

@@ -1045,7 +1045,7 @@ WHERE NOT regexp_matches(text,
 # PLUS the span provenance flattened to scalars via the single-interval
 # invariant (a text turn's merged spans are exactly (len-len(lstrip),
 # len(rstrip)) or empty — fuzz-pinned in tests/test_properties.py);
-# compared against extract_deduped(), the shape the pipeline runs
+# compared against the opt-in extract_deduped()
 ORACLES["extract_text_span_parity"] = r"""
 WITH t AS (
   SELECT source AS conv_id,

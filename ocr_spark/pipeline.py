@@ -1,12 +1,11 @@
 """End-to-end pipeline: transcripts -> extracted + conv_text + metrics.
 
 Spark recast of the reference's flagship hybrid-extract lifecycle
-(SURVEY §3 E3): scan -> classify/route/extract (vectorized, with one
-payload-hash shuffle so each unique payload is parsed once) -> snapshot
-write (the checkpoint) -> ordered rollup. The committed snapshot is the
-cache; resume is an anti-join against already-committed keys (≙ the
-sha256 Redis result cache, ``services/redis_service.py:135-202``, minus
-the TTL).
+(SURVEY §3 E3): scan -> classify/route/extract (one narrow Arrow map
+per scan split, no shuffle) -> snapshot write (the checkpoint) ->
+ordered rollup. The committed snapshot is the cache; resume is an
+anti-join against already-committed keys (≙ the sha256 Redis result
+cache, ``services/redis_service.py:135-202``, minus the TTL).
 
 Snapshot layout: each run appends ``snapshot=N`` subdirectories of
 parquet under the output root, with a ``_COMMITTED`` marker written only
@@ -27,27 +26,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: F401
 
 from ocr_spark.operators.aggregate import conv_text_salted, partition_metrics
-from ocr_spark.operators.extract import extract, extract_deduped
+from ocr_spark.operators.extract import extract
 
 
-def run_extraction(transcripts: DataFrame, dedupe: bool = True) -> DataFrame:
-    """transcripts -> extracted (lazy; no action triggered).
-
-    ``dedupe`` picks ``extract_deduped`` (one shuffle; the parser runs
-    once per unique payload) over the narrow ``extract``; both run the
-    same Arrow worker and give the same rows."""
-    return extract_deduped(transcripts) if dedupe else extract(transcripts)
-
-
-def run_pipeline(transcripts: DataFrame, dedupe: bool = True):
+def run_pipeline(transcripts: DataFrame):
     """Returns (extracted, conv_text, metrics) DataFrames, all lazy."""
-    extracted = run_extraction(transcripts, dedupe=dedupe)
+    extracted = extract(transcripts)
     rollup = conv_text_salted(extracted)
     metrics = partition_metrics(extracted, run_id=uuid.uuid4().hex[:12])
     return extracted, rollup, metrics
 
 
-def observed_extraction(transcripts: DataFrame, dedupe: bool = False):
+def observed_extraction(transcripts: DataFrame):
     """Extraction with ZERO-pass global metrics via the Observation API.
 
     Returns ``(extracted, observation)``: attach any action to
@@ -62,7 +52,7 @@ def observed_extraction(transcripts: DataFrame, dedupe: bool = False):
     from pyspark.sql import Observation
 
     obs = Observation("extract_metrics")
-    extracted = run_extraction(transcripts, dedupe=dedupe).observe(
+    extracted = extract(transcripts).observe(
         obs,
         F.count(F.lit(1)).alias("turns_in"),
         F.sum(F.expr("if(parse_ok, 1, 0)")).alias("turns_out"),
@@ -557,7 +547,7 @@ def run_resumable(
             done_keys = existing.select("conv_id", "turn_idx")
             todo = transcripts.join(done_keys, ["conv_id", "turn_idx"], "left_anti")
         snap_dir = _allocate_snapshot_dir(out_root)
-        extracted = run_extraction(todo)
+        extracted = extract(todo)
         _stage_parquet_into(extracted, snap_dir)
         committed = spark.read.parquet(snap_dir)
         if existing is not None and committed.isEmpty():

@@ -90,7 +90,7 @@ def test_extract_is_narrow(spark, transcripts_parquet):
 
 
 def test_extract_deduped_one_exchange_one_arrow_node(spark, transcripts_parquet):
-    """The shape the pipeline runs crosses the Python boundary exactly
+    """The opt-in memoized shape crosses the Python boundary exactly
     once, through the same Arrow worker as ``extract``: one payload-hash
     Exchange, one MapInArrow, and no pandas round trip."""
     from ocr_spark.operators.extract import extract_deduped
@@ -102,17 +102,32 @@ def test_extract_deduped_one_exchange_one_arrow_node(spark, transcripts_parquet)
     assert n_ops(p, "MapInPandas") == 0
 
 
-def test_run_extraction_is_one_payload_exchange(spark, transcripts_parquet):
-    """What production runs (``run_resumable`` -> ``run_extraction``):
-    the only shuffle is the payload-hash dedup, and nothing repartitions
-    the raw rows by conversation before it."""
-    from ocr_spark.pipeline import run_extraction
+def test_run_resumable_writes_one_arrow_map_without_payload_shuffle(
+    spark, transcripts_parquet, tmp_path, monkeypatch
+):
+    """What production writes (the DataFrame ``run_resumable`` stages):
+    on an empty store scan -> one MapInArrow with no Exchange at all; on
+    a resume the anti-join against committed keys sits in front of the
+    same single MapInArrow, and no payload-hash dedup shuffle appears."""
+    from ocr_spark import pipeline
 
+    staged = []
+    stage = pipeline._stage_parquet_into
+
+    def capture(df, allocated_dir):
+        staged.append(plan(df))
+        stage(df, allocated_dir)
+
+    monkeypatch.setattr(pipeline, "_stage_parquet_into", capture)
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(run_extraction(t))
-    assert n_ops(p, "Exchange") == 1
-    assert re.search(r"hashpartitioning\(payload_sha#\d+", p), p
-    assert "REPARTITION_BY_NUM" not in p
+    store = str(tmp_path / "store")
+    pipeline.run_resumable(spark, t.filter("turn_idx % 2 = 0"), store)
+    pipeline.run_resumable(spark, t, store)
+    empty, resume = staged
+    assert n_ops(empty, "Exchange") == 0, empty
+    assert n_ops(empty, "MapInArrow") == 1, empty
+    assert "payload_sha" not in resume, resume
+    assert n_ops(resume, "MapInArrow") == 1, resume
 
 
 def test_snapshot_rollup_is_two_phase(spark, transcripts_parquet, tmp_path):

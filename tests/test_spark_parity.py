@@ -295,3 +295,70 @@ def test_extract_deduped_edge_battery(spark):
         assert got["lines"] == want["lines"], key
         assert got["blocks"] == want["blocks"], key
         assert got["bytes_in"] == len((text or "").encode()) + len((tool or "").encode()), key
+
+
+_WORKER_NO_PANDAS = """
+import sys
+import pyarrow as pa
+from ocr_spark.operators.extract import EXTRACTED_SCHEMA, _extract_batches
+(out,) = _extract_batches(pa.ipc.open_stream(sys.stdin.buffer.read()), EXTRACTED_SCHEMA)
+out.validate(full=True)
+assert "pandas" not in sys.modules, "the worker loop imported pandas"
+sink = pa.BufferOutputStream()
+with pa.ipc.new_stream(sink, out.schema) as w:
+    w.write_batch(out)
+sys.stdout.buffer.write(sink.getvalue().to_pybytes())
+"""
+
+
+def test_worker_loop_never_imports_pandas():
+    """The Arrow worker loop assembles its output without pyarrow's
+    Python-list converter, which imports pandas (~38 MB per Python
+    worker). One batch, in a fresh interpreter: all five kinds, null and
+    non-null ``error``, non-ASCII text and an all-null row. The batch
+    comes back over IPC and must match the oracle on every column."""
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+
+    rows = [
+        ("c", 0, "plain  text, naïve café ☃", None),
+        ("c", 1, "<p>héllo <b>wörld</b></p>", ""),
+        ("c", 2, "", '{"blocks": [{"type": 0, "bbox": [1, 2, 3, 4], '
+                     '"lines": [{"spans": [{"text": "blöck"}]}]}]}'),
+        ("c", 3, "", '{"rec_texts": ["línea", "low"], "rec_scores": [0.9, 0.1], '
+                     '"dt_polys": [[[0, 0], [1, 0], [1, 1], [0, 1]]]}'),
+        ("c", 4, "", "not json"),
+        ("c", 5, None, None),
+    ]
+    cols = list(zip(*rows))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(cols[0], pa.string()), pa.array(cols[1], pa.int32()),
+         pa.array(cols[2], pa.string()), pa.array(cols[3], pa.string())],
+        names=["conv_id", "turn_idx", "text", "tool"],
+    )
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, batch.schema) as w:
+        w.write_batch(batch)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _WORKER_NO_PANDAS],
+        input=sink.getvalue().to_pybytes(),
+        capture_output=True,
+        cwd=repo,
+        env={**os.environ, "PYTHONPATH": pythonpath},
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    got = pa.ipc.open_stream(proc.stdout).read_all().to_pylist()
+    assert {r["kind"] for r in got} == {"text", "html", "pdf_blocks", "ocr_lines", "error"}
+    assert {r["error"] is None for r in got} == {True, False}
+    for r, (_conv, _idx, text, tool) in zip(got, rows):
+        want = extract_turn(text or "", tool or "")
+        for col in ("kind", "extracted_text", "parse_ok", "error", "lines", "blocks"):
+            assert r[col] == want[col], (r["turn_idx"], col)
+        assert [(s["start"], s["end"]) for s in r["spans"]] == want["spans"], r["turn_idx"]
+        assert r["bytes_in"] == len((text or "").encode()) + len((tool or "").encode())

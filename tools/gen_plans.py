@@ -32,7 +32,6 @@ def main() -> None:
     from ocr_spark import fixtures
     from ocr_spark.operators.aggregate import conv_text_salted
     from ocr_spark.operators.extract import extract
-    from ocr_spark.pipeline import run_extraction
 
     tpath = "/tmp/ocr_spark_plans_input"
     fixtures.transcripts_df(spark, 20).write.mode("overwrite").parquet(tpath)
@@ -51,14 +50,23 @@ def main() -> None:
             plan(extract(t)),
         ),
         (
-            "Production extraction: run_extraction (deduplicated)",
-            "What run_resumable runs. Exactly 1 exchange: "
-            "hashpartitioning on payload_sha, so the Arrow worker parses "
-            "each unique payload once and an explode fans the result back "
-            "out to every (conv_id, turn_idx) that carried it. Nothing "
-            "repartitions the raw rows by conversation first: the payload "
-            "shuffle would discard that partitioning anyway.",
-            plan(run_extraction(t)),
+            "Production extraction: narrow extract behind the resume anti-join",
+            "What run_resumable writes on a non-empty store: the input "
+            "left-anti-joins the committed (conv_id, turn_idx) keys "
+            "(broadcast while the key set is small), then one MapInArrow "
+            "parses each remaining turn in the task that scanned it. No "
+            "payload-hash shuffle: on an empty store the plan is the "
+            "narrow stage above, with zero exchanges. extract_deduped "
+            "stays the opt-in shape for expensive parsers.",
+            plan(
+                extract(
+                    t.join(
+                        spark.read.parquet(snap).select("conv_id", "turn_idx"),
+                        ["conv_id", "turn_idx"],
+                        "left_anti",
+                    )
+                )
+            ),
         ),
         (
             "Production rollup: two-phase ordered concat over the snapshot",
