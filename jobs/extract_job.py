@@ -8,7 +8,7 @@
 
 Runs the resumable snapshot pipeline (anti-join against committed
 snapshots -> narrow vectorized extraction -> atomic snapshot
-commit with per-partition lineage/metrics) and then the two-phase
+commit holding the totals observed during its write) and then the two-phase
 ordered conversation rollup to ``<output>/conv_text``. Re-running after
 a kill resumes from the last committed snapshot. Prints a one-line JSON
 summary on completion.

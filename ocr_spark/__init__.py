@@ -7,8 +7,8 @@ reference service (see SURVEY.md) as a Spark-first pipeline:
 - output: extracted(conv_id, turn_idx, kind, extracted_text, spans,
           lines, blocks, parse_ok, error, bytes_in)
           conv_text(conv_id, full_text, n_turns, n_text, n_ocr)
-          metrics(run_id, partition_id, turns_in, turns_out,
-          bytes_in, bytes_out, parse_failures)
+          metrics(run_id, snapshot, turns_in, turns_out,
+          bytes_in, bytes_out, parse_failures)  # one row per snapshot
 
 All per-turn semantics are frozen in the pure-Python ``ocr_spark.oracle``
 package (single-process, no Spark); the extraction operators call the same

@@ -290,7 +290,8 @@ def extract_deduped(transcripts: DataFrame) -> DataFrame:
     plain ``extract`` skips the shuffle.
     """
     keyed = transcripts.select(
-        F.sha2(F.concat_ws("\x1f", F.col("text"), F.col("tool")), 256).alias("payload_sha"),
+        # to_json names each field, so (P, NULL) and (NULL, P) get two keys
+        F.sha2(F.to_json(F.struct("text", "tool")), 256).alias("payload_sha"),
         "conv_id",
         _turn_idx(),
         "text",

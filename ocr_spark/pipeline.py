@@ -12,12 +12,16 @@ parquet under the output root, with a ``_COMMITTED`` marker written only
 after the parquet job succeeds — readers ignore uncommitted snapshots, so
 a killed run never corrupts the table (Iceberg would give us this
 atomically; the marker is the no-dependency stand-in with the same
-reader-visible semantics).
+reader-visible semantics). Each data snapshot also holds ``_METRICS.json``,
+the totals observed while its parquet was written (Iceberg's snapshot
+``summary``): it commits, loses a race and expires with its data, and
+``read_metrics`` reads it in the driver.
 """
 
 from __future__ import annotations
 
 import contextlib as _contextlib
+import json
 import os
 import shutil
 import time
@@ -38,21 +42,23 @@ def run_pipeline(transcripts: DataFrame):
 
 
 def observed_extraction(transcripts: DataFrame):
-    """Extraction with ZERO-pass global metrics via the Observation API.
+    """Extraction with zero-pass totals via the Observation API.
 
     Returns ``(extracted, observation)``: attach any action to
     ``extracted`` (e.g. the snapshot write) and ``observation.get`` then
     yields turns/bytes/parse-failure totals computed DURING that action —
-    no second scan, no extra job. This is the cheap global-counters twin
-    of ``partition_metrics`` (which stays the queryable per-partition
-    lineage table): at 100 TB the observed totals come for free with the
-    write, and the metrics table is only materialized when per-partition
-    lineage is actually wanted.
+    no second scan, no extra job. ``run_resumable`` stages exactly this
+    and stores the totals in the snapshot they describe.
     """
+    return _observed(extract(transcripts))
+
+
+def _observed(extracted: DataFrame):
+    """``extracted`` with an Observation of the snapshot totals attached."""
     from pyspark.sql import Observation
 
     obs = Observation("extract_metrics")
-    extracted = extract(transcripts).observe(
+    observed = extracted.observe(
         obs,
         F.count(F.lit(1)).alias("turns_in"),
         F.sum(F.expr("if(parse_ok, 1, 0)")).alias("turns_out"),
@@ -60,7 +66,7 @@ def observed_extraction(transcripts: DataFrame):
         F.sum(F.length("extracted_text")).alias("bytes_out"),
         F.sum(F.expr("if(parse_ok, 0, 1)")).alias("parse_failures"),
     )
-    return extracted, obs
+    return observed, obs
 
 
 # ---------------------------------------------------------------------------
@@ -70,6 +76,11 @@ def observed_extraction(transcripts: DataFrame):
 _MARKER = "_COMMITTED"
 _SUPERSEDES = "_SUPERSEDES"  # written by compaction: names of replaced dirs
 _DELETES_FLAG = "_EQUALITY_DELETES"  # snapshot holds delete KEYS, not data
+_METRICS = "_METRICS.json"  # a data snapshot's observed totals
+_METRICS_SCHEMA = (
+    "array<struct<run_id:string,snapshot:int,turns_in:bigint,turns_out:bigint,"
+    "bytes_in:bigint,bytes_out:bigint,parse_failures:bigint>>"
+)
 
 
 def _snapshot_dirs(root: str) -> list[str]:
@@ -95,12 +106,6 @@ def _next_snapshot_idx(root: str) -> int:
     run can never target a directory another reader is consuming (the
     count-based scheme collided after compaction made indices sparse)."""
     return 1 + max(map(_snapshot_idx, _snapshot_dirs(root)), default=-1)
-
-
-def _metrics_dir(root: str, snap: str = "") -> str:
-    """The ``metrics/`` twin of snapshot ``snap`` (a dir path or name);
-    the metrics root itself when ``snap`` is empty."""
-    return os.path.join(root, "metrics", os.path.basename(snap))
 
 
 def _superseded_names(root: str, as_of: int | None = None) -> set[str]:
@@ -364,7 +369,7 @@ def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
     """Store introspection: one row per committed snapshot — the
     ≙ of Iceberg's ``snapshots`` metadata table. Columns: snapshot name,
     index, commit time (marker mtime — publish time), data size on disk,
-    file count, and whether lineage metrics exist for it. Driver-side
+    file count, and whether observed totals exist for it. Driver-side
     directory walk only (metadata, not data); empty frame if none."""
     import datetime
 
@@ -390,7 +395,7 @@ def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
                 committed_at,
                 n_files,
                 n_bytes,
-                os.path.isdir(_metrics_dir(root, name)),
+                os.path.exists(os.path.join(p, _METRICS)),
                 os.path.exists(os.path.join(p, _DELETES_FLAG)),
             )
         )
@@ -501,7 +506,16 @@ def _publish(
 def _drop_snapshot(root: str, snap: str) -> None:
     """Remove snapshot ``snap`` (a dir path or name) and its metrics."""
     shutil.rmtree(os.path.join(root, os.path.basename(snap)), ignore_errors=True)
-    shutil.rmtree(_metrics_dir(root, snap), ignore_errors=True)
+
+
+def _write_metrics(snap_dir: str, obs, run_id: str) -> dict:
+    """Store the totals ``obs`` saw during the write into ``snap_dir``
+    (NULL sums of an empty write become 0); returns them."""
+    totals = {k: v or 0 for k, v in obs.get.items()}
+    totals.update(run_id=run_id, snapshot=_snapshot_idx(snap_dir))
+    with open(os.path.join(snap_dir, _METRICS), "w") as fh:
+        json.dump(totals, fh)
+    return totals
 
 
 def run_resumable(
@@ -529,11 +543,10 @@ def run_resumable(
     times. Serializable-append semantics: no duplicate (conv_id,
     turn_idx) can ever be published by racing writers.
 
-    Each committed snapshot also gets a per-partition lineage/metrics
-    table under ``<out_root>/metrics/snapshot=N`` (run_id, snapshot,
-    partition_id, turns in/out, bytes in/out, parse failures — ≙ the
-    reference's stats + progress rows, SURVEY §1.3), computed from the
-    committed parquet so the numbers describe exactly what readers see.
+    Each committed snapshot holds its own totals in ``_METRICS.json``
+    (run_id, snapshot, turns in/out, bytes in/out, parse failures — ≙ the
+    reference's stats + progress rows, SURVEY §1.3), observed during the
+    staged write itself: no re-read and no extra job.
 
     ``_race_hook`` is a test seam: called after staging, before commit
     validation, so tests can interleave a competing commit.
@@ -547,10 +560,10 @@ def run_resumable(
             done_keys = existing.select("conv_id", "turn_idx")
             todo = transcripts.join(done_keys, ["conv_id", "turn_idx"], "left_anti")
         snap_dir = _allocate_snapshot_dir(out_root)
-        extracted = extract(todo)
+        extracted, obs = observed_extraction(todo)
         _stage_parquet_into(extracted, snap_dir)
-        committed = spark.read.parquet(snap_dir)
-        if existing is not None and committed.isEmpty():
+        totals = _write_metrics(snap_dir, obs, run_id)
+        if existing is not None and not totals["turns_in"]:
             # fully-caught-up rerun: don't publish (or keep) an empty
             # snapshot — no-op reruns must not grow the directory count.
             # (If a racing writer committed since we planned, the next
@@ -558,10 +571,6 @@ def run_resumable(
             # set can't conflict with anything.)
             _drop_snapshot(out_root, snap_dir)
             return existing
-        metrics = partition_metrics(committed, run_id=run_id).withColumn(
-            "snapshot", F.lit(_snapshot_idx(snap_dir))
-        )
-        metrics.write.mode("overwrite").parquet(_metrics_dir(out_root, snap_dir))
         if _publish(out_root, snap_dir, base_state, _race_hook):
             return read_snapshots(spark, out_root)
         # lost the race: _publish dropped the staged snapshot; re-plan
@@ -622,8 +631,11 @@ def compact_snapshots(
     deliberately (the tags then dangle and ``read_snapshots`` raises on
     them).
 
-    Old lineage/metrics rows are carried into the compacted snapshot's
-    metrics table. Returns the number of snapshots compacted.
+    The rewrite observes its own totals into the compacted snapshot's
+    ``_METRICS.json``, so they count only the rows it kept, never the
+    turns it deleted. A lone snapshot without totals (from a store
+    written before snapshots held them) is rewritten just to gain them.
+    Returns the number of snapshots compacted.
     """
     for _attempt in range(max_commit_retries + 1):
         all_committed = _committed_snapshots(out_root)
@@ -650,7 +662,10 @@ def compact_snapshots(
                 ),
             )
         paths = [p for p in all_committed if _snapshot_idx(p) > boundary]
-        if len(paths) <= 1:
+        # a lone snapshot is rewritten only to give an old store's totals
+        if len(paths) <= 1 and all(
+            os.path.exists(os.path.join(p, _METRICS)) for p in paths
+        ):
             return 0
         # read the SAME path list that gets superseded (never re-list —
         # a commit landing between two listings would be folded into the
@@ -663,17 +678,9 @@ def compact_snapshots(
         if df is None:
             return 0
         final_dir = _allocate_snapshot_dir(out_root)
+        df, obs = _observed(df)
         _stage_parquet_into(df, final_dir)
-        # carry lineage/metrics history into the compacted snapshot
-        old_metric_dirs = [
-            _metrics_dir(out_root, p)
-            for p in paths
-            if os.path.isdir(_metrics_dir(out_root, p))
-        ]
-        if old_metric_dirs:
-            spark.read.parquet(*old_metric_dirs).write.mode(
-                "overwrite"
-            ).parquet(_metrics_dir(out_root, final_dir))
+        _write_metrics(final_dir, obs, uuid.uuid4().hex[:12])
         with open(os.path.join(final_dir, _SUPERSEDES), "w") as fh:
             fh.write("\n".join(os.path.basename(p) for p in paths) + "\n")
         if not _publish(out_root, final_dir, base_state, _race_hook):
@@ -756,9 +763,8 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
     """Maintenance: drop snapshot directories that are invisible to
     readers — crashed runs (no ``_COMMITTED`` marker) and compacted-away
     dirs whose names appear in a committed ``_SUPERSEDES`` list — plus
-    leftover ``_staging-*`` dirs and any ``metrics/snapshot=N`` directory
-    orphaned by a crashed compaction/expiry (no committed snapshot of
-    that name). Returns the removed paths."""
+    leftover ``_staging-*`` dirs. A snapshot's metrics live inside its
+    dir, so they go with it. Returns the removed paths."""
     removed = []
     if not os.path.isdir(out_root):
         return removed
@@ -778,24 +784,20 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
             path = os.path.join(out_root, name)
             shutil.rmtree(path, ignore_errors=True)
             removed.append(path)
-    live = _committed_state(out_root)
-    metrics_root = _metrics_dir(out_root)
-    if os.path.isdir(metrics_root):
-        for name in sorted(os.listdir(metrics_root)):
-            path = _metrics_dir(out_root, name)
-            if name.startswith("snapshot=") and name not in live:
-                shutil.rmtree(path, ignore_errors=True)
-                removed.append(path)
     return removed
 
 
 def read_metrics(spark: SparkSession, out_root: str) -> DataFrame | None:
-    """All lineage/metrics rows for committed snapshots under out_root."""
-    paths = [
-        _metrics_dir(out_root, p)
-        for p in _committed_snapshots(out_root)
-        if os.path.isdir(_metrics_dir(out_root, p))
-    ]
-    if not paths:
+    """One row of observed totals per committed data snapshot under
+    out_root; None if there are none. The driver reads the small
+    ``_METRICS.json`` files and the frame is built in the JVM from one
+    literal: no file scan, no Python workers, one partition."""
+    rows = []
+    for p in _committed_snapshots(out_root):
+        with _contextlib.suppress(FileNotFoundError):
+            with open(os.path.join(p, _METRICS)) as fh:
+                rows.append(fh.read())
+    if not rows:
         return None
-    return spark.read.parquet(*paths)
+    totals = F.from_json(F.lit("[" + ",".join(rows) + "]"), _METRICS_SCHEMA)
+    return spark.range(0, 1, 1, 1).select(F.inline(totals))

@@ -321,6 +321,75 @@ def test_observed_extraction_zero_pass_metrics(spark, tmp_path):
     assert got["bytes_in"] == committed.groupBy().sum("bytes_in").collect()[0][0]
 
 
+def _totals_of(df):
+    """The snapshot totals, recomputed by a group-by over ``df``'s rows."""
+    r = df.selectExpr(
+        "count(*) AS turns_in",
+        "count_if(parse_ok) AS turns_out",
+        "sum(bytes_in) AS bytes_in",
+        "sum(length(extracted_text)) AS bytes_out",
+        "count_if(NOT parse_ok) AS parse_failures",
+    ).first()
+    return r.asDict()
+
+
+def _metric_sums(metrics):
+    cols = ("turns_in", "turns_out", "bytes_in", "bytes_out", "parse_failures")
+    r = metrics.groupBy().sum(*cols).first()
+    return {c: r[f"sum({c})"] for c in cols}
+
+
+def test_compaction_totals_count_only_kept_rows(spark, tmp_path):
+    """Compaction applies deletes physically, and the compacted
+    snapshot's totals must describe the rows it kept — not carry totals
+    for turns the rewrite deleted."""
+    from ocr_spark.pipeline import compact_snapshots, delete_turns, read_metrics
+
+    full = fixtures.transcripts_df(spark, 8).cache()
+    root = str(tmp_path / "store")
+    run_resumable(spark, full.filter("turn_idx % 2 = 0"), root)
+    run_resumable(spark, full, root)
+    delete_turns(spark, root, full.filter("turn_idx < 2"))
+    assert compact_snapshots(spark, root) == 3
+
+    committed = read_snapshots(spark, root)
+    metrics = read_metrics(spark, root)
+    assert _metric_sums(metrics)["turns_in"] == committed.count()
+    assert _metric_sums(metrics) == _totals_of(committed)
+    assert metrics.count() == 1
+
+
+def test_old_store_reads_and_gains_totals_at_compaction(spark, tmp_path):
+    """A store written before snapshots held their own totals: its data
+    reads unchanged, it reports no totals, and one compaction writes
+    totals equal to a group-by over the committed rows."""
+    import os
+
+    from ocr_spark.operators.aggregate import partition_metrics
+    from ocr_spark.pipeline import compact_snapshots, read_metrics, snapshots_df
+
+    root = str(tmp_path / "store")
+    snap = os.path.join(root, "snapshot=0")
+    old = extract(fixtures.transcripts_df(spark, 6))
+    old.write.parquet(snap)
+    partition_metrics(spark.read.parquet(snap), run_id="old").write.parquet(
+        os.path.join(root, "metrics", "snapshot=0")
+    )
+    with open(os.path.join(snap, "_COMMITTED"), "w") as fh:
+        fh.write("ok\n")
+
+    n = spark.read.parquet(snap).count()
+    assert read_snapshots(spark, root).count() == n
+    assert read_metrics(spark, root) is None
+    assert not snapshots_df(spark, root).first()["has_metrics"]
+
+    assert compact_snapshots(spark, root) == 1
+    committed = read_snapshots(spark, root)
+    assert committed.count() == n
+    assert _metric_sums(read_metrics(spark, root)) == _totals_of(committed)
+    assert snapshots_df(spark, root).first()["has_metrics"]
+
+
 def test_snapshots_metadata_table(spark, tmp_path):
     """snapshots_df mirrors the committed state: one row per committed
     snapshot with commit time, size, and metrics linkage; uncommitted

@@ -130,6 +130,25 @@ def test_run_resumable_writes_one_arrow_map_without_payload_shuffle(
     assert n_ops(resume, "MapInArrow") == 1, resume
 
 
+def test_read_metrics_scans_no_file_and_starts_no_python(
+    spark, transcripts_parquet, tmp_path
+):
+    """The per-snapshot totals come from small JSON files the driver
+    reads: the frame never scans a file or starts Python workers, and it
+    is one partition, so summing it needs no Exchange."""
+    from ocr_spark import pipeline
+
+    store = str(tmp_path / "store")
+    t = spark.read.parquet(transcripts_parquet)
+    pipeline.run_resumable(spark, t.filter("turn_idx % 2 = 0"), store)
+    pipeline.run_resumable(spark, t, store)
+    metrics = pipeline.read_metrics(spark, store)
+    p = plan(metrics, mode="simple")
+    assert "FileScan" not in p and "ExistingRDD" not in p, p
+    assert n_ops(plan(metrics.groupBy().sum("parse_failures")), "Exchange") == 0
+    assert metrics.count() == 2
+
+
 def test_snapshot_rollup_is_two_phase(spark, transcripts_parquet, tmp_path):
     """Production rolls up the committed snapshot: exactly the bucket
     partial-agg shuffle and the conversation final-agg shuffle."""

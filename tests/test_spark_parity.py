@@ -248,13 +248,17 @@ def test_extract_deduped_full_row_parity_with_extract(spark, transcripts):
     assert a == b
 
 
+_PDF_PAYLOAD = '{"blocks": [{"text": "Scanned page", "bbox": [0, 0, 10, 10]}]}'
+
+
 def test_extract_deduped_edge_battery(spark):
     """Adversarial payloads through both shapes and the oracle, on every
     column: nulls, whitespace shapes, '<' without an HTML hint, non-ASCII
     and exotic-whitespace chars where Python and Java disagree on \\s,
-    and payload/malformed-tool turns. The battery repeats in three
-    conversations, so every payload is a duplicate and extract_deduped's
-    fan-back must hand one result to each of its keys."""
+    payload/malformed-tool turns, and one payload moved between the text
+    and tool columns. The battery repeats in three conversations, so
+    every payload is a duplicate and extract_deduped's fan-back must hand
+    one result to each of its keys."""
     import pyspark.sql.types as T
 
     payloads = [
@@ -267,6 +271,8 @@ def test_extract_deduped_edge_battery(spark):
         ("txt", '{"blocks": []}'), ("txt", "not json"),
         ("a\x1cb", ""), ("\x1c  x", ""),
         (" \t mixed\truns  and\n\n\n\nblanks \n", ""),
+        # one payload in either column: two kinds, so two dedup keys
+        (_PDF_PAYLOAD, None), (None, _PDF_PAYLOAD),
     ]
     rows = [
         (conv, i, text, tool)

@@ -59,11 +59,14 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     assert conf["spark.sql.execution.arrow.maxRecordsPerBatch"] == "16384"
     assert conf["spark.sql.parquet.compression.codec"] == "zstd"
 
-    # committed snapshot + metrics tables exist and reconcile
+    # the committed snapshot and its observed totals exist and reconcile
+    from ocr_spark.pipeline import read_metrics
+
     extracted = spark.read.parquet(os.path.join(out_dir, "extracted", "snapshot=0"))
     assert extracted.count() == n_turns
-    metrics = spark.read.parquet(os.path.join(out_dir, "extracted", "metrics"))
+    metrics = read_metrics(spark, os.path.join(out_dir, "extracted"))
     assert metrics.groupBy().sum("turns_in").collect()[0][0] == n_turns
+    assert summary["parse_failures"] == extracted.filter("NOT parse_ok").count()
 
     # resume in a fresh JVM: nothing new to do, output unchanged, and the
     # fully-caught-up rerun leaves NO extra snapshot directory behind.
