@@ -317,16 +317,37 @@ sys.stdout.buffer.write(sink.getvalue().to_pybytes())
 """
 
 
+def _run_worker_script(script, batch, *args):
+    """Run ``script`` in a fresh interpreter with the repo on its path, one
+    Arrow IPC stream of ``batch`` (if any) on its stdin."""
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+
+    sink = pa.BufferOutputStream()
+    if batch is not None:
+        with pa.ipc.new_stream(sink, batch.schema) as w:
+            w.write_batch(batch)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+    return subprocess.run(
+        [sys.executable, "-c", script, *args],
+        input=sink.getvalue().to_pybytes(),
+        capture_output=True,
+        cwd=repo,
+        env={**os.environ, "PYTHONPATH": pythonpath},
+        timeout=120,
+    )
+
+
 def test_worker_loop_never_imports_pandas():
     """The Arrow worker loop assembles its output without pyarrow's
     Python-list converter, which imports pandas (~38 MB per Python
     worker). One batch, in a fresh interpreter: all five kinds, null and
     non-null ``error``, non-ASCII text and an all-null row. The batch
     comes back over IPC and must match the oracle on every column."""
-    import os
-    import subprocess
-    import sys
-
     import pyarrow as pa
 
     rows = [
@@ -345,19 +366,7 @@ def test_worker_loop_never_imports_pandas():
          pa.array(cols[2], pa.string()), pa.array(cols[3], pa.string())],
         names=["conv_id", "turn_idx", "text", "tool"],
     )
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, batch.schema) as w:
-        w.write_batch(batch)
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pythonpath = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
-    proc = subprocess.run(
-        [sys.executable, "-c", _WORKER_NO_PANDAS],
-        input=sink.getvalue().to_pybytes(),
-        capture_output=True,
-        cwd=repo,
-        env={**os.environ, "PYTHONPATH": pythonpath},
-        timeout=120,
-    )
+    proc = _run_worker_script(_WORKER_NO_PANDAS, batch)
     assert proc.returncode == 0, proc.stderr.decode()
     got = pa.ipc.open_stream(proc.stdout).read_all().to_pylist()
     assert {r["kind"] for r in got} == {"text", "html", "pdf_blocks", "ocr_lines", "error"}
@@ -368,3 +377,141 @@ def test_worker_loop_never_imports_pandas():
             assert r[col] == want[col], (r["turn_idx"], col)
         assert [(s["start"], s["end"]) for s in r["spans"]] == want["spans"], r["turn_idx"]
         assert r["bytes_in"] == len((text or "").encode()) + len((tool or "").encode())
+
+
+_WORKER_SKIPS_SPARK_ARCHIVES = """
+import importlib, json, os, sys, zipfile, zipimport
+import pyarrow as pa
+
+spark_zip = os.path.join(os.environ["SPARK_HOME"], "python", "lib", "pyspark.zip")
+user_zip = sys.argv[1]
+
+
+def ship(value):
+    with zipfile.ZipFile(user_zip, "w") as zf:
+        zf.writestr("shipped_mod.py", f"VALUE = {value!r}\\n")
+
+
+ship("old")
+sys.path[:0] = [spark_zip, user_zip]
+import pyspark.sql.types
+import shipped_mod
+
+assert pyspark.__file__.startswith(spark_zip), pyspark.__file__
+from ocr_spark.operators.extract import EXTRACTED_SCHEMA, _extract_batches
+
+(out,) = _extract_batches(pa.ipc.open_stream(sys.stdin.buffer.read()), EXTRACTED_SCHEMA)
+assert out.num_rows == 1
+assert "pandas" not in sys.modules, "the worker loop imported pandas"
+
+reads = []
+read_directory = zipimport._read_directory
+zipimport._read_directory = lambda archive: reads.append(archive) or read_directory(archive)
+ship("new")  # an addPyFile overwrite of a file already on the path
+importlib.invalidate_caches()
+zipimport._read_directory = read_directory
+del sys.modules["shipped_mod"]
+import shipped_mod
+
+print(json.dumps({"reads": reads, "value": shipped_mod.VALUE}))
+"""
+
+
+def test_worker_loop_skips_refresh_of_spark_archives_only(tmp_path):
+    """After one run of the worker loop, the per-task import-cache refresh
+    re-reads no archive under SPARK_HOME, and still re-reads every other
+    zip on the path: a rewritten ``addPyFile`` zip serves its new module.
+    In a fresh interpreter with ``pyspark`` imported from Spark's own
+    ``pyspark.zip``, as in a Python worker."""
+    import json
+
+    import pyarrow as pa
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["c"]), pa.array([0], pa.int32()), pa.array(["<p>hi</p>"]),
+         pa.array([None], pa.string())],
+        names=["conv_id", "turn_idx", "text", "tool"],
+    )
+    user_zip = str(tmp_path / "shipped.zip")
+    proc = _run_worker_script(_WORKER_SKIPS_SPARK_ARCHIVES, batch, user_zip)
+    assert proc.returncode == 0, proc.stderr.decode()
+    got = json.loads(proc.stdout.decode().strip().splitlines()[-1])
+    assert set(got["reads"]) == {user_zip}  # pyspark.zip is not re-read
+    assert got["value"] == "new"
+
+
+_REFRESH_SCOPE = """
+import importlib, json, os, sys, zipfile, zipimport
+
+home, archives = sys.argv[1], sys.argv[2:]
+if home:
+    os.environ["SPARK_HOME"] = home
+else:
+    os.environ.pop("SPARK_HOME", None)
+for i, path in enumerate(archives):
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"mod{i}.py", "")
+sys.path[:0] = archives
+for i in range(len(archives)):
+    importlib.import_module(f"mod{i}")
+from ocr_spark.operators.extract import _skip_spark_archive_refresh
+
+_skip_spark_archive_refresh()
+installed = zipimport.zipimporter.invalidate_caches
+_skip_spark_archive_refresh()
+assert zipimport.zipimporter.invalidate_caches is installed, "wrapped twice"
+
+reads = []
+read_directory = zipimport._read_directory
+zipimport._read_directory = lambda archive: reads.append(archive) or read_directory(archive)
+importlib.invalidate_caches()
+print(json.dumps(reads))
+"""
+
+
+@pytest.mark.parametrize("spark_home_set", [True, False])
+def test_refresh_skip_covers_only_spark_archive_dirs(tmp_path, spark_home_set):
+    """Only archives in ``$SPARK_HOME/python/lib`` and ``$SPARK_HOME/jars``
+    skip the refresh; a zip elsewhere under ``SPARK_HOME`` (a standalone
+    executor's work dir) still refreshes, and with ``SPARK_HOME`` unset
+    nothing is skipped. Installing twice keeps one wrapper."""
+    import json
+
+    home = tmp_path / "spark"
+    own = [home / "python" / "lib" / "pyspark.zip", home / "jars" / "spark-core.jar"]
+    shipped = [home / "work" / "app-1" / "0" / "shipped.zip", tmp_path / "user.zip"]
+    for path in own + shipped:
+        path.parent.mkdir(parents=True, exist_ok=True)
+    archives = [str(p) for p in own + shipped]
+    proc = _run_worker_script(
+        _REFRESH_SCOPE, None, str(home) if spark_home_set else "", *archives
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    reads = json.loads(proc.stdout.decode().strip().splitlines()[-1])
+    assert sorted(reads) == sorted(archives[2:] if spark_home_set else archives)
+
+
+def test_warm_spark_workers_skip_spark_archive_refresh(spark, transcripts):
+    """On the session's real Python workers: once ``extract`` has run over
+    4 partitions, the workers that serve a later Python task carry the
+    refresh skip (they are reused, so the skip outlives the task that
+    installed it)."""
+    extract(transcripts.repartition(4)).write.format("noop").mode("overwrite").save()
+
+    def probe(batches):
+        import os
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        installed = hasattr(zipimport.zipimporter.invalidate_caches, "skips_under")
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([os.getpid()], pa.int64()), pa.array([installed])],
+            names=["pid", "installed"],
+        )
+
+    rows = spark.range(0, 8, 1, 8).mapInArrow(probe, "pid long, installed boolean").collect()
+    assert len(rows) == 8
+    assert any(r["installed"] for r in rows), rows

@@ -27,7 +27,12 @@ def _submit(zip_path, input_dir, out_dir, extra=(), conf=()):
         "--output", out_dir,
         *extra,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    # run from the zip's directory, outside the checkout: the driver's cwd
+    # is the Python workers' sys.path[0], so from the checkout they would
+    # import ocr_spark from the repo and never load the zip
+    proc = subprocess.run(
+        cmd, capture_output=True, text=True, cwd=os.path.dirname(zip_path), timeout=300
+    )
     assert proc.returncode == 0, proc.stderr[-3000:]
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
@@ -111,7 +116,7 @@ def test_dedup_job_spark_submit_end_to_end(spark, tmp_path):
         "--input", "/root/testdata/sf0.01/documents.parquet",
         "--output", out_root,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
 
@@ -166,7 +171,7 @@ def test_maintenance_job_spark_submit_end_to_end(spark, tmp_path):
         "--store", store,
         "--changelog", changelog,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
 
@@ -202,7 +207,7 @@ def test_report_job_dataset_card(spark, tmp_path):
         "--input", "/root/testdata/sf0.01/documents.parquet",
         "--output", card_path,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     card = json.loads(open(card_path).read())
 
@@ -268,7 +273,7 @@ def test_table_lifecycle_extract_append_maintain_report(spark, tmp_path):
         "--store", store,
         "--changelog", changelog,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     m = json.loads(proc.stdout.strip().splitlines()[-1])
     assert m["snapshots_before"] == 2 and m["snapshots_after"] == 1
@@ -304,7 +309,7 @@ def test_decontam_job_spark_submit_end_to_end(spark, tmp_path):
         "--eval", evaldir,
         "--output", out_root,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
 
@@ -350,7 +355,7 @@ def test_rollout_job_spark_submit_end_to_end(spark, tmp_path):
         "--output", out_root,
         "--prompt-group-mod", "4",
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
 
@@ -444,7 +449,7 @@ def test_eval_job_spark_submit_end_to_end(spark, tmp_path):
         "--battles", battles_dir,
         "--output", out_root,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
 
