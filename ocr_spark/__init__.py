@@ -29,9 +29,7 @@ def __getattr__(name):
         "conv_text_salted": ("ocr_spark.operators.aggregate", "conv_text_salted"),
         "conv_turn_gap_stats": ("ocr_spark.operators.aggregate", "conv_turn_gap_stats"),
         "partition_metrics": ("ocr_spark.operators.aggregate", "partition_metrics"),
-        "run_pipeline": ("ocr_spark.pipeline", "run_pipeline"),
         "run_resumable": ("ocr_spark.pipeline", "run_resumable"),
-        "observed_extraction": ("ocr_spark.pipeline", "observed_extraction"),
         "snapshots_df": ("ocr_spark.pipeline", "snapshots_df"),
         "expire_snapshots": ("ocr_spark.pipeline", "expire_snapshots"),
         "delete_turns": ("ocr_spark.pipeline", "delete_turns"),

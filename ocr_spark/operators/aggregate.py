@@ -138,6 +138,25 @@ def conv_turn_gap_stats(transcripts: DataFrame) -> DataFrame:
     ).applyInPandas(_gap_stats_fn, _GAP_SCHEMA)
 
 
+def snapshot_totals() -> list:
+    """The five totals of a set of ``extracted`` rows, as aggregate
+    Columns: ``turns_in``, ``turns_out`` (parse_ok rows), ``bytes_in``,
+    ``bytes_out`` (extracted chars) and ``parse_failures``. The one
+    definition behind a snapshot's observed ``_METRICS.json`` and
+    ``partition_metrics``. A function, not a constant: building a Column
+    needs a live session. Over zero rows the two byte sums are NULL."""
+    # count(when(...)), not count_if: Spark rewrites count_if(not parse_ok)
+    # with its argument as a common expression, which puts two full-row
+    # Projects (nested spans/lines/blocks copied) around the observed write
+    return [
+        F.count("*").alias("turns_in"),
+        F.count(F.when(F.col("parse_ok"), 1)).alias("turns_out"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum(F.length("extracted_text")).alias("bytes_out"),
+        F.count(F.when(~F.col("parse_ok"), 1)).alias("parse_failures"),
+    ]
+
+
 def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-partition lineage/metrics rows (≙ stats + progress, SURVEY §1.3).
 
@@ -148,12 +167,6 @@ def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
         extracted.select("parse_ok", "bytes_in", "extracted_text")
         .withColumn("partition_id", F.spark_partition_id())
         .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("turns_in"),
-            F.expr("count_if(parse_ok)").alias("turns_out"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum(F.length("extracted_text")).alias("bytes_out"),
-            F.expr("count_if(not parse_ok)").alias("parse_failures"),
-        )
+        .agg(*snapshot_totals())
         .select(F.lit(run_id).alias("run_id"), "*")
     )

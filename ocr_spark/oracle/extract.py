@@ -52,51 +52,42 @@ def looks_like_html(text: str) -> bool:
     return bool(text) and "<" in text and _RE_HTML_HINT.search(text) is not None
 
 
-def _classify_parsed(doc) -> str:
-    """Routing decision for an already-JSON-parsed tool payload — the
-    single source of truth shared by classify_turn and extract_turn."""
-    if isinstance(doc, dict):
-        if "rec_texts" in doc and "rec_scores" in doc:
-            return "ocr_lines"
-        if "blocks" in doc:
-            return "pdf_blocks"
-    return "error"
-
-
-def classify_turn(text: str, tool: str) -> str:
-    """Shape-based routing classification for a turn."""
+def _route(text: str, tool: str):
+    """``(kind, doc)`` for a turn — the single routing decision shared by
+    ``classify_turn`` and ``extract_turn``. ``doc`` is the JSON-parsed
+    ``tool`` payload (None when there is none or it does not parse), so
+    the payload extractors never parse it a second time."""
     if tool:
         try:
             doc = json.loads(tool)
         except Exception:
-            return "error"
-        return _classify_parsed(doc)
+            return "error", None
+        if isinstance(doc, dict):
+            if "rec_texts" in doc and "rec_scores" in doc:
+                return "ocr_lines", doc
+            if "blocks" in doc:
+                return "pdf_blocks", doc
+        return "error", doc
     if looks_like_html(text):
-        return "html"
-    return "text"
+        return "html", None
+    return "text", None
+
+
+def classify_turn(text: str, tool: str) -> str:
+    """Shape-based routing classification for a turn."""
+    return _route(text, tool)[0]
 
 
 def extract_turn(text: str, tool: str, min_confidence: float = 0.5) -> dict:
     """Extract one turn. Returns the full ``extracted`` row as a dict.
 
-    The tool payload is JSON-parsed exactly once: classification and the
+    The tool payload is JSON-parsed exactly once: routing and the
     payload extractors share the parsed dict (semantics identical to
     classify-then-parse; ~35% of turns carry payloads, and re-parsing was
     the payload path's single largest cost)."""
     text = text or ""
     tool = tool or ""
-    doc = None
-    if tool:
-        try:
-            doc = json.loads(tool)
-        except Exception:
-            kind = "error"
-        else:
-            kind = _classify_parsed(doc)
-    elif looks_like_html(text):
-        kind = "html"
-    else:
-        kind = "text"
+    kind, doc = _route(text, tool)
     row = {
         "kind": kind,
         "extracted_text": "",

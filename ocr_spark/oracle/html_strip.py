@@ -372,6 +372,21 @@ def _parse(raw: str) -> _Builder:
     return parser.builder
 
 
+def _render(builder):
+    """``(text, spans)`` of a finished builder's kept blocks: each block's
+    chunks joined and whitespace-normalized, blocks joined with a blank
+    line and T5-cleaned; spans are the merged raw offsets of every kept
+    chunk."""
+    parts = []
+    intervals = []
+    for b in builder.blocks:
+        if _block_keep(b):
+            text = "".join(c[0] for c in b.chunks)
+            parts.append(" ".join(text.split()))  # == _RE_WS.sub(" ", ...).strip()
+            intervals.extend((c[1], c[2]) for c in b.chunks)
+    return clean_text("\n\n".join(parts)), _merge_intervals(intervals)
+
+
 def strip_html(raw: str):
     """Extract main content from an HTML string.
 
@@ -386,14 +401,7 @@ def strip_html(raw: str):
     except Exception:
         # malformed HTML: fall back to keeping nothing rather than failing
         return "", []
-    kept = [b for b in builder.blocks if _block_keep(b)]
-    parts = []
-    intervals = []
-    for b in kept:
-        text = "".join(c[0] for c in b.chunks)
-        parts.append(" ".join(text.split()))  # == _RE_WS.sub(" ", ...).strip()
-        intervals.extend((c[1], c[2]) for c in b.chunks)
-    return clean_text("\n\n".join(parts)), _merge_intervals(intervals)
+    return _render(builder)
 
 
 def _strip_html_stdlib(raw: str):
@@ -407,11 +415,4 @@ def _strip_html_stdlib(raw: str):
     except Exception:
         return "", []
     parser.builder.flush(parser.builder.current.tag)
-    kept = [b for b in parser.builder.blocks if _block_keep(b)]
-    parts = []
-    intervals = []
-    for b in kept:
-        text = "".join(c[0] for c in b.chunks)
-        parts.append(" ".join(text.split()))
-        intervals.extend((c[1], c[2]) for c in b.chunks)
-    return clean_text("\n\n".join(parts)), _merge_intervals(intervals)
+    return _render(parser.builder)

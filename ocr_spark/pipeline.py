@@ -1,11 +1,15 @@
-"""End-to-end pipeline: transcripts -> extracted + conv_text + metrics.
+"""The snapshot store that holds the ``extracted`` table.
 
 Spark recast of the reference's flagship hybrid-extract lifecycle
 (SURVEY §3 E3): scan -> classify/route/extract (one narrow Arrow map
 per scan split, no shuffle) -> snapshot write (the checkpoint) ->
-ordered rollup. The committed snapshot is the cache; resume is an
-anti-join against already-committed keys (≙ the sha256 Redis result
-cache, ``services/redis_service.py:135-202``, minus the TTL).
+ordered rollup (``operators.aggregate.conv_text_salted`` over
+``read_snapshots``). ``run_resumable`` is the only path that lands
+extracted turns, for batch jobs and, through
+``streaming.stream_to_store``, for streams. The committed snapshot is
+the cache; resume is an anti-join against already-committed keys (≙ the
+sha256 Redis result cache, ``services/redis_service.py:135-202``, minus
+the TTL).
 
 Snapshot layout: each run appends ``snapshot=N`` subdirectories of
 parquet under the output root, with a ``_COMMITTED`` marker written only
@@ -29,44 +33,19 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: F401
 
-from ocr_spark.operators.aggregate import conv_text_salted, partition_metrics
+from ocr_spark.operators.aggregate import snapshot_totals
 from ocr_spark.operators.extract import extract
 
 
-def run_pipeline(transcripts: DataFrame):
-    """Returns (extracted, conv_text, metrics) DataFrames, all lazy."""
-    extracted = extract(transcripts)
-    rollup = conv_text_salted(extracted)
-    metrics = partition_metrics(extracted, run_id=uuid.uuid4().hex[:12])
-    return extracted, rollup, metrics
-
-
-def observed_extraction(transcripts: DataFrame):
-    """Extraction with zero-pass totals via the Observation API.
-
-    Returns ``(extracted, observation)``: attach any action to
-    ``extracted`` (e.g. the snapshot write) and ``observation.get`` then
-    yields turns/bytes/parse-failure totals computed DURING that action —
-    no second scan, no extra job. ``run_resumable`` stages exactly this
-    and stores the totals in the snapshot they describe.
-    """
-    return _observed(extract(transcripts))
-
-
 def _observed(extracted: DataFrame):
-    """``extracted`` with an Observation of the snapshot totals attached."""
+    """``(extracted, observation)``: ``extracted`` with an Observation of
+    the snapshot totals attached. Any action on the returned frame (the
+    snapshot write) fills ``observation.get`` with the totals computed
+    DURING that action — no second scan, no extra job."""
     from pyspark.sql import Observation
 
     obs = Observation("extract_metrics")
-    observed = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("turns_in"),
-        F.sum(F.expr("if(parse_ok, 1, 0)")).alias("turns_out"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum(F.length("extracted_text")).alias("bytes_out"),
-        F.sum(F.expr("if(parse_ok, 0, 1)")).alias("parse_failures"),
-    )
-    return observed, obs
+    return extracted.observe(obs, *snapshot_totals()), obs
 
 
 # ---------------------------------------------------------------------------
@@ -510,7 +489,7 @@ def _drop_snapshot(root: str, snap: str) -> None:
 
 def _write_metrics(snap_dir: str, obs, run_id: str) -> dict:
     """Store the totals ``obs`` saw during the write into ``snap_dir``
-    (NULL sums of an empty write become 0); returns them."""
+    (the NULL byte sums of an empty write become 0); returns them."""
     totals = {k: v or 0 for k, v in obs.get.items()}
     totals.update(run_id=run_id, snapshot=_snapshot_idx(snap_dir))
     with open(os.path.join(snap_dir, _METRICS), "w") as fh:
@@ -560,7 +539,7 @@ def run_resumable(
             done_keys = existing.select("conv_id", "turn_idx")
             todo = transcripts.join(done_keys, ["conv_id", "turn_idx"], "left_anti")
         snap_dir = _allocate_snapshot_dir(out_root)
-        extracted, obs = observed_extraction(todo)
+        extracted, obs = _observed(extract(todo))
         _stage_parquet_into(extracted, snap_dir)
         totals = _write_metrics(snap_dir, obs, run_id)
         if existing is not None and not totals["turns_in"]:

@@ -5,11 +5,13 @@ redelivery, ``celery_app.py:55-66,84-85``), not a stream — but a 100 TB
 deployment ingests transcripts continuously, so the engine exposes the
 same extraction plan as an incremental Structured Streaming job:
 
-- ``stream_extract``: file-source stream -> the identical vectorized
-  ``extract`` plan (mapInPandas works unchanged under streaming) ->
-  parquet sink with checkpoint. Checkpoint + file-sink commit log give
-  exactly-once output per input file — the streaming twin of the batch
-  snapshot/resume path (``pipeline.run_resumable``).
+- ``stream_to_store``: file-source stream -> each micro-batch committed
+  through ``pipeline.run_resumable`` (foreachBatch), so streamed turns
+  land as ordinary snapshots of the batch store, parsed by the same
+  ``mapInArrow`` ``extract``. The checkpoint records the input files
+  each batch consumed; a replayed batch is a no-op because the resume
+  anti-join skips every committed key — exactly-once with no second
+  commit log.
 - ``windowed_turn_counts``: event-time tumbling window + watermark for
   late turns (the batch engine has no watermark concept; this is the
   streaming analog of the per-window metrics rollup).
@@ -36,8 +38,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ocr_spark.operators.extract import extract
-
 # the one canonical transcript schema lives with the source readers;
 # re-exported here for back-compat (tests and callers import it from
 # either module)
@@ -61,34 +61,49 @@ def read_transcript_stream(
     )
 
 
-def stream_extract(
+def stream_to_store(
     spark: SparkSession,
     input_dir: str,
-    output_dir: str,
+    store_root: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 64,
+    _post_commit_hook=None,
 ):
-    """Incremental extraction: new transcript files -> extracted parquet.
+    """Streaming ingestion INTO the snapshot store — continuous CDC
+    append unified with the batch table: each micro-batch commits
+    through ``pipeline.run_resumable`` via foreachBatch, so streamed
+    turns land as ordinary marker-gated snapshots that every batch
+    consumer (rollup, curate, maintenance, diff_snapshots) reads
+    unchanged.
 
-    Returns the started StreamingQuery (trigger availableNow: drain all
-    currently-available input then stop — deterministic for tests; drop
-    the trigger for a long-running continuous job).
+    Exactly-once WITHOUT relying on the sink's own commit log: the
+    checkpoint makes batch replay possible (a crash after commit but
+    before the checkpoint advances re-delivers the batch), and the
+    store's anti-join-against-committed-keys planning makes the replay
+    a NO-OP — idempotent append, the foreachBatch analog of Iceberg's
+    MERGE-on-batch-id pattern. Crash-tested in tests/test_streaming.py.
 
-    Exactly-once: the checkpoint records which input files each batch
-    consumed, and the parquet sink's ``_spark_metadata`` commit log
-    records which output files each batch produced — a batch killed
-    after writing part files but before its commit-log entry leaves
-    orphans that readers (which resolve the sink through the metadata
-    log) never see, and the restarted query re-runs that batch from the
-    checkpoint (crash-tested in tests/test_streaming.py).
-    """
+    ``_post_commit_hook(batch_id)`` is a test seam invoked after a
+    micro-batch's snapshot commit but BEFORE foreachBatch returns (i.e.
+    before the checkpoint advances) — raising from it reproduces the
+    crash-after-commit-before-checkpoint window deterministically.
+
+    Returns the started StreamingQuery (availableNow trigger)."""
+    from ocr_spark.pipeline import run_resumable
+
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    extracted = extract(stream)
+
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
+        run_resumable(
+            batch_df.sparkSession, batch_df, store_root,
+            run_id=f"stream{batch_id:06d}",
+        )
+        if _post_commit_hook is not None:
+            _post_commit_hook(batch_id)
+
     return (
-        extracted.writeStream.format("parquet")
-        .option("path", output_dir)
+        stream.writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -518,54 +533,6 @@ def stream_static_enrich(turns: DataFrame, dim: DataFrame) -> DataFrame:
         turns.join(F.broadcast(marked), "conv_id", "left")
         .withColumn("enriched", F.col("_dim_matched").isNotNull())
         .drop("_dim_matched")
-    )
-
-
-def stream_to_store(
-    spark: SparkSession,
-    input_dir: str,
-    store_root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 64,
-    _post_commit_hook=None,
-):
-    """Streaming ingestion INTO the snapshot store — continuous CDC
-    append unified with the batch table: each micro-batch commits
-    through ``pipeline.run_resumable`` via foreachBatch, so streamed
-    turns land as ordinary marker-gated snapshots that every batch
-    consumer (rollup, curate, maintenance, diff_snapshots) reads
-    unchanged.
-
-    Exactly-once WITHOUT relying on the sink's own commit log: the
-    checkpoint makes batch replay possible (a crash after commit but
-    before the checkpoint advances re-delivers the batch), and the
-    store's anti-join-against-committed-keys planning makes the replay
-    a NO-OP — idempotent append, the foreachBatch analog of Iceberg's
-    MERGE-on-batch-id pattern. Crash-tested in tests/test_streaming.py.
-
-    ``_post_commit_hook(batch_id)`` is a test seam invoked after a
-    micro-batch's snapshot commit but BEFORE foreachBatch returns (i.e.
-    before the checkpoint advances) — raising from it reproduces the
-    crash-after-commit-before-checkpoint window deterministically.
-
-    Returns the started StreamingQuery (availableNow trigger)."""
-    from ocr_spark.pipeline import run_resumable
-
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        run_resumable(
-            batch_df.sparkSession, batch_df, store_root,
-            run_id=f"stream{batch_id:06d}",
-        )
-        if _post_commit_hook is not None:
-            _post_commit_hook(batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

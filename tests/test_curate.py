@@ -72,7 +72,7 @@ def test_curate_job_spark_submit(spark, tmp_path):
         "--input", input_dir,
         "--output", out_dir,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     assert summary["funnel"]["input"] == 10  # one corpus doc per conversation

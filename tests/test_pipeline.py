@@ -5,7 +5,7 @@ import pytest
 
 from ocr_spark import fixtures
 from ocr_spark.operators.extract import extract
-from ocr_spark.pipeline import read_snapshots, run_pipeline, run_resumable
+from ocr_spark.pipeline import read_snapshots, run_resumable
 
 
 def test_distributed_generator_matches_driver_side(spark):
@@ -18,18 +18,6 @@ def test_distributed_generator_matches_driver_side(spark):
         w = want_map[(r["conv_id"], r["turn_idx"])]
         assert (r["role"], r["text"], r["tool"]) == (w[2], w[3], w[4])
         assert r["ts"].replace(tzinfo=None) == w[5].replace(tzinfo=None)
-
-
-def test_run_pipeline_shapes(spark):
-    transcripts = fixtures.transcripts_df(spark, 15)
-    extracted, rollup, metrics = run_pipeline(transcripts)
-    n_turns = transcripts.count()
-    assert extracted.count() == n_turns
-    roll = rollup.collect()
-    assert sum(r["n_turns"] for r in roll) == n_turns
-    assert {r["conv_id"] for r in roll} == {f"conv{i:08d}" for i in range(15)}
-    m = metrics.collect()
-    assert sum(r["turns_in"] for r in m) == n_turns
 
 
 def test_resume_equals_single_run(spark, tmp_path):
@@ -305,10 +293,10 @@ def test_turn_gap_stats_matches_pure_python(spark):
 def test_observed_extraction_zero_pass_metrics(spark, tmp_path):
     """Observation-API metrics come for free with the write action (no
     second scan) and reconcile exactly with the data written."""
-    from ocr_spark.pipeline import observed_extraction
+    from ocr_spark.pipeline import _observed
 
     t = fixtures.transcripts_df(spark, 12)
-    extracted, obs = observed_extraction(t)
+    extracted, obs = _observed(extract(t))
     out = str(tmp_path / "snap")
     extracted.write.parquet(out)  # the ONLY action
 

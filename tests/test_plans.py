@@ -130,6 +130,19 @@ def test_run_resumable_writes_one_arrow_map_without_payload_shuffle(
     assert n_ops(resume, "MapInArrow") == 1, resume
 
 
+def test_observed_snapshot_write_copies_no_row(spark, transcripts_parquet):
+    """The snapshot totals are observed on the extracted rows as they are
+    written: CollectMetrics sits on the MapInArrow with no Project around
+    it, so no row (nested spans/lines/blocks included) is copied just to
+    count it."""
+    from ocr_spark import pipeline
+
+    observed, _obs = pipeline._observed(extract(spark.read.parquet(transcripts_parquet)))
+    p = plan(observed)
+    assert n_ops(p, "CollectMetrics") == 1, p
+    assert n_ops(p, "Project") == 0, p
+
+
 def test_read_metrics_scans_no_file_and_starts_no_python(
     spark, transcripts_parquet, tmp_path
 ):

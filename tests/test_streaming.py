@@ -1,5 +1,6 @@
-"""Structured Streaming tests: incremental extraction exactly-once via
-checkpoint, watermarked windowed aggregation, custom stateful operator."""
+"""Structured Streaming tests: incremental ingestion into the snapshot
+store exactly-once via checkpoint + idempotent replay, watermarked
+windowed aggregation, custom stateful operator."""
 
 from __future__ import annotations
 
@@ -11,9 +12,10 @@ from pyspark.sql import functions as F
 
 from ocr_spark import fixtures
 from ocr_spark.operators.extract import extract
+from ocr_spark.pipeline import read_snapshots, snapshots_df, vacuum_uncommitted
 from ocr_spark.streaming import (
     stateful_conv_progress,
-    stream_extract,
+    stream_to_store,
     windowed_turn_counts,
 )
 from ocr_spark.streaming.incremental import read_transcript_stream, run_windowed_stream
@@ -49,54 +51,66 @@ def _sorted_extract(df):
     ]
 
 
-def test_stream_extract_is_incremental_and_exactly_once(spark, dirs):
+def test_stream_to_store_is_incremental_and_exactly_once(spark, dirs):
+    """Each drain lands only the files the checkpoint has not consumed,
+    as ordinary snapshots equal to the batch extraction; a drain with no
+    new input commits nothing."""
+    store = dirs["out"]
+
+    def drain():
+        q = stream_to_store(spark, dirs["in"] + "/*", store, dirs["ckpt"])
+        q.awaitTermination()
+        return q
+
     _write_batch(spark, dirs["in"], 0, 12, "b1")
-    q = stream_extract(spark, dirs["in"] + "/*", dirs["out"], dirs["ckpt"])
-    q.awaitTermination()
-    got1 = _sorted_extract(spark.read.parquet(dirs["out"]))
+    drain()
     want1 = _sorted_extract(extract(spark.read.parquet(dirs["in"] + "/b1")))
-    assert got1 == want1
+    assert _sorted_extract(read_snapshots(spark, store)) == want1
 
-    # second batch arrives; re-run drains ONLY the new files (checkpoint)
+    # second batch arrives; the checkpoint (not the store's anti-join)
+    # skips b1: the query reads b2's rows only
     _write_batch(spark, dirs["in"], 12, 8, "b2")
-    q = stream_extract(spark, dirs["in"] + "/*", dirs["out"], dirs["ckpt"])
-    q.awaitTermination()
-    got2 = _sorted_extract(spark.read.parquet(dirs["out"]))
+    q = drain()
+    n_b2 = spark.read.parquet(dirs["in"] + "/b2").count()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == n_b2
     want2 = _sorted_extract(extract(spark.read.parquet(dirs["in"] + "/*")))
-    assert got2 == want2
+    assert _sorted_extract(read_snapshots(spark, store)) == want2
 
-    # re-running with no new input adds nothing (exactly-once)
-    q = stream_extract(spark, dirs["in"] + "/*", dirs["out"], dirs["ckpt"])
-    q.awaitTermination()
-    assert _sorted_extract(spark.read.parquet(dirs["out"])) == want2
+    # re-running with no new input commits nothing (exactly-once)
+    n_snapshots = snapshots_df(spark, store).count()
+    drain()
+    assert snapshots_df(spark, store).count() == n_snapshots
+    assert _sorted_extract(read_snapshots(spark, store)) == want2
 
 
-def test_stream_extract_crash_between_triggers_no_dup_no_loss(spark, dirs):
-    """Kill the query mid-drain (after >=1 committed microbatch, possibly
-    mid-batch-2 — the crash case), restart from the same checkpoint, and
-    assert the sink holds every input turn exactly once.
+def test_stream_to_store_stop_mid_drain_no_dup_no_loss(spark, dirs):
+    """Stop the query mid-drain (after >=1 micro-batch ran, possibly
+    while a later one is writing its snapshot), restart from the same
+    checkpoint, and assert the store holds every input turn exactly
+    once.
 
-    The kill is abrupt from the query's perspective: stop() aborts any
-    in-flight batch after its tasks may already have written part files,
-    which is precisely the window where a non-transactional sink would
-    duplicate on restart. The parquet sink's _spark_metadata commit log +
-    the checkpointed source offsets make the restart idempotent."""
+    The stop is abrupt from the query's perspective: it can cancel a
+    micro-batch after its snapshot is staged or even committed but
+    before the checkpoint advances. Uncommitted staging stays invisible
+    (marker-gated reads) and the replayed batch is a no-op (the resume
+    anti-join), so the restart neither loses nor duplicates a turn."""
     for i in range(12):
         _write_batch(spark, dirs["in"], i * 2, 2, f"w{i}")
     total_in = spark.read.parquet(dirs["in"] + "/*").count()
+    store = dirs["out"]
 
     # one file per trigger -> many microbatches; stop after the first
-    # batch commits (the stop lands between triggers or mid-batch).
+    # batch runs (the stop lands between triggers or mid-batch).
     # Retried a few times because a fast drain can outrun the stop —
-    # the test needs a genuinely partial sink.
+    # the test needs a genuinely partial store.
     import time as _time
 
     partial = None
     for attempt in range(4):
-        shutil.rmtree(dirs["out"], ignore_errors=True)
+        shutil.rmtree(store, ignore_errors=True)
         shutil.rmtree(dirs["ckpt"], ignore_errors=True)
-        q = stream_extract(
-            spark, dirs["in"] + "/*", dirs["out"], dirs["ckpt"], max_files_per_trigger=1
+        q = stream_to_store(
+            spark, dirs["in"] + "/*", store, dirs["ckpt"], max_files_per_trigger=1
         )
         deadline = _time.time() + 60
         while _time.time() < deadline:
@@ -106,21 +120,27 @@ def test_stream_extract_crash_between_triggers_no_dup_no_loss(spark, dirs):
         assert q.recentProgress, "stream never made progress"
         q.stop()
         q.awaitTermination()
-        partial = spark.read.parquet(dirs["out"]).count()
+        committed = read_snapshots(spark, store)
+        partial = committed.count() if committed is not None else 0
         if 0 < partial < total_in:
             break
     assert partial is not None and 0 < partial < total_in, (
-        f"kill landed before any/after every batch on all attempts ({partial})"
+        f"stop landed before any/after every batch on all attempts ({partial})"
     )
 
     # restart from the same checkpoint: drains the remainder, no dups
-    q = stream_extract(
-        spark, dirs["in"] + "/*", dirs["out"], dirs["ckpt"], max_files_per_trigger=1
+    q = stream_to_store(
+        spark, dirs["in"] + "/*", store, dirs["ckpt"], max_files_per_trigger=1
     )
     q.awaitTermination()
-    got = _sorted_extract(spark.read.parquet(dirs["out"]))
+    got = read_snapshots(spark, store)
+    assert got.count() == total_in
+    assert got.select("conv_id", "turn_idx").distinct().count() == total_in
     want = _sorted_extract(extract(spark.read.parquet(dirs["in"] + "/*")))
-    assert got == want  # every turn exactly once, values identical
+    assert _sorted_extract(got) == want  # every turn exactly once, values identical
+    # whatever the stop left staged is garbage, never table data
+    vacuum_uncommitted(store)
+    assert _sorted_extract(read_snapshots(spark, store)) == want
 
 
 def test_stream_dedup_drops_redelivered_turns(spark, dirs):
@@ -489,9 +509,6 @@ def test_stream_to_store_crash_replay_is_idempotent(spark, dirs, tmp_path):
     assert the STORE holds every input turn exactly once — the replay
     of the committed batch is a no-op because run_resumable plans an
     anti-join against committed keys."""
-    from ocr_spark.pipeline import read_snapshots, snapshots_df
-    from ocr_spark.streaming.incremental import stream_to_store
-
     for i in range(12):
         _write_batch(spark, dirs["in"], i * 2, 2, f"w{i}")
     total_in = spark.read.parquet(dirs["in"] + "/*").count()

@@ -160,7 +160,7 @@ def test_sft_prep_job_spark_submit(spark, tmp_path):
         "--input", input_dir,
         "--output", out_dir,
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     out = spark.read.parquet(out_dir)
@@ -197,7 +197,7 @@ def test_sft_prep_job_spark_submit(spark, tmp_path):
     proc2 = subprocess.run(
         cmd[:-4]
         + ["--input", input_dir2, "--output", out_dir2, "--novelty-gate"],
-        capture_output=True, text=True, timeout=300,
+        capture_output=True, text=True, cwd=tmp_path, timeout=300,
     )
     assert proc2.returncode == 0, proc2.stderr[-3000:]
     gated = json.loads(proc2.stdout.strip().splitlines()[-1])
