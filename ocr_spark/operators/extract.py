@@ -177,9 +177,11 @@ def _extract_batches(batches, out_schema: T.StructType):
     Every output array is assembled straight from buffers
     (``pa.Array.from_buffers`` over stdlib ``array`` offsets and values,
     packed validity bitmaps and joined UTF-8 bytes), typed from the Arrow
-    form of ``out_schema``. pyarrow's Python-list converter (``pa.array``)
-    imports pandas on first use, which grows every Python worker by ~38 MB;
-    this loop never calls it.
+    form of ``out_schema``; ``bytes_in`` comes from the input columns' Arrow
+    offsets (``pyarrow.compute``), with no per-row encode. pyarrow's
+    Python-value converter (``pa.array``, ``pa.scalar``) imports pandas on
+    first use, which grows every Python worker by ~38 MB; this loop never
+    calls it.
 
     Each task also pays a fixed setup cost before its first batch: the
     worker's per-task ``importlib.invalidate_caches()`` re-reads every zip
@@ -189,6 +191,7 @@ def _extract_batches(batches, out_schema: T.StructType):
     archive still refreshes."""
     _skip_spark_archive_refresh()
     import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(out_schema)
@@ -234,22 +237,27 @@ def _extract_batches(batches, out_schema: T.StructType):
     def bboxes(struct_type, offsets, values):
         return lists(struct_type.field("bbox").type, offsets, fixed(f64, "d", values))
 
+    i64 = types["bytes_in"]
+    zero = fixed(i64, "q", [0])[0]  # pa.scalar(0) would import pandas
+
+    def utf8_bytes(batch, name):
+        """Per-row UTF-8 byte length of a string column, read from its
+        Arrow offsets; NULL counts 0."""
+        return pc.fill_null(pc.binary_length(batch.column(name)).cast(i64), zero)
+
     for batch in batches:
         texts = batch.column("text").to_pylist()
         tools = batch.column("tool").to_pylist()
-        kind, etext, ok, err, nbytes = [], [], [], [], []
+        kind, etext, ok, err = [], [], [], []
         s_off, s_start, s_end = [0], [], []
         l_off, l_text, l_conf, l_boff, l_bval = [0], [], [], [0], []
         b_off, b_type, b_text, b_boff, b_bval = [0], [], [], [0], []
         for text, tool in zip(texts, tools):
-            text = text or ""
-            tool = tool or ""
-            row = extract_turn(text, tool)
+            row = extract_turn(text or "", tool or "")
             kind.append(row["kind"])
             etext.append(row["extracted_text"])
             ok.append(row["parse_ok"])
             err.append(row["error"])
-            nbytes.append(len(text.encode()) + len(tool.encode()))
             for a, b in row["spans"]:
                 s_start.append(a)
                 s_end.append(b)
@@ -296,7 +304,7 @@ def _extract_batches(batches, out_schema: T.StructType):
             ),
             pa.Array.from_buffers(types["parse_ok"], len(ok), [None, pa.py_buffer(_pack_bits(ok))]),
             strings(types["error"], err),
-            fixed(types["bytes_in"], "q", nbytes),
+            pc.add(utf8_bytes(batch, "text"), utf8_bytes(batch, "tool")),
         ]
         yield pa.RecordBatch.from_arrays(
             [batch.column(k) for k in keys] + parsed, names=schema.names

@@ -11,15 +11,18 @@ the cache; resume is an anti-join against already-committed keys (≙ the
 sha256 Redis result cache, ``services/redis_service.py:135-202``, minus
 the TTL).
 
-Snapshot layout: each run appends ``snapshot=N`` subdirectories of
-parquet under the output root, with a ``_COMMITTED`` marker written only
-after the parquet job succeeds — readers ignore uncommitted snapshots, so
-a killed run never corrupts the table (Iceberg would give us this
-atomically; the marker is the no-dependency stand-in with the same
-reader-visible semantics). Each data snapshot also holds ``_METRICS.json``,
-the totals observed while its parquet was written (Iceberg's snapshot
+Snapshot layout: each commit appends a ``snapshot=N`` subdirectory of
+parquet under the output root. A writer stages its parquet and sidecar
+files in a ``_staging-*`` dir, which readers never list; ``_publish``
+then writes the ``_COMMITTED`` marker, takes the next index N and renames
+the staged dir to ``snapshot=N``, all under the commit lock. A killed run
+never corrupts the table (Iceberg would give us this atomically; the
+marker and the rename are the no-dependency stand-in with the same
+reader-visible semantics), and N follows commit order, as Iceberg's
+sequence numbers do. Each data snapshot also holds ``_METRICS.json``, the
+totals observed while its parquet was written (Iceberg's snapshot
 ``summary``): it commits, loses a race and expires with its data, and
-``read_metrics`` reads it in the driver.
+``read_metrics`` reads it in the driver; the dir name is its index.
 """
 
 from __future__ import annotations
@@ -80,18 +83,20 @@ def _snapshot_idx(path: str) -> int:
 
 
 def _next_snapshot_idx(root: str) -> int:
-    """1 + max index over ALL snapshot dirs (committed, uncommitted, or
-    retired) — indices are allocate-only, never reused, so an incremental
-    run can never target a directory another reader is consuming (the
-    count-based scheme collided after compaction made indices sparse)."""
+    """1 + max index over ALL snapshot dirs (committed, retired, or a
+    markerless dir left by older code). ``_publish`` takes it under the
+    commit lock, so indices follow commit order and a commit can never
+    land on a directory another reader is consuming (the count-based
+    scheme collided after compaction made indices sparse). An index is
+    reused only once every dir at or above it is gone."""
     return 1 + max(map(_snapshot_idx, _snapshot_dirs(root)), default=-1)
 
 
 def _superseded_names(root: str, as_of: int | None = None) -> set[str]:
     """Dir names replaced by a committed compacted snapshot. Reading the
-    lists only from COMMITTED snapshots makes compaction atomic at the
-    marker write: before it, old dirs are visible; after it, they are
-    ignored even though their own markers still exist. With ``as_of``,
+    lists only from COMMITTED snapshots makes compaction atomic at its
+    commit: before it, old dirs are visible; after it, they are ignored
+    even though their own markers still exist. With ``as_of``,
     only tombstones written by snapshots <= that index count — a
     compaction that happened AFTER the as-of point must not hide the
     dirs that were live then."""
@@ -324,24 +329,24 @@ def delete_turns(spark: SparkSession, root: str, keys: DataFrame) -> int:
     compliance-deletion path a training corpus needs: commit a snapshot
     holding only (conv_id, turn_idx) KEYS; readers hide matching rows
     from every earlier data snapshot without rewriting a byte of data.
-    Deletion is point-in-time: a later re-append (or a resumable re-run
-    over a source that still contains the turn) resurrects the key —
-    Iceberg's sequence-number semantics; purge the SOURCE too for
-    permanent removal, then ``compact_snapshots`` applies deletes
-    physically (read-side merge cost drops to zero and the bytes leave
-    disk). Run compaction BEFORE retention so expiry can never separate
-    a delete file from the data it masks (``jobs/maintenance_job.py``
-    orders it that way). Returns the delete snapshot's index."""
-    snap_dir = _allocate_snapshot_dir(root)
-    _stage_parquet_into(
-        keys.select("conv_id", "turn_idx").distinct().coalesce(1), snap_dir
+    Deletion is point-in-time: the delete's index is taken when it
+    commits, so it hides every row committed before it, and a later
+    re-append (or a resumable re-run over a source that still contains
+    the turn) resurrects the key — Iceberg's sequence-number semantics;
+    purge the SOURCE too for permanent removal, then
+    ``compact_snapshots`` applies deletes physically (read-side merge
+    cost drops to zero and the bytes leave disk). Run compaction BEFORE
+    retention so expiry can never separate a delete file from the data
+    it masks (``jobs/maintenance_job.py`` orders it that way). Returns
+    the delete snapshot's index."""
+    staged = _stage_parquet_into(
+        keys.select("conv_id", "turn_idx").distinct().coalesce(1), root
     )
-    with open(os.path.join(snap_dir, _DELETES_FLAG), "w") as fh:
+    with open(os.path.join(staged, _DELETES_FLAG), "w") as fh:
         fh.write("ok\n")
     # no base state: a delete does not depend on what else committed, so
     # it never needs to re-plan
-    _publish(root, snap_dir)
-    return _snapshot_idx(snap_dir)
+    return _snapshot_idx(_publish(root, staged))
 
 
 def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
@@ -385,53 +390,27 @@ def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
-def _allocate_snapshot_dir(root: str) -> str:
-    """Atomically claim the next snapshot directory. ``os.mkdir`` is the
-    allocation point (atomic on POSIX), so two concurrent writers that
-    both computed the same next index can never stage into the same
-    ``snapshot=N`` — the loser's mkdir fails and it claims the next one."""
-    os.makedirs(root, exist_ok=True)
-    idx = _next_snapshot_idx(root)
-    while True:
-        path = os.path.join(root, f"snapshot={idx}")
-        try:
-            os.mkdir(path)
-            return path
-        except FileExistsError:
-            idx += 1
-
-
-def _stage_parquet_into(df: DataFrame, allocated_dir: str) -> None:
-    """Write ``df`` as parquet into an already-allocated ``snapshot=N``
-    directory WITHOUT surrendering the allocation. A plain
-    ``mode("overwrite")`` write fs.delete()s the target first, and in
-    the delete-to-recreate window a concurrent ``_allocate_snapshot_dir``
-    sees the index free, re-claims it with mkdir, and two writers
-    interleave part-files inside one snapshot. So the data is staged to
-    a sibling directory (named so ``_snapshot_dirs`` can never parse it
-    as a snapshot) and ``os.rename``d onto the reserved dir: POSIX
-    rename atomically replaces an EMPTY target directory, and the
-    target is our own fresh mkdir reservation, so it is empty by
-    construction."""
-    staging = os.path.join(
-        os.path.dirname(allocated_dir),
-        f"_staging-{uuid.uuid4().hex[:12]}",
-    )
+def _stage_parquet_into(df: DataFrame, root: str) -> str:
+    """Write ``df`` as parquet into a new ``_staging-*`` dir under
+    ``root`` and return its path. ``_snapshot_dirs`` never lists the
+    name, so readers never see it; ``_publish`` numbers it at commit."""
+    staging = os.path.join(root, f"_staging-{uuid.uuid4().hex[:12]}")
     try:
         df.write.parquet(staging)
-        os.rename(staging, allocated_dir)
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
+    return staging
 
 
 @_contextlib.contextmanager
 def _commit_lock(root: str, timeout_s: float = 60.0, stale_s: float = 300.0):
-    """Atomic-mkdir mutex around the commit point (validate + publish
-    marker). Held only across a directory listing and a marker write —
-    never across a Spark job — so contention is microseconds. A lock
-    older than ``stale_s`` is presumed abandoned by a crashed writer and
-    broken (the Iceberg-catalog analog is the metastore lock timeout)."""
+    """Atomic-mkdir mutex around the commit point (validate, marker,
+    numbering). Held only across directory listings, a marker write and
+    a rename — never across a Spark job — so contention is microseconds.
+    A lock older than ``stale_s`` is presumed abandoned by a crashed
+    writer and broken (the Iceberg-catalog analog is the metastore lock
+    timeout)."""
     lock = os.path.join(root, "_COMMIT_LOCK")
     os.makedirs(root, exist_ok=True)
     deadline = time.time() + timeout_s
@@ -458,41 +437,46 @@ def _commit_lock(root: str, timeout_s: float = 60.0, stale_s: float = 300.0):
 
 def _publish(
     root: str,
-    snap_dir: str,
+    staged: str,
     base_state: set[str] | None = None,
     race_hook=None,
-) -> bool:
-    """The store's one commit point: write ``snap_dir``'s ``_COMMITTED``
-    marker under the commit lock. With ``base_state`` (the committed set
-    a writer planned against) the commit is optimistic: it publishes only
-    if that set is unchanged — any concurrent commit, delete or expiry
-    forces the writer to re-plan (Iceberg's serializable isolation). A
-    lost commit drops the staged snapshot and its metrics; returns
-    whether the commit won. ``race_hook`` runs just before validation
-    (the writers' test seam for interleaving a competing commit)."""
+) -> str | None:
+    """The store's one commit point. Under the commit lock it writes
+    ``staged``'s ``_COMMITTED`` marker, takes the next snapshot index N
+    and renames the staged dir to ``snapshot=N``; returns that path.
+    Numbering at commit keeps indices in commit order, so an equality
+    delete hides exactly the rows committed before it. With
+    ``base_state`` (the committed set a writer planned against) the
+    commit is optimistic: it publishes only if that set is unchanged —
+    any concurrent commit, delete or expiry forces the writer to re-plan
+    (Iceberg's serializable isolation). A lost commit removes the staged
+    dir and returns None. ``race_hook`` runs just before validation (the
+    writers' test seam for interleaving a competing commit)."""
     if race_hook is not None:
         race_hook()
     with _commit_lock(root):
-        won = base_state is None or _committed_state(root) == base_state
-        if won:
-            with open(os.path.join(snap_dir, _MARKER), "w") as fh:
+        if base_state is None or _committed_state(root) == base_state:
+            with open(os.path.join(staged, _MARKER), "w") as fh:
                 fh.write("ok\n")
-    if not won:
-        _drop_snapshot(root, snap_dir)
-    return won
+            snap_dir = os.path.join(root, f"snapshot={_next_snapshot_idx(root)}")
+            os.rename(staged, snap_dir)
+            return snap_dir
+    _drop_snapshot(root, staged)
+    return None
 
 
 def _drop_snapshot(root: str, snap: str) -> None:
-    """Remove snapshot ``snap`` (a dir path or name) and its metrics."""
+    """Remove the snapshot or staged dir ``snap`` (a path or name) and
+    everything in it."""
     shutil.rmtree(os.path.join(root, os.path.basename(snap)), ignore_errors=True)
 
 
-def _write_metrics(snap_dir: str, obs, run_id: str) -> dict:
-    """Store the totals ``obs`` saw during the write into ``snap_dir``
+def _write_metrics(staged: str, obs, run_id: str) -> dict:
+    """Store the totals ``obs`` saw during the write into ``staged``
     (the NULL byte sums of an empty write become 0); returns them."""
     totals = {k: v or 0 for k, v in obs.get.items()}
-    totals.update(run_id=run_id, snapshot=_snapshot_idx(snap_dir))
-    with open(os.path.join(snap_dir, _METRICS), "w") as fh:
+    totals["run_id"] = run_id
+    with open(os.path.join(staged, _METRICS), "w") as fh:
         json.dump(totals, fh)
     return totals
 
@@ -513,17 +497,17 @@ def run_resumable(
 
     Concurrent-writer safety is Iceberg's optimistic model in miniature:
     each writer plans its anti-join against the committed table state it
-    observed, stages into an atomically-allocated directory (two writers
+    observed, stages into its own ``_staging-*`` directory (two writers
     can never collide on a path), and at publish time validates — under a
     microseconds-scale mkdir mutex — that the committed state is still
-    the one it planned against. A writer that lost the race discards its
-    staged data and re-plans from the new state (the anti-join then
-    excludes whatever the winner committed), up to ``max_commit_retries``
-    times. Serializable-append semantics: no duplicate (conv_id,
+    the one it planned against; only then does the snapshot get its
+    index. A writer that lost the race discards its staged data and
+    re-plans from the new state (the anti-join then excludes whatever
+    the winner committed), up to ``max_commit_retries`` times. Serializable-append semantics: no duplicate (conv_id,
     turn_idx) can ever be published by racing writers.
 
     Each committed snapshot holds its own totals in ``_METRICS.json``
-    (run_id, snapshot, turns in/out, bytes in/out, parse failures — ≙ the
+    (run_id, turns in/out, bytes in/out, parse failures — ≙ the
     reference's stats + progress rows, SURVEY §1.3), observed during the
     staged write itself: no re-read and no extra job.
 
@@ -538,19 +522,18 @@ def run_resumable(
         if existing is not None:
             done_keys = existing.select("conv_id", "turn_idx")
             todo = transcripts.join(done_keys, ["conv_id", "turn_idx"], "left_anti")
-        snap_dir = _allocate_snapshot_dir(out_root)
         extracted, obs = _observed(extract(todo))
-        _stage_parquet_into(extracted, snap_dir)
-        totals = _write_metrics(snap_dir, obs, run_id)
+        staged = _stage_parquet_into(extracted, out_root)
+        totals = _write_metrics(staged, obs, run_id)
         if existing is not None and not totals["turns_in"]:
             # fully-caught-up rerun: don't publish (or keep) an empty
             # snapshot — no-op reruns must not grow the directory count.
             # (If a racing writer committed since we planned, the next
             # resumable run simply picks its rows up — an empty staged
             # set can't conflict with anything.)
-            _drop_snapshot(out_root, snap_dir)
+            _drop_snapshot(out_root, staged)
             return existing
-        if _publish(out_root, snap_dir, base_state, _race_hook):
+        if _publish(out_root, staged, base_state, _race_hook):
             return read_snapshots(spark, out_root)
         # lost the race: _publish dropped the staged snapshot; re-plan
     raise RuntimeError(
@@ -584,19 +567,19 @@ def compact_snapshots(
     `rewrite_data_files` compaction; here the marker-store equivalent).
 
     Crash-safe publish-first protocol: the compacted data is fully
-    written into an atomically-allocated ``snapshot=N`` directory and
-    stamped with a ``_SUPERSEDES`` list BEFORE its ``_COMMITTED`` marker
-    is created. The marker write is the atomic switch — readers either
-    see the old snapshots (marker absent) or the new one with the old
+    written into a ``_staging-*`` directory and stamped with a
+    ``_SUPERSEDES`` list BEFORE ``_publish`` marks it and renames it to
+    ``snapshot=N``. That rename is the atomic switch — readers either
+    see the old snapshots (no new dir yet) or the new one with the old
     ones tombstoned. Committed data is never unpublished before its
     replacement is durable; a crash at any point leaves a complete,
     readable, non-duplicated table, and leftovers are vacuumable.
 
     The commit is optimistic, as in ``run_resumable``: ``_publish``
-    writes the marker only if the committed set is still exactly the one
-    the rewrite planned against. Without this, a ``delete_turns``
-    snapshot committing between the path listing and the marker write
-    would silently lose the deletion: the compacted rows land at an index
+    commits only if the committed set is still exactly the one the
+    rewrite planned against. Without this, a ``delete_turns``
+    snapshot committing between the path listing and this commit would
+    silently lose the deletion: the compacted rows land at an index
     HIGHER than the delete's, so the merge-on-read ``_del_idx <
     _row_snap`` filter would resurrect the deleted keys forever. A lost race discards the staged rewrite and
     re-plans (up to ``max_commit_retries`` times, then returns 0 — a
@@ -656,13 +639,12 @@ def compact_snapshots(
         df = _read_snapshot_paths(spark, paths)
         if df is None:
             return 0
-        final_dir = _allocate_snapshot_dir(out_root)
         df, obs = _observed(df)
-        _stage_parquet_into(df, final_dir)
-        _write_metrics(final_dir, obs, uuid.uuid4().hex[:12])
-        with open(os.path.join(final_dir, _SUPERSEDES), "w") as fh:
+        staged = _stage_parquet_into(df, out_root)
+        _write_metrics(staged, obs, uuid.uuid4().hex[:12])
+        with open(os.path.join(staged, _SUPERSEDES), "w") as fh:
             fh.write("\n".join(os.path.basename(p) for p in paths) + "\n")
-        if not _publish(out_root, final_dir, base_state, _race_hook):
+        if not _publish(out_root, staged, base_state, _race_hook):
             continue  # lost the race: staged rewrite dropped; re-plan
         # lazy cleanup (also vacuum's job if we crash mid-loop)
         for p in paths:
@@ -678,10 +660,10 @@ def expire_snapshots(
     respect_tags: bool = True,
 ) -> list[str]:
     """Retention: drop all but the newest ``keep_last`` committed
-    snapshots (and their metrics) — the store's analog of the reference's
-    result TTL (`celery_app.py:58` result_expires=3600; Redis cleanup
+    snapshots — the store's analog of the reference's result TTL
+    (`celery_app.py:58` result_expires=3600; Redis cleanup
     `services/redis_service.py:434-477`). Count-based by default since
-    snapshot indices are allocate-only and monotonic; ``max_age_s``
+    snapshot indices follow commit order; ``max_age_s``
     additionally expires any snapshot whose *commit* (marker mtime —
     publish time, not data-write time) is older than that many seconds,
     completing the ≙ of the reference's 3600 s TTL. The two compose:
@@ -753,11 +735,10 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
         if not os.path.exists(os.path.join(path, _MARKER)) or name in dead:
             shutil.rmtree(path, ignore_errors=True)
             removed.append(path)
-    # _staging-* dirs are _stage_parquet_into's pre-rename scratch; one
-    # left behind means the writer died mid-write (a kill skips its own
-    # cleanup). Reaping them here rides the same contract as the
-    # markerless-dir sweep above: vacuum doesn't run concurrently with
-    # in-flight writers.
+    # markerless snapshot dirs come from stores written by older code or
+    # by hand; a _staging-* dir left behind means its writer died before
+    # its commit (a kill skips its own cleanup). Reaping them rides one
+    # contract: vacuum doesn't run concurrently with in-flight writers.
     for name in sorted(os.listdir(out_root)):
         if name.startswith("_staging-"):
             path = os.path.join(out_root, name)
@@ -775,8 +756,8 @@ def read_metrics(spark: SparkSession, out_root: str) -> DataFrame | None:
     for p in _committed_snapshots(out_root):
         with _contextlib.suppress(FileNotFoundError):
             with open(os.path.join(p, _METRICS)) as fh:
-                rows.append(fh.read())
+                rows.append({**json.load(fh), "snapshot": _snapshot_idx(p)})
     if not rows:
         return None
-    totals = F.from_json(F.lit("[" + ",".join(rows) + "]"), _METRICS_SCHEMA)
+    totals = F.from_json(F.lit(json.dumps(rows)), _METRICS_SCHEMA)
     return spark.range(0, 1, 1, 1).select(F.inline(totals))

@@ -480,7 +480,7 @@ def test_schema_evolution_add_column_reads_as_null(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from ocr_spark.pipeline import _MARKER, _allocate_snapshot_dir
+    from ocr_spark.pipeline import _MARKER, _next_snapshot_idx
 
     full = spark.createDataFrame(
         fixtures.generate_transcripts(6), fixtures.TRANSCRIPT_COLUMNS
@@ -490,7 +490,7 @@ def test_schema_evolution_add_column_reads_as_null(spark, tmp_path):
     assert "quality" not in v1.columns
 
     # a later pipeline version adds a per-turn quality column
-    snap_dir = _allocate_snapshot_dir(root)
+    snap_dir = os.path.join(root, f"snapshot={_next_snapshot_idx(root)}")
     evolved = v1.limit(0).withColumn("quality", F.lit(0.5)).withColumn(
         "conv_id", F.lit("convEVOLVED")
     )
@@ -902,10 +902,10 @@ def test_tagged_compaction_never_unmasks_protected_deletes(spark, tmp_path):
 
 
 def test_vacuum_reaps_stale_staging_dirs(spark, tmp_path):
-    """A writer killed between staging its parquet and renaming it onto
-    the allocated snapshot dir leaves a _staging-* scratch dir (the
-    in-process cleanup never ran). vacuum_uncommitted reaps it along
-    with the empty markerless reservation; committed data is untouched."""
+    """A writer killed between staging its parquet and its commit leaves
+    a _staging-* dir (the in-process cleanup never ran).
+    vacuum_uncommitted reaps it, and the empty markerless snapshot dir an
+    older writer could leave; committed data is untouched."""
     import os
 
     from ocr_spark.pipeline import vacuum_uncommitted
@@ -914,8 +914,8 @@ def test_vacuum_reaps_stale_staging_dirs(spark, tmp_path):
     full = fixtures.transcripts_df(spark, 6)
     run_resumable(spark, full, root)
     n = read_snapshots(spark, root).count()
-    # fake the mid-write crash: an allocated empty reservation plus the
-    # orphaned staging dir that was about to be renamed onto it
+    # fake the crashes: an older writer's empty markerless snapshot dir
+    # plus an orphaned staging dir that never reached _publish
     os.mkdir(os.path.join(root, "snapshot=9"))
     full.limit(3).write.parquet(os.path.join(root, "_staging-deadbeef0000"))
     removed = vacuum_uncommitted(root)
@@ -930,10 +930,10 @@ def test_vacuum_reaps_stale_staging_dirs(spark, tmp_path):
 def test_delete_turns_stages_before_filling_its_reserved_dir(
     spark, tmp_path, monkeypatch
 ):
-    """delete_turns fills its reserved snapshot dir by renaming a staged
-    ``_staging-*`` dir onto it. A ``mode("overwrite")`` write into the
-    reservation would delete the dir first, and in that window a
-    concurrent writer's allocation could claim the same index."""
+    """delete_turns stages its keys in a ``_staging-*`` dir, and the
+    commit renames that dir to the ``snapshot=N`` whose index it returns:
+    the delete never writes into a ``snapshot=`` dir that already
+    exists."""
     import os
 
     from ocr_spark.pipeline import delete_turns
@@ -993,3 +993,124 @@ def test_publish_is_the_only_marker_write():
         if writes_marker(node)
     ]
     assert writers == ["_publish"]
+    numberers = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_next_snapshot_idx"
+    ]
+    assert numberers == ["_publish"]
+
+
+def test_delete_committing_after_append_hides_appended_keys(
+    spark, tmp_path, monkeypatch
+):
+    """A snapshot's index is taken when it commits, so a delete that
+    commits after an append of the same keys hides them — even when the
+    append started after the delete began staging (Iceberg's sequence
+    numbers). Numbering at staging time gave the delete the lower index
+    and left every appended key visible."""
+    import os
+
+    from ocr_spark import pipeline
+
+    full = fixtures.transcripts_df(spark, 4).cache()
+    root = str(tmp_path / "store")
+    run_resumable(spark, full.filter("turn_idx > 0"), root)
+    victims = full.filter("turn_idx = 0").select("conv_id", "turn_idx")
+    n_victims = victims.count()
+    assert n_victims > 0
+
+    publish = pipeline._publish
+    raced = {"done": False}
+
+    def append_first(root_, staged, *args, **kwargs):
+        is_delete = os.path.exists(os.path.join(staged, pipeline._DELETES_FLAG))
+        if is_delete and not raced["done"]:
+            raced["done"] = True
+            run_resumable(spark, full, root)  # commits the victims' keys
+        return publish(root_, staged, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "_publish", append_first)
+    pipeline.delete_turns(spark, root, victims)
+    monkeypatch.undo()
+
+    assert raced["done"]
+    after = read_snapshots(spark, root)
+    assert after.join(victims, ["conv_id", "turn_idx"]).count() == 0
+    assert after.count() == full.count() - n_victims
+
+
+def test_staged_writer_leaves_no_markerless_snapshot_dir(spark, tmp_path):
+    """While a writer has staged but not yet committed, every
+    ``snapshot=*`` dir under the root is committed: staging lives in
+    ``_staging-*`` and a snapshot dir exists only from its commit on."""
+    import os
+
+    from ocr_spark.pipeline import _MARKER
+
+    full = fixtures.transcripts_df(spark, 4).cache()
+    root = str(tmp_path / "store")
+    run_resumable(spark, full.filter("turn_idx = 0"), root)
+
+    seen = []
+
+    def look():
+        names = sorted(n for n in os.listdir(root) if n.startswith("snapshot="))
+        seen.append(
+            {n: os.path.exists(os.path.join(root, n, _MARKER)) for n in names}
+        )
+
+    run_resumable(spark, full, root, _race_hook=look)
+    assert seen == [{"snapshot=0": True}]
+    assert os.path.exists(os.path.join(root, "snapshot=1", _MARKER))
+
+
+def test_concurrent_publishes_take_distinct_indices(tmp_path):
+    """More committers than cores publish at once: each gets its own
+    index, the indices are exactly 0..n-1, every ``snapshot=`` dir is
+    committed and no staged dir is left behind."""
+    import os
+    import sys
+    import threading
+
+    from ocr_spark.pipeline import _MARKER, _publish, _snapshot_idx
+
+    root = str(tmp_path / "store")
+    n = 2 * (os.cpu_count() or 1) + 2
+    staged = []
+    for i in range(n):
+        d = os.path.join(root, f"_staging-t{i}")
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "w") as fh:
+            fh.write(str(i))
+        staged.append(d)
+
+    got = [None] * n
+    start = threading.Barrier(n)
+
+    def commit(i):
+        start.wait(timeout=30)
+        got[i] = _publish(root, staged[i])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=commit, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+
+    assert sorted(map(_snapshot_idx, got)) == list(range(n))
+    names = sorted(os.listdir(root))
+    assert names == sorted(f"snapshot={i}" for i in range(n))
+    for i, path in enumerate(got):
+        assert os.path.exists(os.path.join(path, _MARKER))
+        with open(os.path.join(path, "part-0.parquet")) as fh:
+            assert fh.read() == str(i)

@@ -114,9 +114,9 @@ def test_run_resumable_writes_one_arrow_map_without_payload_shuffle(
     staged = []
     stage = pipeline._stage_parquet_into
 
-    def capture(df, allocated_dir):
+    def capture(df, root):
         staged.append(plan(df))
-        stage(df, allocated_dir)
+        return stage(df, root)
 
     monkeypatch.setattr(pipeline, "_stage_parquet_into", capture)
     t = spark.read.parquet(transcripts_parquet)
