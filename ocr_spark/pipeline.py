@@ -23,6 +23,10 @@ sequence numbers do. Each data snapshot also holds ``_METRICS.json``, the
 totals observed while its parquet was written (Iceberg's snapshot
 ``summary``): it commits, loses a race and expires with its data, and
 ``read_metrics`` reads it in the driver; the dir name is its index.
+Every decision about the store (a read, a writer's plan, a commit, a
+vacuum) takes the committed state from one listing of the root, and an
+index is never given out twice: expiry leaves a ``_LAST_INDEX`` mark
+that ``_publish`` numbers above.
 """
 
 from __future__ import annotations
@@ -59,22 +63,11 @@ _MARKER = "_COMMITTED"
 _SUPERSEDES = "_SUPERSEDES"  # written by compaction: names of replaced dirs
 _DELETES_FLAG = "_EQUALITY_DELETES"  # snapshot holds delete KEYS, not data
 _METRICS = "_METRICS.json"  # a data snapshot's observed totals
+_LAST_INDEX = "_LAST_INDEX"  # expiry's mark: highest index it has seen
 _METRICS_SCHEMA = (
     "array<struct<run_id:string,snapshot:int,turns_in:bigint,turns_out:bigint,"
     "bytes_in:bigint,bytes_out:bigint,parse_failures:bigint>>"
 )
-
-
-def _snapshot_dirs(root: str) -> list[str]:
-    """All snapshot=N directories, committed or not."""
-    if not os.path.isdir(root):
-        return []
-    return [
-        os.path.join(root, name)
-        for name in sorted(os.listdir(root))
-        if name.startswith("snapshot=")
-        and os.path.isdir(os.path.join(root, name))
-    ]
 
 
 def _snapshot_idx(path: str) -> int:
@@ -82,57 +75,68 @@ def _snapshot_idx(path: str) -> int:
     return int(os.path.basename(path).split("=", 1)[1])
 
 
-def _next_snapshot_idx(root: str) -> int:
-    """1 + max index over ALL snapshot dirs (committed, retired, or a
-    markerless dir left by older code). ``_publish`` takes it under the
-    commit lock, so indices follow commit order and a commit can never
-    land on a directory another reader is consuming (the count-based
-    scheme collided after compaction made indices sparse). An index is
-    reused only once every dir at or above it is gone."""
-    return 1 + max(map(_snapshot_idx, _snapshot_dirs(root)), default=-1)
+def _last_index(root: str, dirs: list[str]) -> int:
+    """The highest index ever given out: the larger of the expiry mark
+    (-1 before any expiry) and the highest of ``dirs``, the caller's
+    listing of every ``snapshot=N`` dir."""
+    try:
+        with open(os.path.join(root, _LAST_INDEX)) as fh:
+            mark = int(fh.read())
+    except FileNotFoundError:
+        mark = -1
+    return max([mark, *map(_snapshot_idx, dirs)])
 
 
-def _superseded_names(root: str, as_of: int | None = None) -> set[str]:
-    """Dir names replaced by a committed compacted snapshot. Reading the
-    lists only from COMMITTED snapshots makes compaction atomic at its
-    commit: before it, old dirs are visible; after it, they are ignored
-    even though their own markers still exist. With ``as_of``,
-    only tombstones written by snapshots <= that index count — a
-    compaction that happened AFTER the as-of point must not hide the
-    dirs that were live then."""
-    out: set[str] = set()
-    for p in _snapshot_dirs(root):
-        if as_of is not None and _snapshot_idx(p) > as_of:
-            continue
-        sup = os.path.join(p, _SUPERSEDES)
-        if os.path.exists(os.path.join(p, _MARKER)) and os.path.exists(sup):
-            with open(sup) as fh:
-                out.update(ln.strip() for ln in fh if ln.strip())
-    return out
+def _next_snapshot_idx(root: str, dirs: list[str] | None = None) -> int:
+    """1 + ``_last_index`` (``dirs`` listed here when omitted).
+    ``_publish`` takes it under the commit lock, so indices follow commit
+    order and an index is never given out twice, even after expiry has
+    removed every dir."""
+    if dirs is None:
+        dirs = _committed_snapshots(root)[0]
+    return 1 + _last_index(root, dirs)
 
 
-def _committed_state(root: str) -> set[str]:
-    """Names of the committed snapshots: what a writer plans against and
-    ``_publish`` re-checks under the commit lock."""
-    return {os.path.basename(p) for p in _committed_snapshots(root)}
-
-
-def _committed_snapshots(root: str, as_of: int | None = None) -> list[str]:
-    dead = _superseded_names(root, as_of)
-    return [
-        p
-        for p in _snapshot_dirs(root)
-        if os.path.exists(os.path.join(p, _MARKER))
-        and os.path.basename(p) not in dead
-        and (as_of is None or _snapshot_idx(p) <= as_of)
+def _committed_snapshots(
+    root: str, as_of: int | None = None
+) -> tuple[list[str], list[str]]:
+    """The store's one state read: ``(dirs, visible)`` from ONE listing
+    of ``root``. ``dirs`` is every ``snapshot=N`` dir (committed, retired,
+    or a markerless dir left by older code); ``visible`` is the committed
+    ones a reader sees. A committed ``_SUPERSEDES`` list hides the dirs
+    it names, so compaction is atomic at its commit, and because the
+    tombstones come from the same listing as the dirs, a compaction
+    committing mid-read shows its inputs or its output, never both. With
+    ``as_of``, only snapshots <= that index count, tombstones included:
+    a later compaction must not hide the dirs that were live then."""
+    names = sorted(os.listdir(root)) if os.path.isdir(root) else []
+    dirs = [
+        os.path.join(root, name)
+        for name in names
+        if name.startswith("snapshot=")
+        and os.path.isdir(os.path.join(root, name))
     ]
+    committed = [
+        p
+        for p in dirs
+        if (as_of is None or _snapshot_idx(p) <= as_of)
+        and os.path.exists(os.path.join(p, _MARKER))
+    ]
+    dead: set[str] = set()
+    for p in committed:
+        with _contextlib.suppress(FileNotFoundError):
+            with open(os.path.join(p, _SUPERSEDES)) as fh:
+                dead.update(ln.strip() for ln in fh if ln.strip())
+    return dirs, [p for p in committed if os.path.basename(p) not in dead]
 
 
 def tag_snapshot(root: str, name: str, idx: int | None = None) -> int:
     """Named snapshot refs (Iceberg tags): pin a human-meaningful name —
     'v1-training-run', 'pre-dedup-audit' — to a snapshot index so
     downstream jobs read a STABLE version by name while ingestion keeps
-    appending. Defaults to the current head. A tag is one tiny ref file
+    appending. Defaults to the current head; an explicit ``idx`` must be
+    a visible committed snapshot (a future or retired index would pin a
+    read that changes or dangles). A tag is one tiny ref file
     (refs/<name> -> idx), atomic via write-then-rename; re-tagging a
     name moves it (Iceberg replace-tag). Returns the pinned index.
 
@@ -150,11 +154,16 @@ def tag_snapshot(root: str, name: str, idx: int | None = None) -> int:
             " with '.' (dot-prefixed and slashed names could never be"
             " resolved by list_tags/read_snapshots)"
         )
+    visible = {_snapshot_idx(p) for p in _committed_snapshots(root)[1]}
     if idx is None:
-        committed = _committed_snapshots(root)
-        if not committed:
+        if not visible:
             raise ValueError(f"no committed snapshots under {root}")
-        idx = max(_snapshot_idx(p) for p in committed)
+        idx = max(visible)
+    elif idx not in visible:
+        raise ValueError(
+            f"cannot tag snapshot {idx}: the visible committed snapshots"
+            f" under {root} are {sorted(visible)}"
+        )
     refs = os.path.join(root, "refs")
     os.makedirs(refs, exist_ok=True)
     tmp = os.path.join(refs, f".{name}.tmp")
@@ -213,18 +222,19 @@ def read_snapshots(
         if tag not in tags:
             raise KeyError(f"unknown snapshot tag {tag!r} under {root}")
         as_of = tags[tag]
-        if not _committed_snapshots(root, as_of):
-            # a KNOWN tag whose pinned history was reclaimed
-            # (respect_tags=False compaction/expiry) must fail loudly,
-            # exactly like an unknown tag — a silent empty read would
-            # feed a pinned training run zero rows without a trace
-            raise KeyError(
-                f"snapshot tag {tag!r} is dangling: it pins index "
-                f"{as_of} but no committed snapshot <= {as_of} remains "
-                f"under {root} (history compacted/expired with "
-                "respect_tags=False); drop or re-point the tag"
-            )
-    return _read_snapshot_paths(spark, _committed_snapshots(root, as_of))
+    visible = _committed_snapshots(root, as_of)[1]
+    if tag is not None and not visible:
+        # a KNOWN tag whose pinned history was reclaimed
+        # (respect_tags=False compaction/expiry) must fail loudly,
+        # exactly like an unknown tag — a silent empty read would
+        # feed a pinned training run zero rows without a trace
+        raise KeyError(
+            f"snapshot tag {tag!r} is dangling: it pins index "
+            f"{as_of} but no committed snapshot <= {as_of} remains "
+            f"under {root} (history compacted/expired with "
+            "respect_tags=False); drop or re-point the tag"
+        )
+    return _read_snapshot_paths(spark, visible)
 
 
 def _read_snapshot_paths(
@@ -358,7 +368,7 @@ def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
     import datetime
 
     rows = []
-    for p in _committed_snapshots(root):
+    for p in _committed_snapshots(root)[1]:
         name = os.path.basename(p)
         try:
             committed_at = datetime.datetime.fromtimestamp(
@@ -392,8 +402,8 @@ def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
 
 def _stage_parquet_into(df: DataFrame, root: str) -> str:
     """Write ``df`` as parquet into a new ``_staging-*`` dir under
-    ``root`` and return its path. ``_snapshot_dirs`` never lists the
-    name, so readers never see it; ``_publish`` numbers it at commit."""
+    ``root`` and return its path. Readers list only ``snapshot=N`` dirs,
+    so they never see it; ``_publish`` numbers it at commit."""
     staging = os.path.join(root, f"_staging-{uuid.uuid4().hex[:12]}")
     try:
         df.write.parquet(staging)
@@ -406,8 +416,9 @@ def _stage_parquet_into(df: DataFrame, root: str) -> str:
 @_contextlib.contextmanager
 def _commit_lock(root: str, timeout_s: float = 60.0, stale_s: float = 300.0):
     """Atomic-mkdir mutex around the commit point (validate, marker,
-    numbering). Held only across directory listings, a marker write and
-    a rename — never across a Spark job — so contention is microseconds.
+    numbering) and expiry's ``_LAST_INDEX`` update. Held only across a
+    directory listing, small file writes and a rename — never across a
+    Spark job — so contention is microseconds.
     A lock older than ``stale_s`` is presumed abandoned by a crashed
     writer and broken (the Iceberg-catalog analog is the metastore lock
     timeout)."""
@@ -455,10 +466,13 @@ def _publish(
     if race_hook is not None:
         race_hook()
     with _commit_lock(root):
-        if base_state is None or _committed_state(root) == base_state:
+        dirs, visible = _committed_snapshots(root)
+        names = set(map(os.path.basename, visible))
+        if base_state is None or names == base_state:
             with open(os.path.join(staged, _MARKER), "w") as fh:
                 fh.write("ok\n")
-            snap_dir = os.path.join(root, f"snapshot={_next_snapshot_idx(root)}")
+            idx = _next_snapshot_idx(root, dirs)
+            snap_dir = os.path.join(root, f"snapshot={idx}")
             os.rename(staged, snap_dir)
             return snap_dir
     _drop_snapshot(root, staged)
@@ -516,8 +530,9 @@ def run_resumable(
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     for _attempt in range(max_commit_retries + 1):
-        base_state = _committed_state(out_root)
-        existing = read_snapshots(spark, out_root)
+        committed = _committed_snapshots(out_root)[1]
+        base_state = set(map(os.path.basename, committed))
+        existing = _read_snapshot_paths(spark, committed)
         todo = transcripts
         if existing is not None:
             done_keys = existing.select("conv_id", "turn_idx")
@@ -600,8 +615,8 @@ def compact_snapshots(
     Returns the number of snapshots compacted.
     """
     for _attempt in range(max_commit_retries + 1):
-        all_committed = _committed_snapshots(out_root)
-        base_state = {os.path.basename(p) for p in all_committed}
+        all_committed = _committed_snapshots(out_root)[1]
+        base_state = set(map(os.path.basename, all_committed))
         boundary = _tag_protected_max(out_root) if respect_tags else -1
         if boundary >= 0:
             # deletes interact with the exemption: a delete snapshot
@@ -678,15 +693,29 @@ def expire_snapshots(
     resolving until its tag is dropped. Pass False to reclaim tagged
     history deliberately (dangled tags then raise on read).
 
+    Expiry is the only operation that can remove the newest committed
+    snapshot, so before it touches a victim it raises the ``_LAST_INDEX``
+    mark (Iceberg's ``last-sequence-number``) that ``_publish`` numbers
+    above: an expired index a reader holds (``as_of``, a tag) never comes
+    back with different data.
+
     Crash-safe: each victim is unpublished (marker removed) before its
     data is deleted, so a crash mid-expiry leaves unpublished dirs that
     `vacuum_uncommitted` removes — never a half-visible snapshot.
     Returns the removed snapshot paths."""
     keep_last = max(keep_last, 0)
+    if not os.path.isdir(out_root):
+        return []
     # physically drop tombstoned dirs first: expiring a compacted
     # snapshot must not resurrect old dirs whose markers it tombstones
     vacuum_uncommitted(out_root)
-    paths = sorted(_committed_snapshots(out_root), key=_snapshot_idx)
+    with _commit_lock(out_root):
+        dirs, visible = _committed_snapshots(out_root)
+        tmp = os.path.join(out_root, f".{_LAST_INDEX}.tmp")
+        with open(tmp, "w") as fh:
+            fh.write(f"{_last_index(out_root, dirs)}\n")
+        os.replace(tmp, os.path.join(out_root, _LAST_INDEX))
+    paths = sorted(visible, key=_snapshot_idx)
     # keep_last=0 alone means "expire everything"; combined with a TTL it
     # means "no count-based retention — age alone decides"
     if keep_last:
@@ -726,15 +755,12 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
     dirs whose names appear in a committed ``_SUPERSEDES`` list — plus
     leftover ``_staging-*`` dirs. A snapshot's metrics live inside its
     dir, so they go with it. Returns the removed paths."""
-    removed = []
     if not os.path.isdir(out_root):
-        return removed
-    dead = _superseded_names(out_root)
-    for path in _snapshot_dirs(out_root):
-        name = os.path.basename(path)
-        if not os.path.exists(os.path.join(path, _MARKER)) or name in dead:
-            shutil.rmtree(path, ignore_errors=True)
-            removed.append(path)
+        return []
+    dirs, visible = _committed_snapshots(out_root)
+    removed = sorted(set(dirs) - set(visible))
+    for path in removed:
+        shutil.rmtree(path, ignore_errors=True)
     # markerless snapshot dirs come from stores written by older code or
     # by hand; a _staging-* dir left behind means its writer died before
     # its commit (a kill skips its own cleanup). Reaping them rides one
@@ -753,7 +779,7 @@ def read_metrics(spark: SparkSession, out_root: str) -> DataFrame | None:
     ``_METRICS.json`` files and the frame is built in the JVM from one
     literal: no file scan, no Python workers, one partition."""
     rows = []
-    for p in _committed_snapshots(out_root):
+    for p in _committed_snapshots(out_root)[1]:
         with _contextlib.suppress(FileNotFoundError):
             with open(os.path.join(p, _METRICS)) as fh:
                 rows.append({**json.load(fh), "snapshot": _snapshot_idx(p)})

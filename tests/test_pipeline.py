@@ -1114,3 +1114,103 @@ def test_concurrent_publishes_take_distinct_indices(tmp_path):
         assert os.path.exists(os.path.join(path, _MARKER))
         with open(os.path.join(path, "part-0.parquet")) as fh:
             assert fh.read() == str(i)
+
+
+def _publish_by_hand(root, tag, supersedes=()):
+    """Stage a dir holding one fake data file (no Spark), optionally with
+    a ``_SUPERSEDES`` list, and return it unpublished."""
+    import os
+
+    from ocr_spark.pipeline import _SUPERSEDES
+
+    staged = os.path.join(root, f"_staging-{tag}")
+    os.makedirs(staged)
+    with open(os.path.join(staged, "part-0.parquet"), "w") as fh:
+        fh.write(tag)
+    if supersedes:
+        with open(os.path.join(staged, _SUPERSEDES), "w") as fh:
+            fh.write("\n".join(supersedes) + "\n")
+    return staged
+
+
+def test_expired_index_is_never_given_out_again(tmp_path):
+    """Expiry that removes every snapshot leaves the store's mark behind:
+    the next commit numbers above every index ever given out, and a tag
+    pinned at an expired index dangles instead of reading the new data."""
+    from ocr_spark.pipeline import (
+        _publish,
+        _snapshot_idx,
+        expire_snapshots,
+        tag_snapshot,
+    )
+
+    root = str(tmp_path / "store")
+    for i in range(3):
+        _publish(root, _publish_by_hand(root, f"s{i}"))
+    assert tag_snapshot(root, "v1") == 2
+    removed = expire_snapshots(root, keep_last=0, respect_tags=False)
+    assert sorted(map(_snapshot_idx, removed)) == [0, 1, 2]
+
+    assert _snapshot_idx(_publish(root, _publish_by_hand(root, "s3"))) == 3
+    with pytest.raises(KeyError, match="dangling"):
+        read_snapshots(None, root, tag="v1")
+
+
+def test_tag_snapshot_pins_only_a_visible_committed_index(tmp_path):
+    """A tag pins a snapshot that exists: a future index (whose read
+    would grow with later commits and block all expiry) and a negative
+    one (dangling at birth) are refused, and so is an index that a
+    compaction has superseded."""
+    from ocr_spark.pipeline import _publish, list_tags, tag_snapshot
+
+    root = str(tmp_path / "store")
+    for i in range(3):
+        _publish(root, _publish_by_hand(root, f"s{i}"))
+    for bad in (99, 3, -5):
+        with pytest.raises(ValueError, match="cannot tag snapshot"):
+            tag_snapshot(root, "future", bad)
+    assert list_tags(root) == {}
+
+    assert tag_snapshot(root, "v1", 1) == 1
+    _publish(
+        root,
+        _publish_by_hand(root, "c", supersedes=("snapshot=0", "snapshot=1")),
+    )
+    with pytest.raises(ValueError, match="cannot tag snapshot"):
+        tag_snapshot(root, "old", 0)
+    assert tag_snapshot(root, "head") == 3
+    assert list_tags(root) == {"head": 3, "v1": 1}
+
+
+def test_compaction_committing_mid_listing_is_seen_whole(tmp_path, monkeypatch):
+    """A compaction that commits while a reader reads the store's state
+    shows either its inputs or its output, never both: the tombstones and
+    the dirs come from one listing of the root."""
+    import os
+
+    from ocr_spark.pipeline import _committed_snapshots, _publish, _snapshot_idx
+
+    root = str(tmp_path / "store")
+    _publish(root, _publish_by_hand(root, "s0"))
+    _publish(root, _publish_by_hand(root, "s1"))
+    compaction = _publish_by_hand(
+        root, "c", supersedes=("snapshot=0", "snapshot=1")
+    )
+
+    real_listdir = os.listdir
+    calls = []
+
+    def listdir_then_commit(path=".", *args, **kwargs):
+        names = real_listdir(path, *args, **kwargs)
+        if path == root and not calls:
+            calls.append(path)
+            _publish(root, compaction)
+        return names
+
+    monkeypatch.setattr(os, "listdir", listdir_then_commit)
+    visible = _committed_snapshots(root)[1]
+    monkeypatch.undo()
+
+    assert calls == [root]
+    assert sorted(map(_snapshot_idx, visible)) in ([0, 1], [2])
+    assert sorted(map(_snapshot_idx, _committed_snapshots(root)[1])) == [2]
