@@ -7,11 +7,11 @@
         --output /path/out
 
 Runs the resumable snapshot pipeline (anti-join against committed
-snapshots -> narrow vectorized extraction -> atomic snapshot
-commit holding the totals observed during its write) and then the two-phase
-ordered conversation rollup to ``<output>/conv_text``. Re-running after
-a kill resumes from the last committed snapshot. Prints a one-line JSON
-summary on completion.
+snapshots -> narrow vectorized extraction, each task writing its own
+parquet file -> atomic snapshot commit whose manifest lists those files
+and their totals) and then the two-phase ordered conversation rollup to
+``<output>/conv_text``. Re-running after a kill resumes from the last
+committed snapshot. Prints a one-line JSON summary on completion.
 
 Package the py-files zip with:  python tools/make_pyfiles.py
 """
@@ -74,6 +74,17 @@ def linearize_tree_store(msgs, output: str):
         "ts",
     )
     return transcripts, forest_issues, msgs_unreached
+
+
+def turns_committed(committed, snap_root: str) -> int:
+    """Rows in the committed table ``committed`` read from ``snap_root``:
+    the sum of the visible snapshots' manifest totals, with no Spark job.
+    Only when that sum would not be the count (a delete snapshot is
+    visible, or a snapshot has no totals) is the table counted."""
+    from ocr_spark.pipeline import committed_turns
+
+    n = committed_turns(snap_root)
+    return committed.count() if n is None else n
 
 
 def main() -> None:
@@ -153,7 +164,7 @@ def main() -> None:
     metrics = read_metrics(spark, snap_root)
     conversations = spark.read.parquet(rollup_dir).count()
     summary = {
-        "turns_committed": committed.count(),
+        "turns_committed": turns_committed(committed, snap_root),
         "conversations": conversations,
         "parse_failures": (
             metrics.groupBy().sum("parse_failures").collect()[0][0] if metrics else None

@@ -12,8 +12,8 @@ Stages (each writes its own parquet under <output>/ so any stage can be
 re-inspected or re-run; the funnel records every row count):
 
   1. extract      resumable snapshot extraction (anti-join vs committed
-                  snapshots, vectorized Arrow UDF, per-snapshot
-                  totals observed during the write) -> ordered
+                  snapshots, vectorized Arrow UDF whose tasks write the
+                  snapshot files and their totals) -> ordered
                   conversation rollup
   2. gate+split   quality/stopword/length gates, exact dedup keep-first,
                   content-keyed train/val/test split (curate.curate —

@@ -138,13 +138,20 @@ def conv_turn_gap_stats(transcripts: DataFrame) -> DataFrame:
     ).applyInPandas(_gap_stats_fn, _GAP_SCHEMA)
 
 
+# the names of the five totals, in the order snapshot_totals() gives them
+SNAPSHOT_TOTALS = ("turns_in", "turns_out", "bytes_in", "bytes_out", "parse_failures")
+
+
 def snapshot_totals() -> list:
     """The five totals of a set of ``extracted`` rows, as aggregate
     Columns: ``turns_in``, ``turns_out`` (parse_ok rows), ``bytes_in``,
-    ``bytes_out`` (extracted chars) and ``parse_failures``. The one
-    definition behind a snapshot's observed ``_METRICS.json`` and
-    ``partition_metrics``. A function, not a constant: building a Column
-    needs a live session. Over zero rows the two byte sums are NULL."""
+    ``bytes_out`` (extracted chars, i.e. code points) and
+    ``parse_failures``. The definition behind a snapshot manifest's
+    totals and ``partition_metrics``: compaction observes these Columns
+    during its write, and ``extract.extract_into``'s workers sum the same
+    five from their Arrow arrays (tests hold the two equal). A function,
+    not a constant: building a Column needs a live session. Over zero
+    rows the two byte sums are NULL."""
     # count(when(...)), not count_if: Spark rewrites count_if(not parse_ok)
     # with its argument as a common expression, which puts two full-row
     # Projects (nested spans/lines/blocks copied) around the observed write

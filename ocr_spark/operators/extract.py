@@ -13,11 +13,15 @@ Both public shapes cross the Python boundary once, through the same
 key columns the loop passes through untouched:
 
 - ``extract()`` passes ``conv_id, turn_idx``. It is a *narrow*
-  transformation — zero shuffle — and the shape production runs
-  (``pipeline.run_resumable``): the Python stage runs one task per scan
+  transformation — zero shuffle: the Python stage runs one task per scan
   split. Input partitioning comes from the source scan
   (``maxPartitionBytes`` bounds task size); Arrow batch size bounds
-  Python-worker memory.
+  Python-worker memory. ``extract_into()`` is the same stage with the
+  write folded in, and the shape production runs
+  (``pipeline.run_resumable``): each task's worker writes the batches the
+  loop yields as one parquet file (``_write_part``) and returns one row,
+  the file's name and its totals, so the extracted rows go from the
+  worker to disk without crossing back into the JVM.
 - ``extract_deduped()`` passes ``dup_keys``: the opt-in memoization join
   (A6 ≙ the reference's sha256 Redis cache, ``tasks/ocr_tasks.py:45-91``).
   Identical payloads are extracted once and the result is fanned back out
@@ -44,12 +48,14 @@ two-phase rollup ``aggregate.conv_text_salted``.
 
 from __future__ import annotations
 
+import os
 from array import array
 from functools import partial
 from itertools import accumulate
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ocr_spark.operators.aggregate import SNAPSHOT_TOTALS
 from ocr_spark.oracle.extract import extract_turn
 
 EXTRACTED_SCHEMA = T.StructType(
@@ -107,6 +113,13 @@ EXTRACTED_SCHEMA = T.StructType(
 _PARSED = [f for f in EXTRACTED_SCHEMA.fields if f.name not in ("conv_id", "turn_idx")]
 _PARSED_NAMES = [f.name for f in _PARSED]
 
+# what extract_into's tasks return: the file each wrote, and the
+# snapshot totals of the rows in it
+WRITTEN_SCHEMA = T.StructType(
+    [T.StructField("file", T.StringType(), False)]
+    + [T.StructField(name, T.LongType(), False) for name in SNAPSHOT_TOTALS]
+)
+
 _DEDUP_SCHEMA = T.StructType(
     [
         T.StructField(
@@ -134,6 +147,41 @@ def _pack_bits(flags) -> bytes:
     list of bools."""
     return int(bytes(flags)[::-1].translate(_BITS) or b"0", 2).to_bytes(
         (len(flags) + 7) // 8, "little"
+    )
+
+
+def _buf(typecode, values):
+    import pyarrow as pa
+
+    return pa.py_buffer(array(typecode, values))
+
+
+def _fixed(dtype, typecode, values):
+    """A fixed-width Arrow array of ``values`` with no nulls."""
+    import pyarrow as pa
+
+    return pa.Array.from_buffers(dtype, len(values), [None, _buf(typecode, values)])
+
+
+def _strings(dtype, values):
+    """A string Arrow array of ``values`` (str or None)."""
+    import pyarrow as pa
+
+    try:
+        joined, valid = "".join(values), None
+    except TypeError:  # nulls: a validity bitmap, and "" in their slots
+        valid = pa.py_buffer(_pack_bits([v is not None for v in values]))
+        values = ["" if v is None else v for v in values]
+        joined = "".join(values)
+    # UTF-8 byte lengths; an ASCII str's is its len (isascii is O(1))
+    if joined.isascii():
+        sizes = map(len, values)
+    else:
+        sizes = [len(v) if v.isascii() else len(v.encode()) for v in values]
+    return pa.Array.from_buffers(
+        dtype,
+        len(values),
+        [valid, _buf("i", accumulate(sizes, initial=0)), pa.py_buffer(joined.encode())],
     )
 
 
@@ -202,43 +250,19 @@ def _extract_batches(batches, out_schema: T.StructType):
     start_t, end_t = span_t.field("start").type, span_t.field("end").type
     f64 = line_t.field("confidence").type
 
-    def buf(typecode, values):
-        return pa.py_buffer(array(typecode, values))
-
-    def fixed(dtype, typecode, values):
-        return pa.Array.from_buffers(dtype, len(values), [None, buf(typecode, values)])
-
-    def strings(dtype, values):
-        try:
-            joined, valid = "".join(values), None
-        except TypeError:  # nulls: a validity bitmap, and "" in their slots
-            valid = pa.py_buffer(_pack_bits([v is not None for v in values]))
-            values = ["" if v is None else v for v in values]
-            joined = "".join(values)
-        # UTF-8 byte lengths; an ASCII str's is its len (isascii is O(1))
-        if joined.isascii():
-            sizes = map(len, values)
-        else:
-            sizes = [len(v) if v.isascii() else len(v.encode()) for v in values]
-        return pa.Array.from_buffers(
-            dtype,
-            len(values),
-            [valid, buf("i", accumulate(sizes, initial=0)), pa.py_buffer(joined.encode())],
-        )
-
     def lists(list_type, offsets, values):
         return pa.Array.from_buffers(
-            list_type, len(offsets) - 1, [None, buf("i", offsets)], children=[values]
+            list_type, len(offsets) - 1, [None, _buf("i", offsets)], children=[values]
         )
 
     def structs(struct_type, *children):
         return pa.Array.from_buffers(struct_type, len(children[0]), [None], children=list(children))
 
     def bboxes(struct_type, offsets, values):
-        return lists(struct_type.field("bbox").type, offsets, fixed(f64, "d", values))
+        return lists(struct_type.field("bbox").type, offsets, _fixed(f64, "d", values))
 
     i64 = types["bytes_in"]
-    zero = fixed(i64, "q", [0])[0]  # pa.scalar(0) would import pandas
+    zero = _fixed(i64, "q", [0])[0]  # pa.scalar(0) would import pandas
 
     def utf8_bytes(batch, name):
         """Per-row UTF-8 byte length of a string column, read from its
@@ -275,20 +299,20 @@ def _extract_batches(batches, out_schema: T.StructType):
                 b_boff.append(len(b_bval))
             b_off.append(len(b_text))
         parsed = [
-            strings(types["kind"], kind),
-            strings(types["extracted_text"], etext),
+            _strings(types["kind"], kind),
+            _strings(types["extracted_text"], etext),
             lists(
                 spans_t,
                 s_off,
-                structs(span_t, fixed(start_t, "i", s_start), fixed(end_t, "i", s_end)),
+                structs(span_t, _fixed(start_t, "i", s_start), _fixed(end_t, "i", s_end)),
             ),
             lists(
                 lines_t,
                 l_off,
                 structs(
                     line_t,
-                    strings(line_t.field("text").type, l_text),
-                    fixed(f64, "d", l_conf),
+                    _strings(line_t.field("text").type, l_text),
+                    _fixed(f64, "d", l_conf),
                     bboxes(line_t, l_boff, l_bval),
                 ),
             ),
@@ -297,18 +321,87 @@ def _extract_batches(batches, out_schema: T.StructType):
                 b_off,
                 structs(
                     block_t,
-                    strings(block_t.field("type").type, b_type),
-                    strings(block_t.field("text").type, b_text),
+                    _strings(block_t.field("type").type, b_type),
+                    _strings(block_t.field("text").type, b_text),
                     bboxes(block_t, b_boff, b_bval),
                 ),
             ),
             pa.Array.from_buffers(types["parse_ok"], len(ok), [None, pa.py_buffer(_pack_bits(ok))]),
-            strings(types["error"], err),
+            _strings(types["error"], err),
             pc.add(utf8_bytes(batch, "text"), utf8_bytes(batch, "tool")),
         ]
         yield pa.RecordBatch.from_arrays(
             [batch.column(k) for k in keys] + parsed, names=schema.names
         )
+
+
+def _write_part(out_batches, path: str):
+    """Write ``out_batches`` (``_extract_batches`` output) into one parquet
+    file at ``path`` and yield one ``WRITTEN_SCHEMA`` row: the file's name
+    and the totals of its rows, summed from the batches' Arrow arrays as
+    they are written. An input with no rows writes no file and yields
+    nothing.
+
+    zstd level 3 without dictionary pages: the parsed text is mostly
+    unique, so dictionaries only add bytes. ``store_schema=False`` keeps
+    pyarrow's own schema out of the footer; Spark reads the parquet
+    schema. Neither ``pyarrow.parquet`` nor ``pyarrow.compute`` imports
+    pandas."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def total(array) -> int:
+        return pc.sum(array).as_py() or 0  # an all-NULL sum is None
+
+    writer = None
+    sums = dict.fromkeys(SNAPSHOT_TOTALS, 0)
+    try:
+        for batch in out_batches:
+            if not batch.num_rows:
+                continue
+            if writer is None:
+                writer = pq.ParquetWriter(
+                    path,
+                    batch.schema,
+                    compression="zstd",
+                    compression_level=3,
+                    use_dictionary=False,
+                    store_schema=False,
+                )
+            writer.write_batch(batch)
+            n_ok = total(batch.column("parse_ok"))
+            sums["turns_in"] += batch.num_rows
+            sums["turns_out"] += n_ok
+            sums["bytes_in"] += total(batch.column("bytes_in"))
+            # code points, as Spark's length() counts them
+            sums["bytes_out"] += total(pc.utf8_length(batch.column("extracted_text")))
+            sums["parse_failures"] += batch.num_rows - n_ok
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        return
+    i64 = pa.int64()
+    yield pa.RecordBatch.from_arrays(
+        [_strings(pa.string(), [os.path.basename(path)])]
+        + [_fixed(i64, "q", [sums[k]]) for k in SNAPSHOT_TOTALS],
+        names=WRITTEN_SCHEMA.names,
+    )
+
+
+def _write_extracted(batches, staging: str):
+    """``extract_into``'s worker: extract a task's batches and write them
+    to ``part-{partitionId:05d}-{taskAttemptId}.parquet`` in ``staging``.
+    The attempt id in the name keeps a retried or speculative attempt off
+    the file of the attempt whose row the driver collects."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+    yield from _write_part(
+        _extract_batches(batches, EXTRACTED_SCHEMA), os.path.join(staging, name)
+    )
 
 
 def _turn_idx():
@@ -327,6 +420,19 @@ def extract(transcripts: DataFrame) -> DataFrame:
     Arrow-native batches (see ``_extract_batches``)."""
     return _map_extract(
         transcripts.select("conv_id", _turn_idx(), "text", "tool"), EXTRACTED_SCHEMA
+    )
+
+
+def extract_into(transcripts: DataFrame, staging: str) -> DataFrame:
+    """transcripts -> ``WRITTEN_SCHEMA`` rows, one per task that extracted
+    any turn. Each task runs ``extract``'s worker loop and writes its
+    ``extracted`` rows itself, as one parquet file in ``staging`` (a dir
+    its executor shares with the driver); the row names that file and
+    carries the totals of its rows. Same narrow plan as ``extract``: the
+    rows reach disk without a Spark write, and an action on this frame
+    (``collect``) is the whole job."""
+    return transcripts.select("conv_id", _turn_idx(), "text", "tool").mapInArrow(
+        partial(_write_extracted, staging=staging), WRITTEN_SCHEMA
     )
 
 

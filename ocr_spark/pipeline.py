@@ -19,14 +19,27 @@ the staged dir to ``snapshot=N``, all under the commit lock. A killed run
 never corrupts the table (Iceberg would give us this atomically; the
 marker and the rename are the no-dependency stand-in with the same
 reader-visible semantics), and N follows commit order, as Iceberg's
-sequence numbers do. Each data snapshot also holds ``_METRICS.json``, the
-totals observed while its parquet was written (Iceberg's snapshot
-``summary``): it commits, loses a race and expires with its data, and
-``read_metrics`` reads it in the driver; the dir name is its index.
+sequence numbers do.
+
+Each data snapshot holds its manifest, ``_METRICS.json``: the data files
+it commits, their schema, and the snapshot's totals (Iceberg's manifest
+and snapshot ``summary`` in one file). As in Iceberg, tasks write the data
+files and the commit records them: ``run_resumable``'s Python workers
+write one parquet file per task and return its name and totals, and the
+driver writes the manifest; compaction writes through Spark and records
+what it wrote. The manifest commits, loses a race and expires with its
+data. Reads plan from it, in the driver: ``read_snapshots`` reads exactly
+the files the manifests list, with the union of their schemas, so no
+footer is opened to plan a read, and ``read_metrics`` turns the totals
+into a frame. A store written by older code, without file lists, is read
+by listing its dirs and merging their footers' schemas, until one
+compaction writes it a manifest.
+
 Every decision about the store (a read, a writer's plan, a commit, a
-vacuum) takes the committed state from one listing of the root, and an
-index is never given out twice: expiry leaves a ``_LAST_INDEX`` mark
-that ``_publish`` numbers above.
+vacuum) takes the committed state from one listing of the root, listed
+again when a dir it names is dropped before it is read; and an index is
+never given out twice: expiry leaves a ``_LAST_INDEX`` mark that
+``_publish`` numbers above.
 """
 
 from __future__ import annotations
@@ -37,11 +50,12 @@ import os
 import shutil
 import time
 import uuid
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ocr_spark.operators.aggregate import snapshot_totals
-from ocr_spark.operators.extract import extract
+from ocr_spark.operators.aggregate import SNAPSHOT_TOTALS, snapshot_totals
+from ocr_spark.operators.extract import EXTRACTED_SCHEMA, extract_into
 
 
 def _observed(extracted: DataFrame):
@@ -62,8 +76,9 @@ def _observed(extracted: DataFrame):
 _MARKER = "_COMMITTED"
 _SUPERSEDES = "_SUPERSEDES"  # written by compaction: names of replaced dirs
 _DELETES_FLAG = "_EQUALITY_DELETES"  # snapshot holds delete KEYS, not data
-_METRICS = "_METRICS.json"  # a data snapshot's observed totals
+_METRICS = "_METRICS.json"  # a data snapshot's manifest: totals, files, schema
 _LAST_INDEX = "_LAST_INDEX"  # expiry's mark: highest index it has seen
+_DELETE_KEYS_SCHEMA = "conv_id string, turn_idx int"
 _METRICS_SCHEMA = (
     "array<struct<run_id:string,snapshot:int,turns_in:bigint,turns_out:bigint,"
     "bytes_in:bigint,bytes_out:bigint,parse_failures:bigint>>"
@@ -108,20 +123,28 @@ def _committed_snapshots(
     tombstones come from the same listing as the dirs, a compaction
     committing mid-read shows its inputs or its output, never both. With
     ``as_of``, only snapshots <= that index count, tombstones included:
-    a later compaction must not hide the dirs that were live then."""
-    names = sorted(os.listdir(root)) if os.path.isdir(root) else []
-    dirs = [
-        os.path.join(root, name)
-        for name in names
-        if name.startswith("snapshot=")
-        and os.path.isdir(os.path.join(root, name))
-    ]
-    committed = [
-        p
-        for p in dirs
-        if (as_of is None or _snapshot_idx(p) <= as_of)
-        and os.path.exists(os.path.join(p, _MARKER))
-    ]
+    a later compaction must not hide the dirs that were live then.
+
+    A listed dir that is gone by the time its marker is checked makes
+    the listing stale (compaction drops the dirs it supersedes right
+    after its commit, so the dir's replacement is newer than the
+    listing): the root is listed again."""
+    prev = None
+    while True:
+        names = sorted(os.listdir(root)) if os.path.isdir(root) else []
+        snaps = [os.path.join(root, n) for n in names if n.startswith("snapshot=")]
+        committed = [
+            p
+            for p in snaps
+            if (as_of is None or _snapshot_idx(p) <= as_of)
+            and os.path.exists(os.path.join(p, _MARKER))
+        ]
+        gone = [p for p in snaps if p not in committed and not os.path.isdir(p)]
+        # an unchanged listing means the non-dirs are plain files
+        if not gone or names == prev:
+            break
+        prev = names
+    dirs = [p for p in snaps if p not in gone]
     dead: set[str] = set()
     for p in committed:
         with _contextlib.suppress(FileNotFoundError):
@@ -196,12 +219,14 @@ def read_snapshots(
     as_of: int | None = None,
     tag: str | None = None,
 ) -> DataFrame | None:
-    """Read the committed table. ``mergeSchema`` gives parquet-native
-    schema evolution (Iceberg's add-column path): snapshots written
-    before a column existed read as NULL for it, so an extraction schema
-    can grow over the table's lifetime without rewriting history. (Type
-    *changes* of an existing column still conflict — that is Iceberg's
-    boundary too for parquet file reuse.)
+    """Read the committed table: the data files the visible snapshots'
+    manifests list, with the union of their schemas
+    (``_read_snapshot_paths``). The union gives schema evolution
+    (Iceberg's add-column path): snapshots written before a column
+    existed read as NULL for it, so an extraction schema can grow over
+    the table's lifetime without rewriting history. (Type *changes* of
+    an existing column still conflict — that is Iceberg's boundary too
+    for parquet file reuse.)
 
     ``as_of`` is snapshot time travel (Iceberg ``VERSION AS OF``): read
     the table exactly as it stood after snapshot N committed — later
@@ -222,7 +247,7 @@ def read_snapshots(
         if tag not in tags:
             raise KeyError(f"unknown snapshot tag {tag!r} under {root}")
         as_of = tags[tag]
-    visible = _committed_snapshots(root, as_of)[1]
+    visible, df = _planned(root, partial(_read_snapshot_paths, spark), as_of)
     if tag is not None and not visible:
         # a KNOWN tag whose pinned history was reclaimed
         # (respect_tags=False compaction/expiry) must fail loudly,
@@ -234,7 +259,46 @@ def read_snapshots(
             f"under {root} (history compacted/expired with "
             "respect_tags=False); drop or re-point the tag"
         )
-    return _read_snapshot_paths(spark, visible)
+    return df
+
+
+def _planned(root: str, plan, as_of: int | None = None):
+    """``(visible, plan(visible))`` for the visible snapshots of one
+    listing. ``plan`` reads their manifests, and raises
+    ``FileNotFoundError`` when a listed snapshot was dropped before it
+    got there (a compaction drops the dirs it supersedes right after its
+    commit); the listing is then stale, so it is taken again and
+    ``plan`` re-run."""
+    while True:
+        visible = _committed_snapshots(root, as_of)[1]
+        try:
+            return visible, plan(visible)
+        except FileNotFoundError:
+            continue
+
+
+def _manifest(snap: str) -> dict | None:
+    """The ``_METRICS.json`` manifest of the snapshot dir ``snap``: its
+    totals and run_id and, from data snapshots written by this code, the
+    data ``files`` (names relative to ``snap``) and their ``schema``
+    (``StructType.jsonValue``). None when ``snap`` has none (a delete
+    snapshot, or older code, or a hand-made dir). Raises
+    ``FileNotFoundError`` when ``snap`` itself is gone."""
+    try:
+        with open(os.path.join(snap, _METRICS)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        if os.path.isdir(snap):
+            return None
+        raise
+
+
+def _data_files(snap: str, manifest: dict | None) -> list[str]:
+    """What to read of the data snapshot ``snap``: the files its manifest
+    lists, or the whole dir when it lists none."""
+    if manifest and "files" in manifest:
+        return [os.path.join(snap, name) for name in manifest["files"]]
+    return [snap]
 
 
 def _read_snapshot_paths(
@@ -244,15 +308,29 @@ def _read_snapshot_paths(
     by read_snapshots and compact_snapshots so the compactor reads
     exactly the set it supersedes (re-listing inside the read would race
     a concurrent commit into the compacted output without tombstoning
-    its source — permanent duplicates)."""
-    data = [
-        p for p in paths
-        if not os.path.exists(os.path.join(p, _DELETES_FLAG))
-    ]
-    dels = [p for p in paths if p not in data]
+    its source — permanent duplicates).
+
+    The data are exactly the files the manifests list, read with the
+    union of the manifests' schemas: Spark neither lists the dirs nor
+    opens a footer to plan the read, and a late file that a stray task
+    attempt left in a committed dir is never read. If any data snapshot
+    has no file list (written by older code, or by hand), the whole read
+    lists its dir and merges every footer's schema (``mergeSchema``)
+    instead; one ``compact_snapshots`` gives the store a manifest again.
+    Raises ``FileNotFoundError`` when a listed snapshot is gone."""
+    dels = [p for p in paths if os.path.exists(os.path.join(p, _DELETES_FLAG))]
+    data = [(p, _manifest(p)) for p in paths if p not in dels]
     if not data:
         return None
-    df = spark.read.option("mergeSchema", "true").parquet(*data)
+    if all(m and "files" in m for _, m in data):
+        fields: dict = {}
+        for _, m in data:
+            for f in T.StructType.fromJson(m["schema"]).fields:
+                fields.setdefault(f.name, f)
+        reader = spark.read.schema(T.StructType(list(fields.values())))
+    else:
+        reader = spark.read.option("mergeSchema", "true")
+    df = reader.parquet(*(f for p, m in data for f in _data_files(p, m)))
     if not dels:
         return df
     # merge-on-read equality deletes (Iceberg v2 delete files): a delete
@@ -266,7 +344,8 @@ def _read_snapshot_paths(
         F.input_file_name(), r"snapshot=(\d+)/", 1
     ).cast("long")
     del_keys = (
-        spark.read.parquet(*dels)
+        spark.read.schema(_DELETE_KEYS_SCHEMA)
+        .parquet(*dels)
         .withColumn(
             "_del_idx",
             F.regexp_extract(
@@ -400,11 +479,17 @@ def snapshots_df(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
+def _staging_path(root: str) -> str:
+    """A new ``_staging-*`` dir path under ``root``. Readers list only
+    ``snapshot=N`` dirs, so they never see it; ``_publish`` numbers it at
+    commit."""
+    return os.path.join(root, f"_staging-{uuid.uuid4().hex[:12]}")
+
+
 def _stage_parquet_into(df: DataFrame, root: str) -> str:
-    """Write ``df`` as parquet into a new ``_staging-*`` dir under
-    ``root`` and return its path. Readers list only ``snapshot=N`` dirs,
-    so they never see it; ``_publish`` numbers it at commit."""
-    staging = os.path.join(root, f"_staging-{uuid.uuid4().hex[:12]}")
+    """Write ``df`` with Spark's parquet writer into a new ``_staging-*``
+    dir under ``root`` and return its path."""
+    staging = _staging_path(root)
     try:
         df.write.parquet(staging)
     except BaseException:
@@ -485,14 +570,46 @@ def _drop_snapshot(root: str, snap: str) -> None:
     shutil.rmtree(os.path.join(root, os.path.basename(snap)), ignore_errors=True)
 
 
-def _write_metrics(staged: str, obs, run_id: str) -> dict:
-    """Store the totals ``obs`` saw during the write into ``staged``
-    (the NULL byte sums of an empty write become 0); returns them."""
-    totals = {k: v or 0 for k, v in obs.get.items()}
-    totals["run_id"] = run_id
+def _write_manifest(
+    staged: str, totals: dict, run_id: str, files: list[str], schema: T.StructType
+) -> dict:
+    """Write ``staged``'s manifest, ``_METRICS.json``: the five totals
+    (a NULL byte sum of an empty write becomes 0), ``run_id``, the data
+    ``files`` (names in ``staged``) and their ``schema``. Returns the
+    totals."""
+    totals = {k: totals[k] or 0 for k in SNAPSHOT_TOTALS}
+    manifest = {
+        **totals,
+        "run_id": run_id,
+        "files": files,
+        "schema": schema.jsonValue(),
+    }
     with open(os.path.join(staged, _METRICS), "w") as fh:
-        json.dump(totals, fh)
+        json.dump(manifest, fh)
     return totals
+
+
+def _stage_extracted(todo: DataFrame, root: str, run_id: str) -> tuple[str, dict]:
+    """Extract ``todo`` into a new ``_staging-*`` dir under ``root``, with
+    its manifest; returns ``(staged dir, totals)``.
+
+    One job: each task writes its own rows as one parquet file
+    (``extract_into``) and returns the file's name and totals, which are
+    collected here. A staged file that no returned row names was left by
+    a failed task attempt, so it is deleted. The staged dir is removed if
+    anything raises."""
+    staged = _staging_path(root)
+    os.makedirs(staged)
+    try:
+        written = extract_into(todo, staged).collect()
+        files = sorted(r["file"] for r in written)
+        for name in set(os.listdir(staged)) - set(files):
+            os.remove(os.path.join(staged, name))
+        totals = {k: sum(r[k] for r in written) for k in SNAPSHOT_TOTALS}
+        return staged, _write_manifest(staged, totals, run_id, files, EXTRACTED_SCHEMA)
+    except BaseException:
+        _drop_snapshot(root, staged)
+        raise
 
 
 def run_resumable(
@@ -517,29 +634,33 @@ def run_resumable(
     the one it planned against; only then does the snapshot get its
     index. A writer that lost the race discards its staged data and
     re-plans from the new state (the anti-join then excludes whatever
-    the winner committed), up to ``max_commit_retries`` times. Serializable-append semantics: no duplicate (conv_id,
-    turn_idx) can ever be published by racing writers.
+    the winner committed), up to ``max_commit_retries`` times.
+    Serializable-append semantics: no duplicate (conv_id, turn_idx) can
+    ever be published by racing writers.
 
-    Each committed snapshot holds its own totals in ``_METRICS.json``
-    (run_id, turns in/out, bytes in/out, parse failures — ≙ the
-    reference's stats + progress rows, SURVEY §1.3), observed during the
-    staged write itself: no re-read and no extra job.
+    The extraction is one Spark job and no Spark write: the Python
+    worker that extracts a task's turns writes them as that task's
+    parquet file in the staged dir, and the driver collects one row per
+    file (``_stage_extracted``). As in Iceberg, where tasks write the
+    data files and the commit records them, the driver then writes the
+    snapshot's manifest, ``_METRICS.json``: the files, their schema and
+    the snapshot's totals (run_id, turns in/out, bytes in/out, parse
+    failures — ≙ the reference's stats + progress rows, SURVEY §1.3),
+    summed from the rows the tasks returned: no re-read and no extra
+    job. Every read plans from those file lists.
 
     ``_race_hook`` is a test seam: called after staging, before commit
     validation, so tests can interleave a competing commit.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     for _attempt in range(max_commit_retries + 1):
-        committed = _committed_snapshots(out_root)[1]
+        committed, existing = _planned(out_root, partial(_read_snapshot_paths, spark))
         base_state = set(map(os.path.basename, committed))
-        existing = _read_snapshot_paths(spark, committed)
         todo = transcripts
         if existing is not None:
             done_keys = existing.select("conv_id", "turn_idx")
             todo = transcripts.join(done_keys, ["conv_id", "turn_idx"], "left_anti")
-        extracted, obs = _observed(extract(todo))
-        staged = _stage_parquet_into(extracted, out_root)
-        totals = _write_metrics(staged, obs, run_id)
+        staged, totals = _stage_extracted(todo, out_root, run_id)
         if existing is not None and not totals["turns_in"]:
             # fully-caught-up rerun: don't publish (or keep) an empty
             # snapshot — no-op reruns must not grow the directory count.
@@ -608,11 +729,13 @@ def compact_snapshots(
     deliberately (the tags then dangle and ``read_snapshots`` raises on
     them).
 
-    The rewrite observes its own totals into the compacted snapshot's
-    ``_METRICS.json``, so they count only the rows it kept, never the
-    turns it deleted. A lone snapshot without totals (from a store
-    written before snapshots held them) is rewritten just to gain them.
-    Returns the number of snapshots compacted.
+    The rewrite keeps Spark's parquet writer, and observes its own totals
+    during that write into the compacted snapshot's manifest, so they
+    count only the rows it kept, never the turns it deleted; the manifest
+    also lists the staged data files and the written schema. A lone
+    snapshot without a manifest (from a store written before snapshots
+    held one) is rewritten just to gain it. Returns the number of
+    snapshots compacted.
     """
     for _attempt in range(max_commit_retries + 1):
         all_committed = _committed_snapshots(out_root)[1]
@@ -639,24 +762,29 @@ def compact_snapshots(
                 ),
             )
         paths = [p for p in all_committed if _snapshot_idx(p) > boundary]
-        # a lone snapshot is rewritten only to give an old store's totals
-        if len(paths) <= 1 and all(
-            os.path.exists(os.path.join(p, _METRICS)) for p in paths
-        ):
-            return 0
-        # read the SAME path list that gets superseded (never re-list —
-        # a commit landing between two listings would be folded into the
-        # compacted output without a tombstone: permanent duplicates),
-        # with merge-on-read equality deletes applied, so compaction
-        # rewrites the table deletes-applied — after it, the deleted
-        # bytes are physically gone, the delete files retire, and reads
-        # pay no merge cost.
-        df = _read_snapshot_paths(spark, paths)
+        try:
+            # a lone snapshot is rewritten only to give an old store its
+            # manifest
+            if len(paths) <= 1 and all(
+                "files" in (_manifest(p) or {}) for p in paths
+            ):
+                return 0
+            # read the SAME path list that gets superseded (never re-list
+            # — a commit landing between two listings would be folded
+            # into the compacted output without a tombstone: permanent
+            # duplicates), with merge-on-read equality deletes applied,
+            # so compaction rewrites the table deletes-applied — after
+            # it, the deleted bytes are physically gone, the delete files
+            # retire, and reads pay no merge cost.
+            df = _read_snapshot_paths(spark, paths)
+        except FileNotFoundError:
+            continue  # a listed dir was dropped since: re-plan
         if df is None:
             return 0
         df, obs = _observed(df)
         staged = _stage_parquet_into(df, out_root)
-        _write_metrics(staged, obs, uuid.uuid4().hex[:12])
+        files = sorted(n for n in os.listdir(staged) if n.endswith(".parquet"))
+        _write_manifest(staged, obs.get, uuid.uuid4().hex[:12], files, df.schema)
         with open(os.path.join(staged, _SUPERSEDES), "w") as fh:
             fh.write("\n".join(os.path.basename(p) for p in paths) + "\n")
         if not _publish(out_root, staged, base_state, _race_hook):
@@ -776,14 +904,36 @@ def vacuum_uncommitted(out_root: str) -> list[str]:
 def read_metrics(spark: SparkSession, out_root: str) -> DataFrame | None:
     """One row of observed totals per committed data snapshot under
     out_root; None if there are none. The driver reads the small
-    ``_METRICS.json`` files and the frame is built in the JVM from one
-    literal: no file scan, no Python workers, one partition."""
-    rows = []
-    for p in _committed_snapshots(out_root)[1]:
-        with _contextlib.suppress(FileNotFoundError):
-            with open(os.path.join(p, _METRICS)) as fh:
-                rows.append({**json.load(fh), "snapshot": _snapshot_idx(p)})
+    manifests, and the frame is built in the JVM from one literal of
+    their run_id and five totals: no file scan, no Python workers, one
+    partition."""
+    _, manifests = _planned(out_root, _manifests)
+    rows = [
+        {
+            "run_id": m["run_id"],
+            **{k: m[k] for k in SNAPSHOT_TOTALS},
+            "snapshot": _snapshot_idx(p),
+        }
+        for p, m in manifests
+        if m is not None
+    ]
     if not rows:
         return None
     totals = F.from_json(F.lit(json.dumps(rows)), _METRICS_SCHEMA)
     return spark.range(0, 1, 1, 1).select(F.inline(totals))
+
+
+def _manifests(paths: list[str]) -> list[tuple[str, dict | None]]:
+    """``(path, _manifest(path))`` for each snapshot dir in ``paths``."""
+    return [(p, _manifest(p)) for p in paths]
+
+
+def committed_turns(out_root: str) -> int | None:
+    """The committed table's row count, summed from the visible
+    snapshots' manifests: no Spark job. None when that sum is not the
+    count: a delete snapshot is visible (it hides rows its manifestless
+    dir does not count), or a snapshot has no totals."""
+    _, manifests = _planned(out_root, _manifests)
+    if any(m is None for _, m in manifests):
+        return None
+    return sum(m["turns_in"] for _, m in manifests)

@@ -1214,3 +1214,221 @@ def test_compaction_committing_mid_listing_is_seen_whole(tmp_path, monkeypatch):
     assert calls == [root]
     assert sorted(map(_snapshot_idx, visible)) in ([0, 1], [2])
     assert sorted(map(_snapshot_idx, _committed_snapshots(root)[1])) == [2]
+
+
+def _manifest_of(snap):
+    import json
+    import os
+
+    from ocr_spark.pipeline import _METRICS
+
+    with open(os.path.join(snap, _METRICS)) as fh:
+        return json.load(fh)
+
+
+def test_worker_written_totals_match_each_snapshots_rows(spark, tmp_path):
+    """The Python workers write the snapshot files and sum the totals
+    from their own Arrow arrays. Per snapshot, the manifest's totals
+    equal ``snapshot_totals()`` over the rows of the files it lists, on
+    turns with non-ASCII text, NULL text and malformed tool payloads."""
+    import os
+
+    from ocr_spark.operators.aggregate import SNAPSHOT_TOTALS, snapshot_totals
+    from ocr_spark.pipeline import _committed_snapshots
+
+    cols = "conv_id string, turn_idx int, role string, text string, tool string"
+    edge = spark.createDataFrame(
+        [
+            ("edge", 0, "user", "naïve café ☃ 😀 𝔘𝔫𝔦", None),
+            ("edge", 1, "user", None, None),
+            ("edge", 2, "tool", "", "not json"),
+            ("edge", 3, "tool", "", '{"blocks": [{"type": 0, "bbox": "x"}]}'),
+            ("edge", 4, "tool", None, '{"rec_texts": ["línea"], "rec_scores": "?"}'),
+            ("edge", 5, "user", "<p>héllo <b>wörld</b> 中文</p>", ""),
+            ("edge", 6, "tool", "résumé", None),
+        ],
+        cols,
+    )
+    full = (
+        fixtures.transcripts_df(spark, 8)
+        .selectExpr("conv_id", "cast(turn_idx as int) turn_idx", "role", "text", "tool")
+        .unionByName(edge)
+        .repartition(3)
+        .cache()
+    )
+    root = str(tmp_path / "store")
+    run_resumable(spark, full.filter("turn_idx % 2 = 0"), root)
+    run_resumable(spark, full, root)
+
+    snaps = _committed_snapshots(root)[1]
+    assert len(snaps) == 2
+    failures = 0
+    for snap in snaps:
+        m = _manifest_of(snap)
+        rows = spark.read.parquet(*(os.path.join(snap, f) for f in m["files"]))
+        want = rows.agg(*snapshot_totals()).first().asDict()
+        assert {k: m[k] for k in SNAPSHOT_TOTALS} == want, snap
+        failures += m["parse_failures"]
+    assert failures > 0
+    assert read_snapshots(spark, root).count() == full.count()
+
+
+def test_stray_file_in_a_committed_snapshot_is_never_read(spark, tmp_path):
+    """A reader reads the files a manifest lists, not the dir: a late
+    file from a stray task attempt inside a committed snapshot dir does
+    not add rows, to reads or to a resume's anti-join."""
+    import os
+    import shutil
+
+    from ocr_spark.pipeline import _committed_snapshots, read_metrics
+
+    full = fixtures.transcripts_df(spark, 6).cache()
+    n = full.count()
+    root = str(tmp_path / "store")
+    run_resumable(spark, full.filter("turn_idx % 2 = 0"), root)
+    (snap,) = _committed_snapshots(root)[1]
+    listed = _manifest_of(snap)["files"][0]
+    shutil.copy(os.path.join(snap, listed), os.path.join(snap, "part-00000-999999.parquet"))
+
+    assert read_snapshots(spark, root).count() == full.filter("turn_idx % 2 = 0").count()
+    committed = run_resumable(spark, full, root)
+    assert committed.count() == n
+    assert committed.select("conv_id", "turn_idx").distinct().count() == n
+    assert read_metrics(spark, root).groupBy().sum("turns_in").first()[0] == n
+
+
+def test_staged_file_no_task_returned_is_not_published(spark, tmp_path, monkeypatch):
+    """A file in the staged dir that no collected task row names (what a
+    failed task attempt leaves) is deleted before ``_publish``: the
+    committed snapshot holds exactly the files its manifest lists."""
+    import os
+
+    from ocr_spark import pipeline
+
+    stray = "part-00000-999999.parquet"
+    extract_into = pipeline.extract_into
+
+    def leaving_a_stray(df, staging):
+        with open(os.path.join(staging, stray), "wb") as fh:
+            fh.write(b"PAR1 cut short")
+        return extract_into(df, staging)
+
+    monkeypatch.setattr(pipeline, "extract_into", leaving_a_stray)
+    full = fixtures.transcripts_df(spark, 4)
+    root = str(tmp_path / "store")
+    committed = pipeline.run_resumable(spark, full, root)
+    monkeypatch.undo()
+
+    (snap,) = pipeline._committed_snapshots(root)[1]
+    data = sorted(n for n in os.listdir(snap) if n.endswith(".parquet"))
+    assert stray not in data
+    assert data == _manifest_of(snap)["files"]
+    assert committed.count() == full.count()
+
+
+def _staged_with_manifest(root, tag, turns_in, supersedes=()):
+    """``_publish_by_hand`` plus a manifest listing its one file."""
+    import json
+    import os
+
+    from ocr_spark.pipeline import _METRICS
+
+    staged = _publish_by_hand(root, tag, supersedes)
+    manifest = dict.fromkeys(("turns_out", "bytes_in", "bytes_out", "parse_failures"), 0)
+    manifest.update(run_id=tag, turns_in=turns_in, files=["part-0.parquet"], schema={})
+    with open(os.path.join(staged, _METRICS), "w") as fh:
+        json.dump(manifest, fh)
+    return staged
+
+
+def test_compaction_dropping_listed_dirs_makes_readers_relist(tmp_path, monkeypatch):
+    """``compact_snapshots`` drops the dirs it supersedes right after its
+    commit. A reader whose root listing predates that commit finds them
+    gone: it lists again and sees the compaction, never an empty store."""
+    import os
+
+    from ocr_spark.pipeline import _committed_snapshots, _drop_snapshot, _publish, _snapshot_idx
+
+    root = str(tmp_path / "store")
+    _publish(root, _publish_by_hand(root, "s0"))
+    _publish(root, _publish_by_hand(root, "s1"))
+    compaction = _publish_by_hand(root, "c", supersedes=("snapshot=0", "snapshot=1"))
+
+    real_listdir = os.listdir
+    calls = []
+
+    def listdir_then_compact(path=".", *args, **kwargs):
+        names = real_listdir(path, *args, **kwargs)
+        if path == root and not calls:
+            calls.append(path)
+            _publish(root, compaction)
+            _drop_snapshot(root, "snapshot=0")
+            _drop_snapshot(root, "snapshot=1")
+        return names
+
+    monkeypatch.setattr(os, "listdir", listdir_then_compact)
+    visible = _committed_snapshots(root)[1]
+    monkeypatch.undo()
+
+    assert calls == [root]
+    assert list(map(_snapshot_idx, visible)) == [2]
+
+
+def test_manifest_read_replans_when_a_listed_snapshot_is_dropped(tmp_path, monkeypatch):
+    """A compaction that commits and drops its inputs between a reader's
+    listing and its manifest reads sends the reader back to a new
+    listing: the manifests it sums are the compaction's."""
+    from ocr_spark import pipeline
+
+    root = str(tmp_path / "store")
+    pipeline._publish(root, _staged_with_manifest(root, "s0", 3))
+    pipeline._publish(root, _staged_with_manifest(root, "s1", 4))
+    compaction = _staged_with_manifest(
+        root, "c", 7, supersedes=("snapshot=0", "snapshot=1")
+    )
+
+    real = pipeline._committed_snapshots
+    calls = []
+
+    def list_then_compact(*args, **kwargs):
+        state = real(*args, **kwargs)
+        if not calls:
+            calls.append(state)
+            pipeline._publish(root, compaction)
+            pipeline._drop_snapshot(root, "snapshot=0")
+            pipeline._drop_snapshot(root, "snapshot=1")
+        return state
+
+    monkeypatch.setattr(pipeline, "_committed_snapshots", list_then_compact)
+    assert pipeline.committed_turns(root) == 7
+    monkeypatch.undo()
+    assert [len(visible) for _dirs, visible in calls] == [2]
+
+
+def test_extract_job_summary_counts_committed_rows(spark, tmp_path):
+    """The job summary's ``turns_committed`` equals the committed row
+    count. From manifests alone, with no Spark job, while no delete
+    snapshot is visible; by a count while one is; from the manifests
+    again once compaction has applied the delete."""
+    from jobs.extract_job import turns_committed
+    from ocr_spark.pipeline import compact_snapshots, delete_turns
+
+    sc = spark.sparkContext
+    full = fixtures.transcripts_df(spark, 6).cache()
+    root = str(tmp_path / "store")
+    run_resumable(spark, full.filter("turn_idx % 2 = 0"), root)
+    committed = run_resumable(spark, full, root)
+    sc.setJobGroup("summary", "turns_committed from manifests")
+    try:
+        n = turns_committed(committed, root)
+        assert sc.statusTracker().getJobIdsForGroup("summary") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == committed.count() == full.count()
+
+    delete_turns(spark, root, full.filter("turn_idx = 0"))
+    committed = read_snapshots(spark, root)
+    assert turns_committed(committed, root) == committed.count() < full.count()
+    compact_snapshots(spark, root)
+    committed = read_snapshots(spark, root)
+    assert turns_committed(committed, root) == committed.count()

@@ -105,29 +105,33 @@ def test_extract_deduped_one_exchange_one_arrow_node(spark, transcripts_parquet)
 def test_run_resumable_writes_one_arrow_map_without_payload_shuffle(
     spark, transcripts_parquet, tmp_path, monkeypatch
 ):
-    """What production writes (the DataFrame ``run_resumable`` stages):
+    """What production runs (the DataFrame ``run_resumable`` collects):
     on an empty store scan -> one MapInArrow with no Exchange at all; on
     a resume the anti-join against committed keys sits in front of the
-    same single MapInArrow, and no payload-hash dedup shuffle appears."""
+    same single MapInArrow, and no payload-hash dedup shuffle appears.
+    The Python workers write the rows, so the plan holds no Spark write."""
     from ocr_spark import pipeline
 
-    staged = []
-    stage = pipeline._stage_parquet_into
+    collected = []
+    extract_into = pipeline.extract_into
 
-    def capture(df, root):
-        staged.append(plan(df))
-        return stage(df, root)
+    def capture(df, staging):
+        out = extract_into(df, staging)
+        collected.append(plan(out))
+        return out
 
-    monkeypatch.setattr(pipeline, "_stage_parquet_into", capture)
+    monkeypatch.setattr(pipeline, "extract_into", capture)
     t = spark.read.parquet(transcripts_parquet)
     store = str(tmp_path / "store")
     pipeline.run_resumable(spark, t.filter("turn_idx % 2 = 0"), store)
     pipeline.run_resumable(spark, t, store)
-    empty, resume = staged
+    empty, resume = collected
     assert n_ops(empty, "Exchange") == 0, empty
     assert n_ops(empty, "MapInArrow") == 1, empty
     assert "payload_sha" not in resume, resume
     assert n_ops(resume, "MapInArrow") == 1, resume
+    for p in collected:
+        assert "WriteFiles" not in p, p
 
 
 def test_observed_snapshot_write_copies_no_row(spark, transcripts_parquet):

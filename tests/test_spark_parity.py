@@ -379,6 +379,66 @@ def test_worker_loop_never_imports_pandas():
         assert r["bytes_in"] == len((text or "").encode()) + len((tool or "").encode())
 
 
+_WORKER_WRITES_NO_PANDAS = """
+import sys
+import pyarrow as pa
+from ocr_spark.operators.extract import EXTRACTED_SCHEMA, _extract_batches, _write_part
+batches = _extract_batches(pa.ipc.open_stream(sys.stdin.buffer.read()), EXTRACTED_SCHEMA)
+(row,) = _write_part(batches, sys.argv[1])
+row.validate(full=True)
+assert "pandas" not in sys.modules, "the worker's file write imported pandas"
+sink = pa.BufferOutputStream()
+with pa.ipc.new_stream(sink, row.schema) as w:
+    w.write_batch(row)
+sys.stdout.buffer.write(sink.getvalue().to_pybytes())
+"""
+
+
+def test_worker_file_write_never_imports_pandas(tmp_path):
+    """The worker writes its task's rows as one parquet file and returns
+    one row: the file name and its totals. In a fresh interpreter, on the
+    same batch as the loop test, neither the write nor the totals import
+    pandas; the file holds the oracle's rows as zstd pages without
+    dictionaries or a stored Arrow schema, and the totals match them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        ("c", 0, "plain  text, naïve café ☃", None),
+        ("c", 1, "<p>héllo <b>wörld</b></p>", ""),
+        ("c", 2, "", "not json"),
+        ("c", 3, None, None),
+    ]
+    cols = list(zip(*rows))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(cols[0], pa.string()), pa.array(cols[1], pa.int32()),
+         pa.array(cols[2], pa.string()), pa.array(cols[3], pa.string())],
+        names=["conv_id", "turn_idx", "text", "tool"],
+    )
+    path = str(tmp_path / "part-00000-7.parquet")
+    proc = _run_worker_script(_WORKER_WRITES_NO_PANDAS, batch, path)
+    assert proc.returncode == 0, proc.stderr.decode()
+    (got,) = pa.ipc.open_stream(proc.stdout).read_all().to_pylist()
+
+    want = [extract_turn(text or "", tool or "") for _c, _i, text, tool in rows]
+    written = pq.read_table(path).to_pylist()
+    assert [r["extracted_text"] for r in written] == [w["extracted_text"] for w in want]
+    assert got == {
+        "file": "part-00000-7.parquet",
+        "turns_in": len(rows),
+        "turns_out": sum(w["parse_ok"] for w in want),
+        "bytes_in": sum(len((t or "").encode()) + len((u or "").encode()) for _c, _i, t, u in rows),
+        "bytes_out": sum(len(w["extracted_text"] or "") for w in want),
+        "parse_failures": sum(not w["parse_ok"] for w in want),
+    }
+    meta = pq.read_metadata(path)
+    assert b"ARROW:schema" not in (meta.metadata or {})
+    for i in range(meta.num_columns):
+        col = meta.row_group(0).column(i)
+        assert col.compression == "ZSTD", col.path_in_schema
+        assert not col.has_dictionary_page, col.path_in_schema
+
+
 _WORKER_SKIPS_SPARK_ARCHIVES = """
 import importlib, json, os, sys, zipfile, zipimport
 import pyarrow as pa

@@ -31,7 +31,7 @@ def main() -> None:
     import ocr_spark.queries as Q
     from ocr_spark import fixtures
     from ocr_spark.operators.aggregate import conv_text_salted
-    from ocr_spark.operators.extract import extract
+    from ocr_spark.operators.extract import extract, extract_into
 
     tpath = "/tmp/ocr_spark_plans_input"
     fixtures.transcripts_df(spark, 20).write.mode("overwrite").parquet(tpath)
@@ -51,20 +51,24 @@ def main() -> None:
         ),
         (
             "Production extraction: narrow extract behind the resume anti-join",
-            "What run_resumable writes on a non-empty store: the input "
+            "What run_resumable collects on a non-empty store: the input "
             "left-anti-joins the committed (conv_id, turn_idx) keys "
             "(broadcast while the key set is small), then one MapInArrow "
-            "parses each remaining turn in the task that scanned it. No "
-            "payload-hash shuffle: on an empty store the plan is the "
-            "narrow stage above, with zero exchanges. extract_deduped "
-            "stays the opt-in shape for expensive parsers.",
+            "parses each remaining turn in the task that scanned it and "
+            "writes the task's rows as one parquet file from the Python "
+            "worker; the stage returns one row per file (its name and "
+            "totals), and the plan holds no Spark write. No payload-hash "
+            "shuffle: on an empty store the anti-join is gone and the plan "
+            "has zero exchanges. extract_deduped stays the opt-in shape "
+            "for expensive parsers.",
             plan(
-                extract(
+                extract_into(
                     t.join(
                         spark.read.parquet(snap).select("conv_id", "turn_idx"),
                         ["conv_id", "turn_idx"],
                         "left_anti",
-                    )
+                    ),
+                    "/tmp/ocr_spark_plans_staging",
                 )
             ),
         ),
