@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_spark import fixtures, queries as Q
 from ocr_spark.oracles import ORACLES
-from ocr_spark.operators.aggregate import conv_text_salted, partition_metrics
+from ocr_spark.operators.aggregate import conv_text, partition_metrics
 from ocr_spark.operators.extract import extract, extract_deduped
 
 
@@ -42,7 +42,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline over sf0.001 documents recast as
     transcripts — classify -> vectorized extract -> ordered rollup."""
     transcripts = _documents_as_transcripts(spark, "/root/testdata/sf0.001")
-    return conv_text_salted(extract(transcripts))
+    return conv_text(extract(transcripts))
 
 
 def _q_extract_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,7 +88,7 @@ def _q_extract_text_span_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_rollup_text_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL two-phase ordered rollup (extract -> conv_text_salted)
+    """The REAL ordered rollup (extract -> conv_text)
     over documents-as-transcripts, restricted to all-plain-text
     conversations so the DuckDB oracle can re-derive it with an ordered
     string_agg — value-checks the A2/A3 ordered-concat semantics through
@@ -101,12 +101,12 @@ def _q_rollup_text_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("all_text")
         .select("conv_id")
     )
-    return conv_text_salted(ext.join(keep, "conv_id"))
+    return conv_text(ext.join(keep, "conv_id"))
 
 
 def _q_conv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = fixtures.transcripts_df(spark, 80)
-    return conv_text_salted(extract(t))
+    return conv_text(extract(t))
 
 
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:

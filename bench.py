@@ -30,7 +30,7 @@ job (``perfbench/run.py`` times that: the same narrow extraction behind
 the resume anti-join, plus the snapshot commit, through
 ``pipeline.run_resumable``). Here: parquet scan -> narrow ``extract``
 (the ``mapInArrow`` worker loop; no repartition) -> plain parquet write
-(no resume or commit) -> scan it -> two-phase ordered conversation
+(no resume or commit) -> scan it -> one-shuffle ordered conversation
 rollup and partition metrics. Dedupe-before-UDF (A6 memoization,
 ``extract_deduped``) is off here as in production: it pays when the UDF
 is expensive (real OCR inference) and the duplicate rate is high; with
@@ -237,7 +237,7 @@ def _extraction_runner(spark, input_path: str, cpus: int):
     amortized to zero). The first run IS a complete warmup: every
     measured plan, on the full input, byte-for-byte.
     """
-    from ocr_spark.operators.aggregate import conv_text_salted, partition_metrics
+    from ocr_spark.operators.aggregate import conv_text, partition_metrics
     from ocr_spark.operators.extract import extract
 
     snap = os.path.join(BENCH_TMP, f"snapshot_{cpus}")
@@ -252,8 +252,7 @@ def _extraction_runner(spark, input_path: str, cpus: int):
         # already balance per-task work, so conversation-length skew never
         # skews this stage and a pre-extraction repartition would shuffle
         # the raw payloads for nothing (measured ~2x total wall locally).
-        # Skew is handled where keys matter: the two-phase bucket-salted
-        # rollup.
+        # Conversation keys first matter at the rollup's one shuffle.
         extracted = extract(t)
         extracted.write.mode("overwrite").parquet(snap)
         committed = spark.read.parquet(snap)
@@ -262,7 +261,7 @@ def _extraction_runner(spark, input_path: str, cpus: int):
         # interleaves their stages (neither alone saturates the cluster
         # in its final reduce stages; measured ~0.5 s saved at local[32])
         with ThreadPoolExecutor(2) as ex:
-            f1 = ex.submit(lambda: _force(conv_text_salted(committed)))
+            f1 = ex.submit(lambda: _force(conv_text(committed)))
             f2 = ex.submit(
                 lambda: _force(partition_metrics(committed, run_id="bench"))
             )
@@ -576,7 +575,7 @@ def run_scaling(levels=None) -> None:
             "and 4N executors. No real cluster exists in this sandbox, so the\n"
             "evidence is the SAME extraction job (identical parquet input;\n"
             "vectorized narrow extract on byte-bounded scan splits -> parquet\n"
-            "snapshot -> bucket-salted ordered rollup + metrics) run at each\n"
+            "snapshot -> one-shuffle ordered rollup + metrics) run at each\n"
             "parallelism level in a fresh JVM. Each level reports the best of\n"
             f"{repeats} runs: this sandbox shares a host with other tenants, so\n"
             "min-of-R is the standard de-noising for external load spikes.\n\n"
@@ -657,41 +656,36 @@ def run_scaling(levels=None) -> None:
 
 
 def run_skew_stress() -> dict:
-    """Measured skew evidence (north rule: 'salts and repartitions
-    skewed conversations — long agent traces'). Two inputs with
-    identical PAYLOAD bytes (text/tool/role/ts are untouched):
-    ``uniform`` = the fixture ladder without monster traces; ``skewed``
-    = the SAME rows with a configurable share (default 80%) of all
-    turns relabeled into ONE conversation (turn_idx renumbered
-    globally) — the pathological long-trace archetype. Only the
-    conversation keys differ, so a timing delta is key distribution,
-    not payload volume (caveat: the rewritten key columns
-    dictionary-encode differently in parquet, so file bytes and
+    """Measured skew evidence for the long-agent-trace archetype. Two
+    inputs with identical PAYLOAD bytes (text/tool/role/ts are
+    untouched): ``uniform`` = the fixture ladder without monster traces;
+    ``skewed`` = the SAME rows with a configurable share (default 80%)
+    of all turns relabeled into ONE conversation (turn_idx renumbered
+    globally). Only the conversation keys differ, so a timing delta is
+    key distribution, not payload volume (caveat: the rewritten key
+    columns dictionary-encode differently in parquet, so file bytes and
     byte-bounded split counts differ slightly — read the extract row
     with that in mind).
 
-    ALL cells are interleaved min-of-3: each attempt round touches both
-    inputs and both rollup variants before the next round starts, so a
-    noise window on this shared host lands on every cell alike (same
-    policy as the extract A/B):
+    Cells are interleaved min-of-3: each attempt round touches both
+    inputs before the next round starts, so a noise window on a shared
+    host lands on every cell alike:
     - ``extract``: the narrow vectorized extract -> snapshot write per
       input. Must be ~equal: byte-bounded scan splits, not conversation
       keys, balance this stage (bench.py's no-pre-repartition note).
-    - ``rollup_salted`` vs ``rollup_single`` over the committed
-      snapshot: the production two-phase bucket-salted ordered rollup
-      against the single-phase groupBy(conv_id) it replaces. The
-      single-phase merge buffers the ENTIRE monster trace as turn
-      structs in one task's aggregation buffer and sorts it there; the
-      salted phase-1 pre-joins each 256-turn bucket in parallel, so
-      the hot task's state is ~turns/256 strings and its serial work
-      is the unavoidable byte concat of the conversation's own output.
+    - ``rollup``: ``aggregate.conv_text`` over the committed snapshot.
+      Its one shuffle sends the monster's partial lists to one task,
+      which sorts and joins the whole trace.
 
-    Writes BENCH/SKEW.md from the measured numbers; prints one JSON
-    line."""
+    Writes BENCH/SKEW.md from the measured numbers, followed by
+    BENCH/SKEW_NOTES.md (earlier measurements of removed rollups);
+    prints one JSON line. Size the driver heap with
+    ``OCR_SPARK_DRIVER_MEM`` and the input with
+    ``SPARK_GRAFT_SKEW_CONVS``."""
     from pyspark.sql import Window, functions as F
 
     from ocr_spark import fixtures
-    from ocr_spark.operators.aggregate import conv_text, conv_text_salted
+    from ocr_spark.operators.aggregate import conv_text
     from ocr_spark.operators.extract import extract
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -752,20 +746,16 @@ def run_skew_stress() -> dict:
                 extract_once(label, path)
             )
     committed = {label: spark.read.parquet(snaps[label]) for label, _ in labels}
-    for _ in range(3):  # one full round of all four cells per attempt
+    for _ in range(3):
         for label, _path in labels:
-            times.setdefault(("salted", label), []).append(
-                _timeit(lambda: _force(conv_text_salted(committed[label])))
-            )
-            times.setdefault(("single", label), []).append(
+            times.setdefault(("rollup", label), []).append(
                 _timeit(lambda: _force(conv_text(committed[label])))
             )
     for label, _path in labels:
         out["cells"][label] = {
             "extract_sec": round(min(times[("extract", label)]), 3),
             "turns": committed[label].count(),
-            "rollup_salted_sec": round(min(times[("salted", label)]), 3),
-            "rollup_single_sec": round(min(times[("single", label)]), 3),
+            "rollup_sec": round(min(times[("rollup", label)]), 3),
         }
 
     u, s = out["cells"]["uniform"], out["cells"]["skewed"]
@@ -774,44 +764,9 @@ def run_skew_stress() -> dict:
     )
     out["monster_turn_share"] = round(monster_turns / s["turns"], 3)
     out["extract_skew_ratio"] = round(s["extract_sec"] / u["extract_sec"], 3)
-    out["salted_skew_ratio"] = round(
-        s["rollup_salted_sec"] / u["rollup_salted_sec"], 3
-    )
-    out["single_skew_ratio"] = round(
-        s["rollup_single_sec"] / u["rollup_single_sec"], 3
-    )
-    out["salted_vs_single_on_skew"] = round(
-        s["rollup_single_sec"] / s["rollup_salted_sec"], 3
-    )
-    out["salt_premium_uniform"] = round(
-        u["rollup_salted_sec"] / u["rollup_single_sec"], 3
-    )
+    out["rollup_skew_ratio"] = round(s["rollup_sec"] / u["rollup_sec"], 3)
     for snap in snaps.values():
         shutil.rmtree(snap, ignore_errors=True)
-
-    win = out["salted_vs_single_on_skew"]
-    if win >= 1.1:
-        verdict = (
-            f"On the skewed input the salted rollup is **{win}x faster** than "
-            "the single-phase groupBy: the measured crossover."
-        )
-    elif win >= 0.9:
-        verdict = (
-            "At this scale the two rollups are within noise of each other on "
-            "the skewed input: the salt's extra shuffle premium and the "
-            "monster's serial merge cost roughly cancel."
-        )
-    else:
-        verdict = (
-            f"At this scale the single-phase rollup is still "
-            f"{round(1 / win, 2)}x faster even on the skewed input: the "
-            "salt's second shuffle costs more than this monster's serial "
-            "merge. The salt is an insurance policy priced below — its value "
-            "is the BOUND, not this cell's wall clock: single-phase buffers "
-            "the whole trace as structs in ONE task (O(trace bytes) heap -> "
-            "straggler, then OOM, as traces grow), while salted task state "
-            "is capped at ~256-turn buckets regardless of trace length."
-        )
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "SKEW.md"), "w") as fh:
@@ -821,41 +776,34 @@ def run_skew_stress() -> dict:
             "identical payload bytes (text/tool untouched; only conversation\n"
             "keys differ, which shifts parquet key-column encoding slightly);\n"
             "`skewed` relabels a hash-marked share of ALL turns into one\n"
-            "conversation (the monster agent trace). ALL cells are interleaved\n"
-            "min-of-3 (every attempt round touches both inputs and both rollup\n"
-            f"variants, so a noise window hits every cell alike) at local[{cpus}]\n"
-            f"({n_convs} base conversations).\n\n"
+            "conversation (the monster agent trace). Cells are interleaved\n"
+            "min-of-3 (every attempt round touches both inputs, so a noise\n"
+            f"window hits every cell alike) at local[{cpus}] ({n_convs} base\n"
+            "conversations).\n\n"
             "| cell | uniform sec | skewed sec | skew ratio |\n"
             "| --- | --- | --- | --- |\n"
             f"| narrow extract -> snapshot | {u['extract_sec']} | "
             f"{s['extract_sec']} | {out['extract_skew_ratio']} |\n"
-            f"| ordered rollup, two-phase bucket-salted (production) | "
-            f"{u['rollup_salted_sec']} | {s['rollup_salted_sec']} | "
-            f"{out['salted_skew_ratio']} |\n"
-            f"| ordered rollup, single-phase groupBy | "
-            f"{u['rollup_single_sec']} | {s['rollup_single_sec']} | "
-            f"{out['single_skew_ratio']} |\n\n"
+            f"| ordered rollup, `conv_text` (one shuffle, `sort_array`) | "
+            f"{u['rollup_sec']} | {s['rollup_sec']} | "
+            f"{out['rollup_skew_ratio']} |\n\n"
             f"Monster conversation holds **{out['monster_turn_share']:.0%} of "
             f"all turns** ({monster_turns} of {s['turns']}).\n\n"
-            f"{verdict}\n\n"
             "Reading the rows:\n\n"
             "- The extract row pins the docstring claim that the narrow map\n"
             "  stage is skew-immune: byte-bounded scan splits balance work\n"
             "  whatever the conversation keys look like, so no pre-extract\n"
             "  repartition is wanted.\n"
-            f"- The salt's insurance premium on skew-free data is "
-            f"{out['salt_premium_uniform']}x\n"
-            "  (two shuffles moving pre-joined bucket strings vs one moving\n"
-            "  turn structs with map-side partial lists).\n"
-            "- What the premium buys is a memory/straggler BOUND, not a\n"
-            "  wall-clock win at every scale: the single-phase final merge\n"
-            "  buffers and sorts the whole monster trace in one task\n"
-            "  (task state = O(trace bytes); a 10^6-turn agent trace at KBs\n"
-            "  per turn is GBs in one aggregation buffer), while the salted\n"
-            "  phase-1 pre-joins each 256-turn bucket in parallel and the hot\n"
-            "  task's remaining serial work is the unavoidable byte concat of\n"
-            "  that conversation's own output string.\n"
+            "- The rollup's skew ratio is the monster's cost: its partial\n"
+            "  lists meet in one task, which sorts and joins the whole\n"
+            "  trace. That task's memory grows with the trace; its output\n"
+            "  row is the conversation's full text in any rollup shape.\n"
         )
+        # durable notes survive every regeneration
+        notes = os.path.join(REPO, "BENCH", "SKEW_NOTES.md")
+        if os.path.exists(notes):
+            with open(notes) as nf:
+                fh.write("\n" + nf.read())
     spark.stop()
     return out
 

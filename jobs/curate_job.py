@@ -38,7 +38,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.curate import curate, funnel
-    from ocr_spark.operators.aggregate import conv_text_salted
+    from ocr_spark.operators.aggregate import conv_text
     from ocr_spark.pipeline import run_resumable
 
     t0 = time.time()
@@ -46,7 +46,7 @@ def main() -> None:
     committed = run_resumable(
         spark, transcripts, os.path.join(args.output, "extracted")
     )
-    corpus = conv_text_salted(committed).select(
+    corpus = conv_text(committed).select(
         F.col("conv_id").alias("doc_id"), F.col("full_text").alias("text")
     )
     curated, obs = curate(

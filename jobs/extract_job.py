@@ -9,9 +9,12 @@
 Runs the resumable snapshot pipeline (anti-join against committed
 snapshots -> narrow vectorized extraction, each task writing its own
 parquet file -> atomic snapshot commit whose manifest lists those files
-and their totals) and then the two-phase ordered conversation rollup to
-``<output>/conv_text``. Re-running after a kill resumes from the last
-committed snapshot. Prints a one-line JSON summary on completion.
+and their totals) and then the ordered conversation rollup
+(``aggregate.conv_text``: one shuffle on ``conv_id``) to
+``<output>/conv_text``. An Observation on that write counts the
+conversations for the summary, so the rollup is never read back.
+Re-running after a kill resumes from the last committed snapshot.
+Prints a one-line JSON summary on completion.
 
 Package the py-files zip with:  python tools/make_pyfiles.py
 """
@@ -87,6 +90,21 @@ def turns_committed(committed, snap_root: str) -> int:
     return committed.count() if n is None else n
 
 
+def write_rollup(committed, rollup_dir: str) -> int:
+    """Write ``aggregate.conv_text(committed)`` to ``rollup_dir`` and
+    return its row count, observed during the write: no Spark job reads
+    the rollup back to count it."""
+    from pyspark.sql import Observation, functions as F
+
+    from ocr_spark.operators.aggregate import conv_text
+
+    obs = Observation("rollup")
+    conv_text(committed).observe(obs, F.count("*").alias("conversations")).write.mode(
+        "overwrite"
+    ).parquet(rollup_dir)
+    return obs.get["conversations"]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="transcripts parquet dir")
@@ -118,7 +136,6 @@ def main() -> None:
     spark = build_session(app_name="ocr_spark_extract")
     spark.sparkContext.setLogLevel("WARN")
 
-    from ocr_spark.operators.aggregate import conv_text_salted
     from ocr_spark.pipeline import read_metrics, run_resumable
 
     t0 = time.time()
@@ -131,8 +148,7 @@ def main() -> None:
     snap_root = os.path.join(args.output, "extracted")
     committed = run_resumable(spark, transcripts, snap_root, run_id=args.run_id)
     rollup_dir = os.path.join(args.output, "conv_text")
-    rollup = conv_text_salted(committed)
-    rollup.write.mode("overwrite").parquet(rollup_dir)
+    conversations = write_rollup(committed, rollup_dir)
 
     bucketed_tables = []
     bucketed_join_exchanges = None
@@ -162,7 +178,6 @@ def main() -> None:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
     metrics = read_metrics(spark, snap_root)
-    conversations = spark.read.parquet(rollup_dir).count()
     summary = {
         "turns_committed": turns_committed(committed, snap_root),
         "conversations": conversations,

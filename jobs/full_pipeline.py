@@ -76,7 +76,7 @@ def run(
         near_dedup,
         shingles,
     )
-    from ocr_spark.operators.aggregate import conv_text_salted
+    from ocr_spark.operators.aggregate import conv_text
     from ocr_spark.operators.packing import pack_sequences
     from ocr_spark.pipeline import read_metrics, run_resumable
 
@@ -90,7 +90,7 @@ def run(
     committed = run_resumable(
         spark, transcripts, os.path.join(output, "extracted")
     )
-    corpus = conv_text_salted(committed).select(
+    corpus = conv_text(committed).select(
         F.col("conv_id").alias("doc_id"), F.col("full_text").alias("text")
     )
     corpus_dir = os.path.join(output, "corpus")

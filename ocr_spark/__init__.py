@@ -26,7 +26,7 @@ def __getattr__(name):
     _API = {
         "extract": ("ocr_spark.operators.extract", "extract"),
         "extract_deduped": ("ocr_spark.operators.extract", "extract_deduped"),
-        "conv_text_salted": ("ocr_spark.operators.aggregate", "conv_text_salted"),
+        "conv_text": ("ocr_spark.operators.aggregate", "conv_text"),
         "conv_turn_gap_stats": ("ocr_spark.operators.aggregate", "conv_turn_gap_stats"),
         "partition_metrics": ("ocr_spark.operators.aggregate", "partition_metrics"),
         "run_resumable": ("ocr_spark.pipeline", "run_resumable"),

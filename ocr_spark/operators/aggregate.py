@@ -5,17 +5,16 @@ by page index, and counts classifications
 (``tasks/pdf_hybrid_tasks.py:282-339``). In Spark the shuffle *is* the
 barrier: a ``groupBy(conv_id)`` with an order-recovering aggregate.
 
-Two strategies, identical results:
-
-- ``conv_text``: single-phase. Catalyst already performs partial (map-
-  side) aggregation for ``collect_list``/``count``; fine when no single
-  conversation is huge.
-- ``conv_text_salted``: explicit two-phase for the long-agent-trace skew
-  archetype. Phase 1 groups by ``(conv_id, turn_bucket)`` so a 10^4-turn
-  conversation is pre-reduced by many tasks; phase 2 merges the few
-  bucket rows per conversation. Because buckets are contiguous turn
-  ranges, concatenating per-bucket joins in bucket order equals the
-  global ordered join — the salt never touches a sort key.
+``conv_text`` is the one rollup: scan -> partial ``collect_list`` per
+(task, conversation) -> one ``hashpartitioning(conv_id)`` Exchange ->
+final merge, whose ``sort_array`` orders the turn structs with Spark's
+built-in struct ordering (no lambda, no interpreted comparator). An
+earlier two-phase variant salted each conversation by 256-turn bucket
+and paid a second shuffle and Spark job for it. Measured at local[4]
+it lost on uniform input and on an input where one conversation holds
+80% of the turns (BENCH/SKEW.md), and it bounds no memory either: the
+final row is the whole conversation's text, in one task, whatever the
+partial rows were.
 """
 
 from __future__ import annotations
@@ -44,13 +43,16 @@ _NOT_BLANK = (
 # The blank-skip runs as an aggregate FILTER clause, i.e. BEFORE the
 # collect_list buffer: blank turns never enter the map-side partial lists,
 # so they are neither buffered nor shuffled (same rows out — the filter
-# predicate is per-element, so filtering before or after collection is
-# equivalent; ordering is recovered by array_sort either way).
+# predicate is per-element). sort_array orders the (turn_idx, text)
+# structs field by field with Spark's native ordering, and .extracted_text
+# reads the field out of the sorted array; array_sort and transform would
+# run an interpreted lambda on every comparison and element. turn_idx is
+# unique per conversation, so the order is the turn order.
 _JOIN_TURNS = (
-    "array_join(transform(array_sort("
+    "array_join(sort_array("
     " collect_list(struct(turn_idx, extracted_text))"
-    f" FILTER (WHERE extracted_text is not null and {_NOT_BLANK})),"
-    " x -> x.extracted_text), '\\n\\n')"
+    f" FILTER (WHERE extracted_text is not null and {_NOT_BLANK})).extracted_text,"
+    " '\\n\\n')"
 )
 
 
@@ -67,28 +69,8 @@ def conv_text(extracted: DataFrame) -> DataFrame:
     )
 
 
-def conv_text_salted(extracted: DataFrame, bucket_turns: int = 256) -> DataFrame:
-    """Two-phase skew-safe variant of ``conv_text`` (P5, SURVEY §2.4)."""
-    extracted = extracted.select("conv_id", "turn_idx", "kind", "extracted_text")
-    bucketed = extracted.withColumn(
-        "turn_bucket", (F.col("turn_idx") / F.lit(bucket_turns)).cast("int")
-    )
-    partial = bucketed.groupBy("conv_id", "turn_bucket").agg(
-        F.expr(_JOIN_TURNS).alias("bucket_text"),
-        F.count("*").cast("int").alias("n_turns"),
-        F.expr(f"count_if(kind in ({_TEXT_KINDS_SQL}))").cast("int").alias("n_text"),
-        F.expr("count_if(kind = 'ocr_lines')").cast("int").alias("n_ocr"),
-    )
-    return partial.groupBy("conv_id").agg(
-        F.expr(
-            "array_join(transform(array_sort("
-            " collect_list(struct(turn_bucket, bucket_text)) FILTER (WHERE bucket_text != '')),"
-            " x -> x.bucket_text), '\\n\\n')"
-        ).alias("full_text"),
-        F.sum("n_turns").cast("int").alias("n_turns"),
-        F.sum("n_text").cast("int").alias("n_text"),
-        F.sum("n_ocr").cast("int").alias("n_ocr"),
-    )
+# the old name, which perfbench/run.py still imports
+conv_text_salted = conv_text
 
 
 _GAP_SCHEMA = (
@@ -131,8 +113,7 @@ def conv_turn_gap_stats(transcripts: DataFrame) -> DataFrame:
     streaming state, applyInPandas here for per-group computations that
     want a dataframe view of the whole group, e.g. quantiles). One
     shuffle on conv_id; each group is one conversation, so memory is
-    bounded by the longest conversation — for the 10^6-turn archetype,
-    pre-aggregate per (conv_id, turn_bucket) first, same as the rollup."""
+    bounded by the longest conversation, as in the rollup."""
     return transcripts.select("conv_id", "turn_idx", "ts").groupBy(
         "conv_id"
     ).applyInPandas(_gap_stats_fn, _GAP_SCHEMA)

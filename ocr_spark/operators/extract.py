@@ -40,10 +40,13 @@ archives in ``SPARK_HOME``, which cannot change while a worker lives; a
 reused worker skips it from its second task on.
 
 Neither shape repartitions its input by conversation, so a
-pre-extraction salt would be an extra exchange that no operator uses.
-Conversation skew (the long-agent-trace archetype, SURVEY §2.4 P5) is
-handled where the rows of one conversation meet: the turn-bucket
-two-phase rollup ``aggregate.conv_text_salted``.
+pre-extraction salt would be an extra exchange that no operator uses,
+and conversation skew (the long-agent-trace archetype, SURVEY §2.4 P5)
+never reaches the parser. The rows of one conversation first meet in
+the rollup, ``aggregate.conv_text``: one shuffle on ``conv_id`` after
+map-side partial lists. A turn-bucket salt in front of it cost a second
+shuffle and lost at local[4] on uniform input and with 80% of all turns
+in one conversation (BENCH/SKEW.md).
 """
 
 from __future__ import annotations
@@ -217,6 +220,20 @@ def _skip_spark_archive_refresh():
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def _decode_error(column: str) -> dict:
+    """The ``extracted`` row of a turn whose ``column`` holds bytes that
+    are not valid UTF-8: the parser never sees it."""
+    return {
+        "kind": "error",
+        "extracted_text": "",
+        "spans": [],
+        "lines": [],
+        "blocks": [],
+        "parse_ok": False,
+        "error": f"decode error: invalid UTF-8 in {column}",
+    }
+
+
 def _extract_batches(batches, out_schema: T.StructType):
     """The one per-row worker loop: ``text``/``tool`` through the frozen
     parser, key columns (every output column before ``kind``) passed
@@ -236,7 +253,12 @@ def _extract_batches(batches, out_schema: T.StructType):
     archive on ``sys.path`` (~0.2 s per task on Python 3.11). The loop
     first calls ``_skip_spark_archive_refresh``, so from its second task on
     a reused worker no longer re-reads Spark's own archives; every other
-    archive still refreshes."""
+    archive still refreshes.
+
+    Spark does not validate the bytes of a string, so a ``text`` or
+    ``tool`` value may not be valid UTF-8. Such a turn becomes an error
+    row (``_decode_error``); the other turns of its batch are parsed as
+    usual."""
     _skip_spark_archive_refresh()
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -264,20 +286,42 @@ def _extract_batches(batches, out_schema: T.StructType):
     i64 = types["bytes_in"]
     zero = _fixed(i64, "q", [0])[0]  # pa.scalar(0) would import pandas
 
+    def decoded(column):
+        """``column``'s values as str (None for NULL), and the rows whose
+        bytes are not valid UTF-8 (None in the values). ``to_pylist``
+        decodes the whole column; only when it raises is the column
+        decoded row by row, from its binary cast."""
+        try:
+            return column.to_pylist(), ()
+        except UnicodeDecodeError:
+            values, bad = [], set()
+            for i, raw in enumerate(column.cast(pa.binary()).to_pylist()):
+                try:
+                    values.append(None if raw is None else raw.decode())
+                except UnicodeDecodeError:
+                    values.append(None)
+                    bad.add(i)
+            return values, bad
+
     def utf8_bytes(batch, name):
         """Per-row UTF-8 byte length of a string column, read from its
         Arrow offsets; NULL counts 0."""
         return pc.fill_null(pc.binary_length(batch.column(name)).cast(i64), zero)
 
     for batch in batches:
-        texts = batch.column("text").to_pylist()
-        tools = batch.column("tool").to_pylist()
+        texts, bad_text = decoded(batch.column("text"))
+        tools, bad_tool = decoded(batch.column("tool"))
         kind, etext, ok, err = [], [], [], []
         s_off, s_start, s_end = [0], [], []
         l_off, l_text, l_conf, l_boff, l_bval = [0], [], [], [0], []
         b_off, b_type, b_text, b_boff, b_bval = [0], [], [], [0], []
-        for text, tool in zip(texts, tools):
-            row = extract_turn(text or "", tool or "")
+        for i, (text, tool) in enumerate(zip(texts, tools)):
+            if i in bad_text:
+                row = _decode_error("text")
+            elif i in bad_tool:
+                row = _decode_error("tool")
+            else:
+                row = extract_turn(text or "", tool or "")
             kind.append(row["kind"])
             etext.append(row["extracted_text"])
             ok.append(row["parse_ok"])

@@ -1075,7 +1075,7 @@ FROM cleaned
 """
 
 # ordered-rollup re-derivation for all-plain-text conversations; compared
-# against the REAL extract -> two-phase salted rollup path
+# against the REAL extract -> conv_text rollup path
 ORACLES["rollup_text_parity"] = r"""
 WITH t AS (
   SELECT source AS conv_id,

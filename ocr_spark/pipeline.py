@@ -3,8 +3,8 @@
 Spark recast of the reference's flagship hybrid-extract lifecycle
 (SURVEY §3 E3): scan -> classify/route/extract (one narrow Arrow map
 per scan split, no shuffle) -> snapshot write (the checkpoint) ->
-ordered rollup (``operators.aggregate.conv_text_salted`` over
-``read_snapshots``). ``run_resumable`` is the only path that lands
+ordered rollup (``operators.aggregate.conv_text`` over
+``read_snapshots``: one shuffle on ``conv_id``). ``run_resumable`` is the only path that lands
 extracted turns, for batch jobs and, through
 ``streaming.stream_to_store``, for streams. The committed snapshot is
 the cache; resume is an anti-join against already-committed keys (≙ the

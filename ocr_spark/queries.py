@@ -4983,7 +4983,7 @@ def q_bucketed_layout_audit(spark, sf_dir):
     transform on a real catalog), so every later conv-keyed join
     between them is shuffle-free — the dominant repeated Exchange
     becomes a one-time layout cost at write time."""
-    from ocr_spark.operators.aggregate import conv_text_salted
+    from ocr_spark.operators.aggregate import conv_text
     from ocr_spark.operators.bucketing import bucketed_join, write_bucketed
     from ocr_spark.operators.extract import extract
 
@@ -4992,7 +4992,7 @@ def q_bucketed_layout_audit(spark, sf_dir):
     ext = extract(doc_transcripts(spark, sf_dir)).localCheckpoint()
     write_bucketed(ext, "audit_extracted_b", 8)
     write_bucketed(
-        conv_text_salted(ext), "audit_conv_text_b", 8, sort_cols=("conv_id",)
+        conv_text(ext), "audit_conv_text_b", 8, sort_cols=("conv_id",)
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -4,8 +4,9 @@ The confs below are the ones that matter at 100 TB, set identically for
 local testing so the plans we inspect locally are the plans we'd ship:
 
 - AQE on (runtime partition coalescing + skew-join splitting) — the
-  reference has no skew handling at all (SURVEY §2.4 P5); we rely on AQE
-  plus explicit salting for the long-agent-trace skew archetype.
+  reference has no skew handling at all (SURVEY §2.4 P5). The extraction
+  stage never shuffles by conversation, so long agent traces skew only
+  the rollup's one shuffle (BENCH/SKEW.md measures it).
 - Arrow enabled and batch-size bounded so pandas UDF memory stays flat
   regardless of input partition size.
 - shuffle partitions sized for the local core count; on a real cluster

@@ -1405,6 +1405,77 @@ def test_manifest_read_replans_when_a_listed_snapshot_is_dropped(tmp_path, monke
     assert [len(visible) for _dirs, visible in calls] == [2]
 
 
+def test_invalid_utf8_turns_become_error_rows(spark, tmp_path):
+    """Spark does not validate the bytes of a string, so a turn's text or
+    tool may not be valid UTF-8. Each such turn becomes an error row; the
+    valid turns of the same batch still equal the oracle, and the
+    snapshot's manifest counts the bad turns as parse failures."""
+    from ocr_spark.oracle import extract_turn
+    from ocr_spark.pipeline import read_metrics
+
+    valid = [(0, "plain  text ", ""), (1, "<p>héllo <b>wörld</b></p>", ""),
+             (3, "", "not json"), (5, "naïve", None)]
+    good = spark.createDataFrame(
+        [("c", i, "user", text, tool) for i, text, tool in valid],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    )
+    bad = spark.sql(
+        "SELECT 'c' conv_id, 2 turn_idx, 'user' role,"
+        " CAST(X'48FFFE49' AS STRING) text, '' tool"
+        " UNION ALL SELECT 'c', 4, 'tool', 'ok', CAST(X'7B22FF7D' AS STRING)"
+    )
+    full = good.unionByName(bad).coalesce(1)  # one task, one Arrow batch
+    root = str(tmp_path / "store")
+    got = {r["turn_idx"]: r for r in run_resumable(spark, full, root).collect()}
+
+    assert sorted(got) == [0, 1, 2, 3, 4, 5]
+    want_failures = 2
+    for i, text, tool in valid:
+        want = extract_turn(text, tool)
+        row = got[i]
+        assert row["kind"] == want["kind"], i
+        assert row["extracted_text"] == want["extracted_text"], i
+        assert [(s["start"], s["end"]) for s in row["spans"]] == want["spans"], i
+        assert (row["parse_ok"], row["error"]) == (want["parse_ok"], want["error"]), i
+        want_failures += not want["parse_ok"]
+    for i, column in ((2, "text"), (4, "tool")):
+        row = got[i]
+        assert (row["kind"], row["extracted_text"], row["parse_ok"]) == ("error", "", False)
+        assert row["error"] == f"decode error: invalid UTF-8 in {column}"
+        assert (row["spans"], row["lines"], row["blocks"]) == ([], [], [])
+    assert got[2]["bytes_in"] == 4  # the raw bytes, from the Arrow offsets
+    assert got[4]["bytes_in"] == 2 + 4
+    metrics = read_metrics(spark, root)
+    assert metrics.groupBy().sum("parse_failures").first()[0] == want_failures
+
+
+def test_extract_job_counts_conversations_during_the_rollup_write(spark, tmp_path):
+    """The job summary's ``conversations`` is observed on the rollup
+    write: it equals the rows written, and the write with the observation
+    runs as many Spark jobs as the same write without it, so no job is
+    spent on the count."""
+    from jobs.extract_job import write_rollup
+    from ocr_spark.operators.aggregate import conv_text
+
+    sc = spark.sparkContext
+    committed = run_resumable(spark, fixtures.transcripts_df(spark, 6), str(tmp_path / "store"))
+
+    def jobs_in_group(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    observed_dir, plain_dir = str(tmp_path / "observed"), str(tmp_path / "plain")
+    n, observed_jobs = jobs_in_group("observed", lambda: write_rollup(committed, observed_dir))
+    _, plain_jobs = jobs_in_group("plain", lambda: conv_text(committed).write.parquet(plain_dir))
+    assert observed_jobs == plain_jobs > 0
+    assert n == spark.read.parquet(observed_dir).count()
+    assert n == committed.select("conv_id").distinct().count() > 0
+
+
 def test_extract_job_summary_counts_committed_rows(spark, tmp_path):
     """The job summary's ``turns_committed`` equals the committed row
     count. From manifests alone, with no Spark job, while no delete

@@ -3,7 +3,7 @@
 These pin the *shape* of the plans Catalyst produces, not just results:
 filters and projections must reach the parquet scan, small dimensions
 must broadcast, the extraction stage must stay narrow, and the
-two-phase rollup must be exactly two exchanges. A regression here is a
+conversation rollup must be exactly one exchange. A regression here is a
 silent 10-100x at scale even though every correctness test stays green.
 """
 
@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 import ocr_spark.queries as Q
 from ocr_spark import fixtures
-from ocr_spark.operators.aggregate import conv_text_salted
+from ocr_spark.operators.aggregate import conv_text
 from ocr_spark.operators.extract import extract
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -73,7 +73,7 @@ def test_rollup_prunes_nested_snapshot_columns(spark, transcripts_parquet, tmp_p
 
     snap = str(tmp_path / "snap")
     extract(spark.read.parquet(transcripts_parquet)).write.parquet(snap)
-    p = plan(conv_text_salted(spark.read.parquet(snap)))
+    p = plan(conv_text(spark.read.parquet(snap)))
     read = [ln for ln in p.splitlines() if "ReadSchema" in ln]
     assert read, p
     line = read[0]
@@ -166,13 +166,22 @@ def test_read_metrics_scans_no_file_and_starts_no_python(
     assert metrics.count() == 2
 
 
-def test_snapshot_rollup_is_two_phase(spark, transcripts_parquet, tmp_path):
-    """Production rolls up the committed snapshot: exactly the bucket
-    partial-agg shuffle and the conversation final-agg shuffle."""
+def test_snapshot_rollup_is_one_shuffle(spark, transcripts_parquet, tmp_path):
+    """Production rolls up the committed snapshot with one shuffle: the
+    partial collect_list per conversation in each scan task, then one
+    hashpartitioning(conv_id) Exchange into the final merge. The merge
+    orders turns with sort_array's native struct ordering and reads the
+    text field directly: no lambda function (array_sort's comparator,
+    transform) may come back into the optimized plan."""
     snap = str(tmp_path / "snap")
     extract(spark.read.parquet(transcripts_parquet)).write.parquet(snap)
-    p = plan(conv_text_salted(spark.read.parquet(snap)))
-    assert n_ops(p, "Exchange") == 2
+    rollup = conv_text(spark.read.parquet(snap))
+    p = plan(rollup)
+    assert n_ops(p, "Exchange") == 1, p
+    assert "hashpartitioning(conv_id" in p, p
+    optimized = rollup._jdf.queryExecution().optimizedPlan().toString()
+    assert "sort_array" in optimized, optimized
+    assert "lambdafunction" not in optimized.lower(), optimized
 
 
 def test_whole_stage_codegen_covers_relational_ops(spark):

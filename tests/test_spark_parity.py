@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark import fixtures
-from ocr_spark.operators.aggregate import conv_text, conv_text_salted, partition_metrics
+from ocr_spark.operators.aggregate import conv_text, partition_metrics
 from ocr_spark.operators.extract import extract, extract_deduped
 from ocr_spark.oracle import aggregate_conversation, extract_turn
 
@@ -72,19 +72,46 @@ def test_conv_text_matches_oracle(spark, transcripts, golden):
     expected = {cid: aggregate_conversation(turns) for cid, turns in per_conv.items()}
 
     extracted = extract(transcripts)
-    for agg_fn in (conv_text, lambda df: conv_text_salted(df, bucket_turns=4)):
-        got = {r["conv_id"]: r for r in agg_fn(extracted).collect()}
-        assert set(got) == set(expected)
-        for cid, want in expected.items():
-            row = got[cid]
-            assert row["full_text"] == want["full_text"], cid
-            assert row["n_turns"] == want["n_turns"], cid
-            assert row["n_text"] == want["n_text"], cid
-            assert row["n_ocr"] == want["n_ocr"], cid
+    got = {r["conv_id"]: r for r in conv_text(extracted).collect()}
+    assert set(got) == set(expected)
+    for cid, want in expected.items():
+        row = got[cid]
+        assert row["full_text"] == want["full_text"], cid
+        assert row["n_turns"] == want["n_turns"], cid
+        assert row["n_text"] == want["n_text"], cid
+        assert row["n_ocr"] == want["n_ocr"], cid
+
+
+def test_long_conversation_rolls_up_in_turn_order_from_shuffled_partitions(spark):
+    """A 3000-turn conversation with blank turns, its rows shuffled and
+    spread over 16 partitions, rolls up equal to the oracle: the turn
+    order comes from the rollup's sort, not from the order rows arrive
+    in. Texts are chosen so that sorting by text or by arrival would give
+    a different join."""
+    import random
+
+    blanks = ["", None, " ", "\n\t", "\u3000"]
+    rows = [
+        (
+            "long",
+            i,
+            ("text", "html", "ocr_lines", "pdf_blocks", "error")[i % 5],
+            blanks[i % 5] if i % 7 == 3 else f"{(i * 7919) % 3000:04d} turn {i}",
+        )
+        for i in range(3000)
+    ]
+    random.Random(17).shuffle(rows)
+    extracted = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, kind string, extracted_text string"
+    ).repartition(16)
+    got = conv_text(extracted).collect()
+    want = aggregate_conversation([r[1:] for r in rows])
+    assert len(got) == 1
+    assert {k: got[0][k] for k in want} == want
 
 
 def test_rollups_skip_exactly_the_turns_str_strip_calls_blank(spark):
-    """Both rollups drop a turn iff ``str.strip()`` leaves it empty — the
+    """The rollup drops a turn iff ``str.strip()`` leaves it empty — the
     oracle's blank test — for every whitespace char Python knows: an
     ocr_lines turn whose text is "\\n" must not reach full_text, while a
     turn with one visible char between such runs must."""
@@ -99,7 +126,7 @@ def test_rollups_skip_exactly_the_turns_str_strip_calls_blank(spark):
     texts = ["first", *blanks[:4], "mid\x1cdle", *blanks[4:], f"{every_space}x{every_space}"]
     rows = []
     for c in range(3):
-        conv_texts = texts[c:] + texts[:c]  # blanks land in every bucket slot
+        conv_texts = texts[c:] + texts[:c]  # blanks land at every position
         rows += [
             (f"c{c}", i, "ocr_lines" if i % 2 else "text", t)
             for i, t in enumerate(conv_texts)
@@ -107,11 +134,10 @@ def test_rollups_skip_exactly_the_turns_str_strip_calls_blank(spark):
     extracted = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, kind string, extracted_text string"
     )
-    for agg_fn in (conv_text, lambda df: conv_text_salted(df, bucket_turns=3)):
-        got = {r["conv_id"]: r.asDict() for r in agg_fn(extracted).collect()}
-        for c in range(3):
-            want = aggregate_conversation([r[1:] for r in rows if r[0] == f"c{c}"])
-            assert {k: got[f"c{c}"][k] for k in want} == want, c
+    got = {r["conv_id"]: r.asDict() for r in conv_text(extracted).collect()}
+    for c in range(3):
+        want = aggregate_conversation([r[1:] for r in rows if r[0] == f"c{c}"])
+        assert {k: got[f"c{c}"][k] for k in want} == want, c
 
 
 def test_partition_metrics_totals(spark, transcripts, golden):

@@ -30,7 +30,7 @@ def main() -> None:
 
     import ocr_spark.queries as Q
     from ocr_spark import fixtures
-    from ocr_spark.operators.aggregate import conv_text_salted
+    from ocr_spark.operators.aggregate import conv_text
     from ocr_spark.operators.extract import extract, extract_into
 
     tpath = "/tmp/ocr_spark_plans_input"
@@ -73,14 +73,18 @@ def main() -> None:
             ),
         ),
         (
-            "Production rollup: two-phase ordered concat over the snapshot",
+            "Production rollup: one-shuffle ordered concat over the snapshot",
             "The rollup reads the committed snapshot (nested columns pruned "
-            "at the scan) and has exactly 2 exchanges: (1) partial "
-            "ordered-concat keyed (conv_id, turn bucket) so no single "
-            "reducer sees a whole 10^4-turn agent trace; (2) final merge of "
-            "a few bucket rows per conversation. This is where "
-            "conversation-length skew is handled.",
-            plan(conv_text_salted(spark.read.parquet(snap))),
+            "at the scan), builds partial collect_list buffers per "
+            "conversation in each scan task, and has exactly 1 exchange: "
+            "hashpartitioning(conv_id) into the final merge, where "
+            "sort_array orders the (turn_idx, text) structs with Spark's "
+            "native struct ordering. No lambda function appears: "
+            "array_sort's comparator and transform would run interpreted "
+            "code per element. A turn-bucket salt with a second exchange "
+            "lost to this shape on uniform and 80%-skewed input at "
+            "local[4] (BENCH/SKEW.md).",
+            plan(conv_text(spark.read.parquet(snap))),
         ),
         (
             "TPC-H Q6: pushdown + pruning",
@@ -781,7 +785,7 @@ def main() -> None:
     ext = extract(t).localCheckpoint()
     write_bucketed(ext, "plans_extracted_b", 4)
     write_bucketed(
-        conv_text_salted(ext), "plans_conv_text_b", 4, sort_cols=("conv_id",)
+        conv_text(ext), "plans_conv_text_b", 4, sort_cols=("conv_id",)
     )
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
